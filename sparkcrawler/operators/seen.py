@@ -1,14 +1,15 @@
-"""URL-seen set: partitioned Bloom pre-filter + exact anti-join.
+"""URL-seen set: exact anti-join, with an optional Bloom pre-filter.
 
 The reference's URL-seen set is a Redis ``SADD download_requests`` —
 first writer wins, each URL enters the frontier once
 (reference simple_crawler/cache.py:91-97). The distributed equivalent
-is a ``seen(url_hash, ...)`` table and a left ANTI-JOIN, which shuffles
-every candidate. At 10^10-URL scale most candidates are *new*, so we
-put a sharded Bloom filter in front: candidates the filter has
-definitely never seen skip the shuffle entirely; only "maybe seen"
-suspects take the exact anti-join. No false negatives → correctness is
-unchanged (verified in tests by comparing against the plain anti-join).
+is a ``seen(url_hash, ...)`` table and a left ANTI-JOIN
+(:func:`anti_join_seen`, the crawl's default via
+:class:`ExactSeenShards`). Where most candidates are *new*, a sharded
+Bloom filter in front pays: candidates the filter has definitely never
+seen skip the join entirely; only "maybe seen" suspects take the exact
+anti-join. No false negatives → correctness is unchanged (verified in
+tests by comparing against the plain anti-join).
 
 Sharding: ``url_hash pmod num_shards`` picks a shard bitmap. In the
 sandbox the shard set is small enough to broadcast whole; at cluster
@@ -282,6 +283,13 @@ class DistributedBloom:
             self.bitmaps_df = None
 
 
+def anti_join_seen(candidates: DataFrame, seen: DataFrame) -> DataFrame:
+    """Rows of ``candidates`` whose ``url_hash`` is NOT in ``seen`` — the
+    one exact membership test: a JVM left-anti join on ``url_hash``
+    (AQE broadcasts the smaller side or shuffles both)."""
+    return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
+
+
 def dedup_against_seen(
     candidates: DataFrame,
     seen: DataFrame,
@@ -302,374 +310,60 @@ def dedup_against_seen(
     otherwise a stale bloom would re-admit recently seen URLs).
     """
     if bloom is None or bloom.n_added == 0:
-        return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
+        return anti_join_seen(candidates, seen)
     flagged = bloom.tag_maybe(candidates, spark or candidates.sparkSession)
     definite_new = flagged.where(~F.col("_maybe")).drop("_maybe")
     if seen_uncovered is not None:
-        definite_new = definite_new.join(
-            seen_uncovered.select("url_hash"), "url_hash", "left_anti"
-        )
-    suspects = (
-        flagged.where(F.col("_maybe"))
-        .drop("_maybe")
-        .join(seen.select("url_hash"), "url_hash", "left_anti")
+        definite_new = anti_join_seen(definite_new, seen_uncovered)
+    suspects = anti_join_seen(
+        flagged.where(F.col("_maybe")).drop("_maybe"), seen
     )
     return definite_new.unionByName(suspects)
 
 
 class ExactSeenShards:
-    """EXACT url-seen membership as executor-resident packed shards.
+    """EXACT url-seen filter: within-round dedup + one JVM anti-join.
 
-    The 10^10-URL frontier design point (BASELINE north rule): the seen
-    set lives as a persisted ``(shard, n, hashes)`` DataFrame — one row
-    per ``pmod(url_hash, num_shards)`` shard holding that shard's seen
-    hashes as a sorted ``int64`` byte buffer (8 B/URL; 10^10 URLs = 80 GB
-    spread across the cluster, never on the driver, never broadcast).
+    The crawl's default seen path. Each round the candidates are
+    de-duplicated on ``url_hash`` and :func:`anti_join_seen`-ed against
+    one scan of the committed frontier snapshots' ``is_new`` rows (the
+    ``read_seen`` view the crawl already writes). Nothing is persisted,
+    packed or rebuilt on resume: about 1% of candidates are new, so a
+    membership structure in front of the join would let few of them
+    skip it. The seen scan grows with the crawl; AQE picks a broadcast
+    or a shuffle join for it.
 
-    :meth:`filter_new` replaces THREE per-round operators of the
-    join-based path with one co-partitioned pass:
-
-    - the within-round candidate dedup (``dropDuplicates(url_hash)`` —
-      previously its own Exchange + two SortAggregates),
-    - the Bloom ``_maybe`` tag (previously an Arrow pass over every
-      candidate + a driver-pickled bitmap broadcast per round),
-    - the exact anti-join against the full seen table (previously a
-      broadcast whose build side re-scanned every committed frontier
-      snapshot and grew with the crawl).
-
-    Candidates shuffle ONCE on the shard key (the same exchange the old
-    dropDuplicates already paid), then each task sees its shard's
-    candidates next to that shard's packed state and answers
-    membership exactly with one ``np.searchsorted`` over the
-    already-sorted packed buffer (O(C log S)). Per-round shuffle volume
-    is O(discovered links this round) — at 1000 executors nothing
-    scales with total-seen except the resident state itself, which is
-    exactly the sharded-membership structure the north rule names (the
-    Bloom/cuckoo regimes remain for broadcast-friendly deployments).
-
-    Recent deltas not yet folded into the packed state ride the SAME
-    cogroup as raw one-hash rows (``pack=false``), so batched updates
-    never re-admit a recently seen URL and no side anti-join exists.
-    Update/persist lifecycle mirrors :class:`DistributedBloom`
-    (materialize-then-swap, ``release()`` after the final action).
+    :meth:`update_from_df` adds rows to a lazily-unioned seen set for
+    callers that hold one themselves; the crawl passes its seen view
+    to :meth:`filter_new` instead.
     """
 
-    _STATE_SCHEMA = "shard int, n long, hashes binary"
-
-    # hashes per shard before the state doubles its shard count: 1.2 GB
-    # of packed int64 per shard, comfortably under the 2 GiB Arrow
-    # binary-cell limit (~268M hashes) that a shard buffer must never
-    # reach. 64 shards * 150M ≈ 10^10 URLs → one or two in-place
-    # doublings on the way to the design point.
-    DEFAULT_RESCALE_AT = 150_000_000
-
-    # persisted folds chained before a generation snapshot (temp
-    # parquet write+read) collapses the logical plan (each fold
-    # references its predecessor twice, so the un-truncated plan
-    # doubles per fold; 2^4 copies of a flat base is harmless, 2^12
-    # is not)
-    MAX_CHAINED_FOLDS = 4
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        num_shards: int = 64,
-        rescale_at: int = DEFAULT_RESCALE_AT,
-    ):
-        self.spark = spark
-        self.num_shards = num_shards
-        self.rescale_at = rescale_at
-        self.shards_df: DataFrame | None = None
+    def __init__(self) -> None:
+        self.seen: DataFrame | None = None
         self.n_added = 0
-        self._retired: DataFrame | None = None  # lazy-fold predecessor
-        self._chained = 0  # persisted folds since the last plan truncation
-        self._gen_dir: str | None = None  # current generation-snapshot dir
 
-    # ------------------------------------------------------------- build --
-
-    def _packed_delta(self, df: DataFrame) -> DataFrame:
-        P = self.num_shards
-
-        def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-            hs = np.unique(pdf["url_hash"].to_numpy(dtype=np.int64))
-            return pd.DataFrame(
-                {
-                    "shard": [int(pdf["_shard"].iloc[0])],
-                    "n": [len(hs)],
-                    "hashes": [hs.tobytes()],
-                }
-            )
-
-        return (
-            df.select("url_hash")
-            .selectExpr(
-                "url_hash",
-                f"CAST(pmod(url_hash, {P}) AS INT) AS _shard",
-            )
-            .groupBy("_shard")
-            .applyInPandas(pack, schema=self._STATE_SCHEMA)
-        )
-
-    def update_from_df(
-        self,
-        df: DataFrame,
-        n_rows: int | None = None,
-        eager: bool = True,
-    ) -> None:
-        """Fold a delta of ``url_hash`` rows into the packed state —
-        INCREMENTALLY: shards the delta does not touch never shuffle,
-        never cross the Python boundary, and never re-pack. The state
-        side splits on a broadcast anti-/semi-join against the delta's
-        shard ids (at most ``num_shards`` ids), so per-fold work is
-        O(delta + touched-shard state), not O(total-seen); the round-6
-        shape unioned the FULL state with every delta and re-packed
-        all shards through one groupBy (80 GB shuffled per fold at the
-        10^10 design point — round-6 verdict #3).
-
-        ``eager=True`` materializes the new state with a count before
-        dropping the old (the :meth:`DistributedBloom.update_from_df`
-        discipline). ``eager=False`` skips that per-fold job entirely:
-        the new state materializes as a side effect of the NEXT action
-        that consults it (the crawl's next frontier write), and the
-        predecessor stays cached until :meth:`reap` — one fewer
-        serial job barrier per fold in the crawl loop; ``n_rows`` is
-        required then (the fold must not spend a count job)."""
-        if not eager and n_rows is None:
-            raise ValueError(
-                "update_from_df(eager=False) requires n_rows: a lazy "
-                "fold must not spend a count() job, and n_added drives "
-                "the shard-rescale bound"
-            )
-
-        def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-            bufs = [np.frombuffer(b, dtype=np.int64) for b in pdf["hashes"]]
-            hs = np.unique(np.concatenate(bufs)) if bufs else np.empty(0, np.int64)
-            return pd.DataFrame(
-                {
-                    "shard": [int(pdf["shard"].iloc[0])],
-                    "n": [len(hs)],
-                    "hashes": [hs.tobytes()],
-                }
-            )
-
-        if self._retired is not None:
-            # the lazy-fold slot is single-depth: materialize the
-            # current state before chaining another fold on top of it
-            self.shards_df.count()
-            self.reap()
-        delta = self._packed_delta(df)
-        if self.shards_df is None:
-            new_plan = delta
-        else:
-            touched = delta.select("shard")
-            untouched = self.shards_df.join(
-                F.broadcast(touched), "shard", "left_anti"
-            )
-            merged = (
-                self.shards_df.join(F.broadcast(touched), "shard", "leftsemi")
-                .unionByName(delta)
-                .groupBy("shard")
-                .applyInPandas(merge, schema=self._STATE_SCHEMA)
-            )
-            new_plan = untouched.unionByName(merged)
-        # The fold references the previous state on TWO branches
-        # (anti + semi), so naively chained plans DOUBLE in size per
-        # fold — 12 unbounded folds blew task binaries past 1 MB and
-        # overflowed generateTreeString in the crawl tests. Persist
-        # alone does not truncate the logical plan; localCheckpoint
-        # truncates it but its blocks can NEVER be safely released
-        # while any descendant might recompute (the truncated lineage
-        # is unrecoverable — releasing one produced
-        # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND crashes in descendants).
-        # So: persist-chain for up to MAX_CHAINED_FOLDS folds, then
-        # one GENERATION SNAPSHOT — the new state is written to a temp
-        # parquet dir and read back. Plans stay under 2^K copies of a
-        # flat base, every unpersisted predecessor remains recomputable
-        # (its lineage bottoms out in parquet), the previous
-        # generation's dir is deleted as soon as the new one is fully
-        # written, and the common batched-fold crawl (2-3 folds total)
-        # never snapshots at all.
-        self._last_fold_plan = new_plan  # pre-truncation plan (tests)
-        if self._chained >= self.MAX_CHAINED_FOLDS:
-            new = self._snapshot_state(new_plan)
-            # the write above materialized the new generation — every
-            # predecessor (incl. a lazily-retired one) can go now
-            if self.shards_df is not None:
-                self.shards_df.unpersist()
-            self.shards_df = new
-        else:
-            new = new_plan.persist()
-            if eager:
-                new.count()  # materialize before dropping the old state
-                if self.shards_df is not None:
-                    self.shards_df.unpersist()
-            else:
-                self._retired = self.shards_df
-            self._chained += 1
-            self.shards_df = new
-        if n_rows is not None:
-            self.n_added += int(n_rows)
-        else:
-            self.n_added += df.count()
-        if eager:
-            self._maybe_rescale()
-
-    def _snapshot_state(self, plan: DataFrame) -> DataFrame:
-        """Write ``plan`` to a fresh temp parquet generation dir and
-        read it back: truncates the logical plan like a checkpoint but
-        with files any later recomputation can always re-read; the
-        superseded generation's dir is deleted immediately (the new
-        state reads only its own files)."""
-        import shutil
-        import tempfile
-
-        out = tempfile.mkdtemp(prefix="sc_seen_gen_")
-        plan.write.mode("overwrite").parquet(out)
-        prev, self._gen_dir = self._gen_dir, out
-        if prev is not None:
-            shutil.rmtree(prev, ignore_errors=True)
-        self._chained = 0
-        return self.spark.read.schema(self._STATE_SCHEMA).parquet(out)
-
-    def reap(self) -> None:
-        """Release a lazily-retired predecessor state — call after an
-        action that materialized the successor (e.g. the frontier
-        write following a lazy fold). Also the lazy-fold path's
-        rescale point: the successor is materialized by now, so a
-        shard split is safe."""
-        if self._retired is not None:
-            self._retired.unpersist()
-            self._retired = None
-            self._maybe_rescale()
-
-    def _maybe_rescale(self) -> None:
-        """Double the shard count in place once the mean shard would
-        exceed ``rescale_at`` packed hashes (n_added is a conservative
-        pre-dedup proxy, so the split runs a little early, never
-        late). A doubling is shard-LOCAL — hash h with
-        ``pmod(h, P) = s`` has ``pmod(h, 2P) ∈ {s, s+P}``, so every
-        state row splits into two rows with NO shuffle (one
-        mapInPandas over the packed buffers, order preserved by the
-        mask). Keeps every shard's buffer under the 2 GiB Arrow
-        binary-cell limit on the way to 10^10 URLs (round-6 verdict
-        #4)."""
-        if self.shards_df is None or self._retired is not None:
-            return
-        if self.n_added <= self.rescale_at * self.num_shards:
-            return
-        P, P2 = self.num_shards, self.num_shards * 2
-
-        def split(batches):
-            for pdf in batches:
-                out: dict = {"shard": [], "n": [], "hashes": []}
-                for shard, buf in zip(pdf["shard"], pdf["hashes"]):
-                    hsv = np.frombuffer(buf, dtype=np.int64)
-                    hi = (hsv % P2) != shard  # numpy % matches SQL pmod
-                    for s2, arr in (
-                        (int(shard), hsv[~hi]),
-                        (int(shard) + P, hsv[hi]),
-                    ):
-                        if arr.size:
-                            out["shard"].append(s2)
-                            out["n"].append(arr.size)
-                            out["hashes"].append(arr.tobytes())
-                yield pd.DataFrame(out)
-
-        new = self._snapshot_state(
-            self.shards_df.mapInPandas(split, schema=self._STATE_SCHEMA)
-        )
-        self.shards_df.unpersist()
-        self.shards_df = new
-        self.num_shards = P2
-
-    # ------------------------------------------------------------- query --
+    def update_from_df(self, df: DataFrame, n_rows: int | None = None) -> None:
+        """Add ``df``'s ``url_hash`` rows to the seen set (a lazy union,
+        no job); ``n_rows``, when the caller knows it, saves a count."""
+        hashes = df.select("url_hash")
+        self.seen = hashes if self.seen is None else self.seen.unionByName(hashes)
+        self.n_added += int(n_rows) if n_rows is not None else df.count()
 
     def filter_new(
-        self,
-        candidates: DataFrame,
-        uncovered: DataFrame | None = None,
+        self, candidates: DataFrame, seen: DataFrame | None = None
     ) -> DataFrame:
-        """Within-round dedup + exact seen-filter in ONE cogroup.
+        """Candidates, one row per ``url_hash``, that are in neither the
+        held seen set nor ``seen``. Rows sharing a hash within a round
+        are identical up to that hash (same url → same derived cols), so
+        keeping any one of them is exact."""
+        new = candidates.dropDuplicates(["url_hash"])
+        for held in (self.seen, seen):
+            if held is not None:
+                new = anti_join_seen(new, held)
+        return new
 
-        ``candidates`` must carry ``url_hash``; rows sharing a hash
-        within the round are identical up to that hash (same url →
-        same derived cols), so keeping the first after a stable sort
-        is exact. ``uncovered`` = seen rows written after the last
-        :meth:`update_from_df` (batched-update window); their hashes
-        join the state side as raw 8-byte rows — no extra join.
-        """
-        P = self.num_shards
-        cols = candidates.columns
-        out_schema = candidates.schema
-
-        state = self.shards_df
-        if uncovered is not None:
-            # raw delta rows: the hash rides in `n`, NULL `hashes` is the
-            # marker (avoids an int64→binary endianness conversion in SQL)
-            raw = uncovered.selectExpr(
-                f"CAST(pmod(url_hash, {P}) AS INT) AS shard",
-                "url_hash AS n",
-                "CAST(NULL AS BINARY) AS hashes",
-            )
-            state = raw if state is None else state.unionByName(raw)
-        if state is None:
-            state = self.spark.createDataFrame([], self._STATE_SCHEMA)
-
-        def check(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            left = left.drop(columns=["_shard"])
-            if left.empty:
-                return left
-            # within-round dedup: rows with equal url_hash are identical
-            left = left.sort_values("url_hash", kind="mergesort")
-            left = left[~left["url_hash"].duplicated()]
-            if right.empty:
-                return left
-            packed = right["hashes"].notna()
-            hs = left["url_hash"].to_numpy(dtype=np.int64)
-            seen_mask = np.zeros(len(hs), dtype=bool)
-            pbufs = right.loc[packed, "hashes"].tolist()
-            if pbufs:
-                # the packed buffer is np.unique output — already
-                # sorted — so membership is O(C log S) searchsorted
-                # over the candidates, not a re-sort of the full shard
-                # every round (np.isin sorted the S-sized state each
-                # call — round-6 verdict #4)
-                buf = (
-                    np.frombuffer(pbufs[0], dtype=np.int64)
-                    if len(pbufs) == 1
-                    else np.unique(
-                        np.concatenate(
-                            [np.frombuffer(b, dtype=np.int64) for b in pbufs]
-                        )
-                    )
-                )
-                if buf.size:
-                    idx = np.searchsorted(buf, hs)
-                    inb = np.minimum(idx, buf.size - 1)
-                    seen_mask |= buf[inb] == hs
-            raw_hs = right.loc[~packed, "n"].to_numpy(dtype=np.int64)
-            if raw_hs.size:
-                # raw rows = the small recent not-yet-folded delta
-                seen_mask |= np.isin(hs, raw_hs)
-            return left[~seen_mask]
-
-        return (
-            candidates.selectExpr(
-                "*", f"CAST(pmod(url_hash, {P}) AS INT) AS _shard"
-            )
-            .groupBy("_shard")
-            .cogroup(state.groupBy("shard"))
-            .applyInPandas(check, schema=out_schema)
-            .select(*cols)
-        )
+    def reap(self) -> None:
+        """No-op: the filter holds no cached state to release."""
 
     def release(self) -> None:
-        import shutil
-
-        self.reap()
-        if self.shards_df is not None:
-            self.shards_df.unpersist()
-            self.shards_df = None
-        if self._gen_dir is not None:
-            shutil.rmtree(self._gen_dir, ignore_errors=True)
-            self._gen_dir = None
+        self.seen = None

@@ -9,16 +9,19 @@ SURVEY.md §7.3). A killed run resumes from the max committed round and
 reproduces the remaining rounds bit-for-bit, because every round's input
 is exactly the previously committed parquet.
 
-Job budget (scaling design): exactly TWO Spark jobs per round — the
-crawl_log write (the one extract-UDF execution) and the next-frontier
-write (discovery + seen dedup). Everything else the driver derives from
-the just-written parquet files (row counts, per-file lineage counters,
-Bloom delta hashes, run events): a Spark job costs seconds of
+Job budget: a round submits TWO actions — the crawl_log write (the one
+extract-UDF execution) and the next-frontier write (discovery + seen
+dedup). Each runs as several Spark jobs (broadcast builds and AQE query
+stages): ``plans.crawl.jobs_per_round`` in ``crawlbench`` measures
+about 15 on ``bulk_crawl`` and 21–22 on ``polite_crawl``, whose corpus
+carries a ``status_code`` column. Everything else the driver derives
+from the just-written parquet files (row counts, per-file lineage
+counters, Bloom delta hashes, run events): a Spark job costs seconds of
 scheduling in local mode and driver round-trips on a cluster, while a
 driver-side columnar read of a round's output is milliseconds. The
 URL-seen table is not written at all — it is a VIEW over the committed
-frontier snapshots (rows tagged ``is_new``), so the previous third
-write job is free.
+frontier snapshots (rows tagged ``is_new``), which the seen filter's
+anti-join scans each round.
 
 Driver-memory bounds (the 10^10-frontier design point):
 
@@ -86,35 +89,27 @@ class CrawlConfig:
     # collected and pushed into the corpus scan as an IN filter →
     # bucket pruning + row-group min/max skipping on url-sorted buckets
     fetch_pushdown_limit: int = 4096
-    # skip the Bloom update for small new-URL batches: the filter only
-    # pays off when candidate volume is large, and a stale (smaller)
-    # bloom is still correct — unseen suspects just take the exact
-    # anti-join. Keeps tail rounds from paying a fixed build cost.
+    # skip the Bloom update for small new-URL batches (Bloom regimes
+    # only): the filter only pays off when candidate volume is large,
+    # and a stale (smaller) bloom is still correct — unseen suspects
+    # just take the exact anti-join. Keeps tail rounds from paying a
+    # fixed build cost.
     bloom_update_min_batch: int = 1
     # new-URL batch size at or below which the Bloom delta is folded in
     # driver-side (numpy over the written frontier's url_hash column —
     # no Spark job); above it, the distributed applyInPandas build runs
     # AND the driver never reads the hash column at all.
     bloom_driver_update_limit: int = 5_000_000
-    # "broadcast": driver-held shard bitmaps shipped to executors
-    # (sandbox-scale). "distributed": bitmaps live as a persisted
-    # DataFrame consulted shard-locally via cogroup — the 10^10-URL
-    # path where the filter is too big for a driver or broadcast.
+    # The seen filter is one exact JVM anti-join per round against a
+    # scan of the committed seen view (operators/seen.py
+    # ExactSeenShards). A Bloom prefilter in front of that join is built
+    # only when use_bloom is on AND bloom_mode="distributed" or
+    # hot_hosts>0. "distributed": bitmaps live as a persisted DataFrame
+    # consulted shard-locally via cogroup (the 10^10-URL path where a
+    # filter is too big for a driver or broadcast). "broadcast":
+    # driver-held shard bitmaps shipped to executors, under the
+    # hot-host filters below.
     bloom_mode: str = "broadcast"
-    # "cogroup" (default): the seen set is an EXACT executor-resident
-    # sharded structure (operators/seen.py ExactSeenShards); candidate
-    # dedup + seen-membership run in ONE hash-partitioned cogroup per
-    # round — no growing broadcast, no per-round rescan of the seen
-    # table, no separate dropDuplicates exchange. "join": the
-    # Bloom-prefiltered anti-join path. Explicitly configuring the
-    # join-path features below (use_bloom=False, bloom_mode=
-    # "distributed", hot_hosts>0) selects "join" automatically so those
-    # regimes stay reachable exactly as configured.
-    seen_backend: str = "cogroup"
-    # shard count for the exact seen state (partition key of the seen
-    # structure at cluster scale; 10^10 URLs / 4096 shards ≈ 20 MB of
-    # packed hashes per shard)
-    seen_shards: int = 64
     # >0: the top-K hosts by cumulative new-URL volume get per-host
     # cuckoo filters (operators/cuckoo.py) consulted INSTEAD of the
     # shared Bloom — near-exact membership for exactly the hosts that
@@ -575,30 +570,16 @@ def crawl(
             cfg.max_pages, "resume_run",
         )
 
-    # Seen-set backend. "cogroup" = exact executor-resident shards; any
-    # explicit join-path feature flag selects the anti-join backend so
-    # its regimes (plain anti-join, distributed bloom, hot-host cuckoo)
-    # run exactly as configured.
-    backend = cfg.seen_backend
-    if not cfg.use_bloom or cfg.bloom_mode == "distributed" or cfg.hot_hosts > 0:
-        backend = "join"
-    exact = None
-    exact_covered = next_round  # exact state holds rows with round <= this
-    exact_pending_new = 0       # is_new rows written since the last fold
-    if backend == "cogroup":
-        exact = ExactSeenShards(spark, cfg.seen_shards)
-        dirs = _committed_dirs(fs, out_dir, "frontier", next_round)
-        if dirs:
-            exact.update_from_df(
-                _read_frontier(spark, *dirs).where(F.col("is_new"))
-            )
-
-    # Bloom filter over everything ever seen. The seen set is a view
-    # over the committed frontier snapshots (is_new rows), so the
-    # rebuild scans those. Filters only skip definite-misses.
+    # Bloom filter over everything ever seen — only in the regimes that
+    # need one (see CrawlConfig.bloom_mode); otherwise the exact
+    # anti-join alone filters the seen set. The seen set is a view over
+    # the committed frontier snapshots (is_new rows), so the rebuild
+    # scans those. Filters only skip definite-misses.
     bloom = None
     bloom_covered = next_round  # bloom holds seen rows with round_added <= this
-    use_join_bloom = backend == "join" and cfg.use_bloom
+    use_join_bloom = cfg.use_bloom and (
+        cfg.bloom_mode == "distributed" or cfg.hot_hosts > 0
+    )
     if use_join_bloom and cfg.bloom_mode == "distributed":
         bloom = DistributedBloom(
             spark, cfg.bloom_shards, cfg.bloom_bits_per_shard
@@ -832,30 +813,21 @@ def crawl(
         # re-runs; the `is_new` tag makes the written frontier double as
         # the seen-set delta (no separate seen write — the seen table IS
         # the union of is_new rows across committed frontier snapshots).
-        if exact is not None:
-            # exact-cogroup backend: within-round dedup + seen filter in
-            # ONE co-partitioned pass; snapshots written after the last
-            # state fold ride the same cogroup as raw delta rows
-            discovered = discovered_links(plan.extracted, dedup=False)
-            unc_dirs = [
-                fs.join(out_dir, "frontier", f"r{i}")
-                for i in range(exact_covered + 1, r + 1)
-                if fs.exists(fs.join(out_dir, "frontier", f"r{i}"))
-            ]
-            uncovered = (
-                _read_frontier(spark, *unc_dirs).where(F.col("is_new"))
-                if unc_dirs
-                else None
+        seen_all = _read_frontier(
+            spark, *_committed_dirs(fs, out_dir, "frontier", r)
+        ).where(F.col("is_new"))
+        if bloom is None:
+            # within-round dedup + one exact anti-join against the seen
+            # view — rebuilt from the committed snapshots every round,
+            # so a resumed crawl needs no seen-state rebuild
+            new_links = ExactSeenShards().filter_new(
+                discovered_links(plan.extracted, dedup=False), seen_all
             )
-            new_links = exact.filter_new(discovered, uncovered)
         else:
-            seen_all = _read_frontier(
-                spark, *_committed_dirs(fs, out_dir, "frontier", r)
-            ).where(F.col("is_new"))
             discovered = discovered_links(plan.extracted)
             seen_uncovered = (
                 seen_all.where(F.col("round") > F.lit(bloom_covered))
-                if bloom is not None and bloom_covered < r
+                if bloom_covered < r
                 else None
             )
             if hot_dist is not None and hot_dist.hosts:
@@ -911,31 +883,6 @@ def crawl(
         if cfg.lineage:
             _write_lineage_rows(fs, out_dir, run_id, r, m)
 
-        if exact is not None:
-            # the previous round's lazy fold materialized during this
-            # round's frontier write — its predecessor can go now
-            exact.reap()
-            exact_pending_new += n_new
-            if n_new >= cfg.bloom_update_min_batch:
-                # fold every not-yet-covered snapshot into the exact
-                # shards (same batching discipline as the bloom below;
-                # until the fold, those rounds ride filter_new's
-                # uncovered side). Lazy: no per-fold count job — the
-                # merged state materializes inside the NEXT round's
-                # frontier write.
-                fold_dirs = [
-                    fs.join(out_dir, "frontier", f"r{i}")
-                    for i in range(exact_covered + 1, r + 2)
-                    if fs.exists(fs.join(out_dir, "frontier", f"r{i}"))
-                ]
-                if fold_dirs:
-                    exact.update_from_df(
-                        _read_frontier(spark, *fold_dirs).where(F.col("is_new")),
-                        n_rows=exact_pending_new,
-                        eager=False,
-                    )
-                    exact_covered = r + 1
-                    exact_pending_new = 0
         if bloom is not None and n_new >= cfg.bloom_update_min_batch:
             # fold in EVERY round not yet covered — this round's delta
             # plus any round previously skipped by the batching
@@ -1089,8 +1036,6 @@ def crawl(
         hot_dist.release()
     if bloom is not None:
         bloom.release()
-    if exact is not None:
-        exact.release()
     _append_run_event(
         fs, out_dir, run_id, seed_urls[0] if seed_urls else None,
         cfg.max_pages, "complete_run",

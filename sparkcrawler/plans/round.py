@@ -338,9 +338,8 @@ def discovered_links(parsed: DataFrame, dedup: bool = True) -> DataFrame:
     filtered to PARSED rows. Candidate identity (url_hash, host) is
     computed JVM-side (xxhash64 + parse_url); within-round dedup keeps
     one row per url_hash (depth is constant within a round).
-    ``dedup=False`` skips the dropDuplicates exchange for callers that
-    dedup downstream inside an exchange they already pay for (the
-    exact-cogroup seen backend).
+    ``dedup=False`` leaves the within-round dedup to the caller
+    (``ExactSeenShards.filter_new`` does its own).
     """
     if "crawl_status" in parsed.columns:
         parsed = parsed.where(F.col("crawl_status") == schemas.PARSED)

@@ -209,9 +209,13 @@ def test_politeness_budget_enforced(spark, corpus):
 
 def test_bloom_delta_batching_equivalent(spark, corpus, full_run):
     """With bloom updates skipped entirely (min_batch=inf), the
-    uncovered-delta anti-join must keep outputs identical."""
+    uncovered-delta anti-join must keep outputs identical. The Bloom
+    prefilter runs only in its own regimes, so the test selects one."""
     seed, _, log_full, seen_full, _ = full_run
-    cfg = CrawlConfig(max_pages=10_000, bloom_update_min_batch=10**9)
+    cfg = CrawlConfig(
+        max_pages=10_000, bloom_update_min_batch=10**9,
+        bloom_mode="distributed",
+    )
     _, log2, seen2, _ = _crawl(spark, corpus, seed, cfg)
     assert _log_key(log2) == _log_key(log_full)
     assert seen2 == seen_full
@@ -237,6 +241,34 @@ def test_resume_bit_identical(spark, corpus, full_run):
         shutil.rmtree(out, ignore_errors=True)
 
 
+def test_resume_every_round(spark, corpus, full_run):
+    """One round per crawl() call on the same out_dir until the crawl
+    finishes: every round re-reads the seen set after a resume, and the
+    result equals the uninterrupted run and the oracle."""
+    seed, _, log_full, seen_full, _ = full_run
+    _, _, _, pages, rob = corpus
+    out = tempfile.mkdtemp(prefix="sc_resume_each_")
+    try:
+        calls = 0
+        while True:
+            calls += 1
+            res = crawl(spark, pages, rob, [seed], out,
+                        config=CrawlConfig(max_pages=10_000, max_rounds=calls))
+            if res.rounds == 0:
+                break
+            assert res.rounds == 1
+        log2 = read_crawl_log(spark, out).collect()
+        seen2 = {r["url"] for r in read_seen(spark, out).collect()}
+        assert calls > 3
+        assert _log_key(log2) == _log_key(log_full)
+        assert seen2 == seen_full
+        ores = _oracle(corpus, seed, FULL_CFG)
+        assert _log_key(log2) == _log_key(ores.log)
+        assert seen2 == ores.seen
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
 def test_lineage_totals_consistent(spark, full_run):
     seed, res, log, _, out = full_run
     lin = read_lineage(spark, out)
@@ -257,7 +289,9 @@ def test_bloom_partial_batching_equivalent(spark, corpus, full_run):
     EVERY uncovered round (a covered-but-unfolded round would let seen
     URLs re-enter the frontier as definite-new)."""
     seed, _, log_full, seen_full, _ = full_run
-    cfg = CrawlConfig(max_pages=10_000, bloom_update_min_batch=30)
+    cfg = CrawlConfig(
+        max_pages=10_000, bloom_update_min_batch=30, bloom_mode="distributed"
+    )
     _, log2, seen2, _ = _crawl(spark, corpus, seed, cfg)
     assert _log_key(log2) == _log_key(log_full)
     assert seen2 == seen_full

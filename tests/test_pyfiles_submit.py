@@ -9,10 +9,11 @@ driver AND inside executor python workers (where the crawl's cloudpickled
 pandas-UDF bodies re-import ``sparkcrawler.functions.*``), then run a
 real synth crawl end-to-end.
 
-Note: this sandbox also has the repo on a site-packages ``.pth``;
 ``--py-files`` entries land on ``PYTHONPATH`` ahead of site-packages, so
 the zip-path assertion shows the shipped artifact wins even when a
 stale checkout is installed — the precedence a real cluster relies on.
+The package is not installed here: the ``crawl_job.py`` entry-point
+check puts the repo root on its subprocess's ``PYTHONPATH`` instead.
 """
 
 from __future__ import annotations
@@ -115,10 +116,11 @@ def test_spark_submit_pyfiles_self_contained(tmp_path):
 
 
 def test_crawl_job_entry_parses_args():
+    env = dict(os.environ, PYTHONPATH=REPO)
     res = subprocess.run(
         [sys.executable, os.path.join(REPO, "scripts", "crawl_job.py"),
          "--help"],
-        capture_output=True, text=True, timeout=120,
+        capture_output=True, text=True, timeout=120, env=env,
     )
     assert res.returncode == 0
     assert "--max-pages" in res.stdout

@@ -1,4 +1,4 @@
-"""URL-seen dedup operator: Bloom pre-filter ≡ plain anti-join."""
+"""URL-seen dedup: the exact anti-join; Bloom pre-filter ≡ plain anti-join."""
 
 from __future__ import annotations
 
@@ -135,7 +135,7 @@ def test_distributed_bloom_no_false_negatives_many_shards(spark):
     assert misses == []  # every seen URL must be maybe-seen
 
 
-# ------------------------------------------------- exact-cogroup backend --
+# --------------------------------------------------- exact anti-join --
 
 
 def _cand_df(spark, urls):
@@ -158,7 +158,7 @@ def test_exact_shards_equals_plain_antijoin_plus_dedup(spark):
     cands = _cand_df(spark, cand_urls)
 
     persisted_before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    ex = ExactSeenShards(spark, num_shards=7)
+    ex = ExactSeenShards()
     ex.update_from_df(seen)
     got = sorted(r["url"] for r in ex.filter_new(cands).collect())
 
@@ -177,21 +177,21 @@ def test_exact_shards_equals_plain_antijoin_plus_dedup(spark):
     )
 
 
-def test_exact_shards_uncovered_delta_rides_cogroup(spark):
-    """URLs written after the last state fold must still be filtered
-    (the batched-update window) — they join the cogroup as raw rows."""
+def test_exact_shards_filters_held_and_passed_seen(spark):
+    """A seen view passed to filter_new (the crawl's committed
+    snapshots) filters together with the rows held via update_from_df."""
     from sparkcrawler.operators.seen import ExactSeenShards
 
     packed = [f"https://h.example/a/{i}" for i in range(50)]
     recent = [f"https://h.example/b/{i}" for i in range(50)]
     fresh = [f"https://h.example/c/{i}" for i in range(50)]
 
-    ex = ExactSeenShards(spark, num_shards=5)
+    ex = ExactSeenShards()
     ex.update_from_df(_df(spark, packed))
     cands = _cand_df(spark, packed + recent + fresh)
     got = sorted(
         r["url"]
-        for r in ex.filter_new(cands, uncovered=_df(spark, recent)).collect()
+        for r in ex.filter_new(cands, seen=_df(spark, recent)).collect()
     )
     assert got == sorted(fresh)
     ex.release()
@@ -201,7 +201,7 @@ def test_exact_shards_empty_state_dedups_only(spark):
     from sparkcrawler.operators.seen import ExactSeenShards
 
     urls = [f"https://h.example/p/{i}" for i in range(40)] * 3
-    ex = ExactSeenShards(spark, num_shards=4)
+    ex = ExactSeenShards()
     got = sorted(r["url"] for r in ex.filter_new(_cand_df(spark, urls)).collect())
     assert got == sorted(set(urls))
 
@@ -209,7 +209,7 @@ def test_exact_shards_empty_state_dedups_only(spark):
 def test_exact_shards_incremental_update_merges(spark):
     from sparkcrawler.operators.seen import ExactSeenShards
 
-    ex = ExactSeenShards(spark, num_shards=3)
+    ex = ExactSeenShards()
     ex.update_from_df(_df(spark, [f"https://h.example/x/{i}" for i in range(30)]))
     ex.update_from_df(_df(spark, [f"https://h.example/y/{i}" for i in range(30)]))
     assert ex.n_added == 60
@@ -222,91 +222,3 @@ def test_exact_shards_incremental_update_merges(spark):
     got = sorted(r["url"] for r in ex.filter_new(cands).collect())
     assert got == sorted(f"https://h.example/z/{i}" for i in range(10))
     ex.release()
-
-
-def test_exact_shards_fold_skips_untouched_shards(spark):
-    """The incremental fold must route ONLY delta-touched shards
-    through the re-pack: the state plan splits on a broadcast
-    anti/semi join, and a fold whose delta misses a shard leaves that
-    shard's packed row byte-identical (same object path, no re-pack
-    churn)."""
-    from pyspark.sql import functions as F
-
-    from sparkcrawler.operators.seen import ExactSeenShards
-
-    ex = ExactSeenShards(spark, num_shards=4)
-    ex.update_from_df(_df(spark, [f"https://h.example/x/{i}" for i in range(80)]))
-    before = {
-        r["shard"]: bytes(r["hashes"]) for r in ex.shards_df.collect()
-    }
-    # delta confined to one shard
-    one = _df(spark, [f"https://h.example/x/{i}" for i in range(80, 200)])
-    target = one.selectExpr("CAST(pmod(url_hash, 4) AS INT) AS s")
-    shards_hit = {r["s"] for r in target.distinct().collect()}
-    delta = one.where(F.expr("pmod(url_hash, 4)") == min(shards_hit))
-    ex.update_from_df(delta)
-    # the fold plan (pre-lineage-truncation) splits the state on a
-    # broadcast anti/semi join; the COMMITTED state is a constant-size
-    # LogicalRDD so chained folds cannot grow the plan exponentially
-    fold = ex._last_fold_plan
-    plan = fold._sc._jvm.PythonSQLUtils.explainString(
-        fold._jdf.queryExecution(), "simple")
-    assert "LeftAnti" in plan and "LeftSemi" in plan, plan[:2000]
-
-    after = {r["shard"]: bytes(r["hashes"]) for r in ex.shards_df.collect()}
-    for s, buf in before.items():
-        if s != min(shards_hit):
-            assert after[s] == buf  # untouched shard byte-identical
-    assert len(after[min(shards_hit)]) > len(before.get(min(shards_hit), b""))
-    ex.release()
-
-
-def test_exact_shards_lazy_fold_requires_n_rows(spark):
-    import pytest as _pytest
-
-    from sparkcrawler.operators.seen import ExactSeenShards
-
-    ex = ExactSeenShards(spark, num_shards=2)
-    with _pytest.raises(ValueError, match="n_rows"):
-        ex.update_from_df(_df(spark, ["https://h.example/a"]), eager=False)
-
-
-def test_exact_shards_rescale_doubles_shards_and_stays_exact(spark):
-    from sparkcrawler.operators.seen import ExactSeenShards
-
-    seen_urls = [f"https://h.example/p/{i}" for i in range(200)]
-    ex = ExactSeenShards(spark, num_shards=4, rescale_at=20)
-    ex.update_from_df(_df(spark, seen_urls[:100]))
-    ex.update_from_df(_df(spark, seen_urls[100:]))
-    assert ex.num_shards > 4  # 200 added > 20/shard * 4 shards
-    assert sum(r["n"] for r in ex.shards_df.collect()) == 200
-    cands = _cand_df(spark, seen_urls + ["https://h.example/new/1"])
-    got = [r["url"] for r in ex.filter_new(cands).collect()]
-    assert got == ["https://h.example/new/1"]
-    ex.release()
-
-
-def test_exact_shards_many_folds_keep_plan_flat(spark):
-    """Regression: the incremental fold references the previous state
-    on two join branches, so without per-fold lineage truncation the
-    state plan doubled per fold (12 folds ~ 4096 subtree copies blew
-    task binaries past 1 MB and generateTreeString stacks in the crawl
-    tests). The committed state must stay a constant-size LogicalRDD
-    and membership must stay exact after many folds."""
-    from sparkcrawler.operators.seen import ExactSeenShards
-
-    ex = ExactSeenShards(spark, num_shards=4)
-    all_urls = []
-    for k in range(12):
-        batch = [f"https://h.example/f{k}/{i}" for i in range(10)]
-        all_urls += batch
-        ex.update_from_df(_df(spark, batch))
-    plan = ex.shards_df._jdf.queryExecution().analyzed().toString()
-    # 12 unbounded folds would be ~2^12 subtree copies (hundreds of kB
-    # of plan); the periodic truncation caps chains at MAX_CHAINED_FOLDS
-    assert len(plan) < 60_000, f"state plan grew to {len(plan)} chars"
-    cands = _cand_df(spark, all_urls + ["https://h.example/new/1"])
-    got = [r["url"] for r in ex.filter_new(cands).collect()]
-    assert got == ["https://h.example/new/1"]
-    ex.release()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0 or True
