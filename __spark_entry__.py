@@ -21,7 +21,7 @@ from sparkcrawler import analytics  # noqa: E402
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: crawl the synthetic web corpus (robots gate, politeness
-    window, Arrow-UDF extraction, Bloom+anti-join dedup, snapshot
+    window, Arrow-UDF extraction, anti-join seen dedup, snapshot
     commits), then summarize the crawl log per depth, tagged with the
     sf0.001 document count to tie in the driver testdata."""
     import tempfile

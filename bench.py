@@ -5,7 +5,7 @@ Two workloads, one JSON line on stdout:
 1. **Crawl throughput** (the BASELINE.json metric: URLs crawled+deduped
    per second): exhaustive BFS crawl of a deterministic synthetic web
    corpus (wide fan-out → few, large rounds; mega-host skew + robots +
-   politeness window + Bloom-dedup all active).
+   politeness window + seen anti-join all active).
 2. **Headline queries** at ``$SPARK_GRAFT_SF_DIR`` (default
    /root/testdata/sf0.1): per-query wall seconds.
 
@@ -118,7 +118,6 @@ def _bench_cfg(n_pages: int, **overrides):
         salt_buckets=32,
         max_rounds=100,
         corpus_buckets=N_BUCKETS,
-        bloom_update_min_batch=20_000,
         # measured: broadcasting the frontier beats the bucketed SMJ
         # at every frontier size on this box (302s vs 175s at 4
         # cores) — the bucketed+sorted table still pays off via
@@ -166,15 +165,12 @@ def bench_crawl(spark, n_pages: int, fanout: int, paras: int,
 
 
 def bench_crawl_variants(spark, n_pages: int, fanout: int, paras: int) -> dict:
-    """The two scale-feature configurations the default crawl never
+    """The scale-feature configuration the default crawl never
     exercises, benched under load:
 
     - ``crawl_status``: WARC-status corpus (~4.4% deterministic 429/404
       rows) with retries=2 — adaptive backoff, 429 re-enqueue, and
       terminal-HTTP-error paths all active at bench scale.
-    - ``crawl_hotdist``: distributed Bloom + executor-side per-host
-      cuckoo filters (hot_hosts=8) — the 10^10-design-point dedup
-      regime; round_stats carry hot_active/hot_mode per round.
     """
     out = {}
     st = bench_crawl(
@@ -185,18 +181,6 @@ def bench_crawl_variants(spark, n_pages: int, fanout: int, paras: int) -> dict:
         for k in ("crawl_sec", "crawl_visited", "crawl_rounds",
                   "urls_per_sec", "steady_urls_per_sec", "round_stats")
     }
-    hd = bench_crawl(
-        spark, n_pages, fanout, paras,
-        bloom_mode="distributed", hot_hosts=8, hot_host_min_new=256,
-    )
-    out["crawl_hotdist"] = {
-        k: hd[k]
-        for k in ("crawl_sec", "crawl_visited", "crawl_rounds",
-                  "urls_per_sec", "steady_urls_per_sec", "round_stats")
-    }
-    out["crawl_hotdist"]["hot_active_final"] = max(
-        (s.get("hot_active", 0) for s in hd["round_stats"]), default=0
-    )
     return out
 
 
@@ -293,8 +277,8 @@ def _prewarm(spark) -> float:
         .withColumn("g", (F.col("id") % 8).cast("int"))
     )
     df.groupBy("g").agg(F.sum("w")).collect()
-    # ranking window + grouped applyInPandas: the politeness trim and
-    # the Bloom cogroup paths JIT these plan shapes in round 0 otherwise
+    # ranking window + grouped applyInPandas: warm these plan shapes
+    # (the politeness trim's window) before round 0
     df.selectExpr(
         "g", "row_number() OVER (PARTITION BY g ORDER BY w) AS rk"
     ).where("rk <= 3").collect()
@@ -371,10 +355,9 @@ def main() -> None:
         result["queries"]["crawl"] = crawl_stats["crawl_sec"]
         total += crawl_stats["crawl_sec"]
         if not os.environ.get("SPARK_BENCH_SKIP_VARIANTS"):
-            # scale-feature configurations (status-error corpus with
-            # backoff active; distributed bloom + hot-host cuckoo
-            # shards) — recorded alongside, NOT in the headline total,
-            # so `value` stays comparable across rounds
+            # scale-feature configuration (status-error corpus with
+            # backoff active) — recorded alongside, NOT in the
+            # headline total, so `value` stays comparable across rounds
             result["crawl_variants"] = bench_crawl_variants(
                 spark, n_pages, fanout, paras
             )

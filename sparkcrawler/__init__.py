@@ -5,8 +5,8 @@ A from-scratch reimplementation of the capabilities of
 as a batched DataFrame pipeline:
 
 - the Redis frontier list becomes a per-round ``frontier`` table,
-- the ``download_requests`` URL-seen set becomes a ``seen`` table with a
-  partitioned Bloom pre-filter + exact left anti-join,
+- the ``download_requests`` URL-seen set becomes a ``seen`` view over
+  the committed frontier snapshots, probed by one exact left anti-join,
 - robots.txt politeness becomes a broadcast dimension join,
 - link/text extraction run as Arrow-batched pandas UDFs over the
   ``html: binary`` column of a Common-Crawl-style ``pages`` corpus,

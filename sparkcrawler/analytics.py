@@ -3957,7 +3957,7 @@ def docs_dedup_incremental(spark, sf_dir):
     the existing corpus — the continuous-crawl form of exact dedup,
     where only the day's batch is reprocessed, never the 100-TB
     corpus (which contributes only its distinct hashes; in the crawl
-    engine proper the same contract runs behind the Bloom pre-filter,
+    engine proper the same contract is the seen anti-join,
     operators/seen.py). Corpus = even doc_ids; arrivals = odd doc_ids
     plus deterministic re-tagged copies of corpus texts (doc_id%10==0)
     and within-batch duplicates (doc_id%20==1) so both suppression

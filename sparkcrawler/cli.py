@@ -35,12 +35,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--no-sitemap", action="store_true",
                    help="skip sitemap priming (reference primes by default)")
     p.add_argument("--run-id", default="cli_run")
-    p.add_argument("--bloom-mode", choices=["broadcast", "distributed"],
-                   default="broadcast",
-                   help="seen-set Bloom regime (distributed = executor-"
-                        "side shard bitmaps, the 10^10-URL path)")
-    p.add_argument("--hot-hosts", type=int, default=0,
-                   help="top-K hosts get per-host cuckoo filters")
     return p
 
 
@@ -68,8 +62,6 @@ def main(argv=None) -> int:
         max_pages=args.max_pages,
         retries=args.retries,
         round_seconds=args.round_seconds,
-        bloom_mode=args.bloom_mode,
-        hot_hosts=args.hot_hosts,
     )
     if args.no_sitemap:
         res = crawl(spark, pages, robots, [args.url], args.out,

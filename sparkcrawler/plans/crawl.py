@@ -16,7 +16,7 @@ stages): ``plans.crawl.jobs_per_round`` in ``crawlbench`` measures
 about 15 on ``bulk_crawl`` and 21–22 on ``polite_crawl``, whose corpus
 carries a ``status_code`` column. Everything else the driver derives
 from the just-written parquet files (row counts, per-file lineage
-counters, Bloom delta hashes, run events): a Spark job costs seconds of
+counters, run events): a Spark job costs seconds of
 scheduling in local mode and driver round-trips on a cluster, while a
 driver-side columnar read of a round's output is milliseconds. The
 URL-seen table is not written at all — it is a VIEW over the committed
@@ -30,11 +30,8 @@ Driver-memory bounds (the 10^10-frontier design point):
   visited count and the 429 backoff multipliers from the tiny markers
   alone — no committed crawl_log file is ever re-read.
 - per-round metrics read the ``is_new`` flag column only (1 bit/row);
-  the 8-byte ``url_hash`` column is read lazily, and only when the
-  round's new-URL count is small enough that the Bloom delta will be
-  folded driver-side (``bloom_driver_update_limit``). A huge round
-  never materializes hashes on the driver — the distributed Bloom
-  build reads them executor-side.
+  the driver never reads the ``url_hash`` column — the seen filter's
+  anti-join reads it executor-side.
 - all driver-side state I/O goes through :mod:`sparkcrawler.fs`
   (fsspec-shaped), so the loop is object-store-ready; Spark jobs speak
   to object stores natively.
@@ -49,7 +46,6 @@ from __future__ import annotations
 
 import datetime as dt
 import time
-import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -57,12 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from sparkcrawler import schemas
 from sparkcrawler.fs import DEFAULT_FS, LocalFS
 from sparkcrawler.functions.urlnorm import canonicalize, host_of
-from sparkcrawler.operators.seen import (
-    DistributedBloom,
-    ExactSeenShards,
-    PartitionedBloom,
-    dedup_against_seen,
-)
+from sparkcrawler.operators.seen import ExactSeenShards
 from sparkcrawler.oracle import url_hash64
 from sparkcrawler.plans.round import FRONTIER_COLS, build_round, discovered_links
 
@@ -74,9 +65,6 @@ class CrawlConfig:
     round_seconds: float = 60.0        # politeness budget window per round
     salt_buckets: int = 16
     max_rounds: int = 1000
-    use_bloom: bool = True
-    bloom_shards: int = 16
-    bloom_bits_per_shard: int = 1 << 22
     lineage: bool = True
     # >0 and pages carries an url_bucket partition column → per-round
     # partition pruning of the fetch scan (Iceberg-bucket semantics)
@@ -89,40 +77,6 @@ class CrawlConfig:
     # collected and pushed into the corpus scan as an IN filter →
     # bucket pruning + row-group min/max skipping on url-sorted buckets
     fetch_pushdown_limit: int = 4096
-    # skip the Bloom update for small new-URL batches (Bloom regimes
-    # only): the filter only pays off when candidate volume is large,
-    # and a stale (smaller) bloom is still correct — unseen suspects
-    # just take the exact anti-join. Keeps tail rounds from paying a
-    # fixed build cost.
-    bloom_update_min_batch: int = 1
-    # new-URL batch size at or below which the Bloom delta is folded in
-    # driver-side (numpy over the written frontier's url_hash column —
-    # no Spark job); above it, the distributed applyInPandas build runs
-    # AND the driver never reads the hash column at all.
-    bloom_driver_update_limit: int = 5_000_000
-    # The seen filter is one exact JVM anti-join per round against a
-    # scan of the committed seen view (operators/seen.py
-    # ExactSeenShards). A Bloom prefilter in front of that join is built
-    # only when use_bloom is on AND bloom_mode="distributed" or
-    # hot_hosts>0. "distributed": bitmaps live as a persisted DataFrame
-    # consulted shard-locally via cogroup (the 10^10-URL path where a
-    # filter is too big for a driver or broadcast). "broadcast":
-    # driver-held shard bitmaps shipped to executors, under the
-    # hot-host filters below.
-    bloom_mode: str = "broadcast"
-    # >0: the top-K hosts by cumulative new-URL volume get per-host
-    # cuckoo filters (operators/cuckoo.py) consulted INSTEAD of the
-    # shared Bloom — near-exact membership for exactly the hosts that
-    # generate most duplicate candidates. Filters stay complete per host
-    # (built from the committed seen snapshots at promotion, fed every
-    # round's delta) so a cuckoo miss is a definite miss. They follow
-    # the Bloom's regime: driver-resident + broadcast for small rounds
-    # under a PartitionedBloom, executor-side host-keyed state rows
-    # (DistributedHotHostFilter) under a DistributedBloom or once any
-    # round outgrows bloom_driver_update_limit (migration, not demotion).
-    hot_hosts: int = 0
-    # cumulative new-URL count a host needs before promotion
-    hot_host_min_new: int = 256
     # submit the round's two sink jobs (crawl_log write, next-frontier
     # write) from two driver threads so the frontier job's tasks
     # back-fill executors freed by the crawl_log job's tail instead of
@@ -284,27 +238,19 @@ def _append_run_event(fs, out_dir, run_id, seed_url, max_pages, event) -> None:
 # ------------------------------------------- driver-side per-round metrics --
 
 
-def _round_file_stats(
-    fs: LocalFS, out_dir: str, r: int, hash_limit: int = -1,
-    want_hosts: bool = False,
-) -> dict:
+def _round_file_stats(fs: LocalFS, out_dir: str, r: int) -> dict:
     """Every counter the round needs, from the just-written parquet —
     per-FILE granularity (one written file == one output partition), no
-    Spark job. Feeds the driver's loop decisions, the lineage table, and
-    the Bloom delta.
+    Spark job. Feeds the driver's loop decisions and the lineage table.
 
-    Driver-memory bound: the frontier pass first reads only the
-    ``is_new`` boolean column (per file, 1 bit/row). The ``url_hash``
-    column is read in a second, LAZY pass only when the round's total
-    new-URL count is in (0, hash_limit] — i.e. only when the Bloom
-    delta will actually be folded driver-side. ``new_hashes`` is None
-    otherwise, and a 10^8-new-URLs round never puts hashes in driver
-    memory.
+    Driver-memory bound: the frontier pass reads only the ``is_new``
+    boolean column (per file, 1 bit/row); no ``url_hash`` ever reaches
+    driver memory.
     """
     stats = {
         "processed": 0, "fetched": 0, "link_occurrences": 0,
         "newly_discovered": 0, "deferred": 0, "hosts_429": set(),
-        "log_files": [], "frontier_files": [], "new_hashes": None,
+        "log_files": [], "frontier_files": [],
     }
     for f in fs.glob(fs.join(out_dir, "crawl_log", f"r{r}", "*.parquet")):
         t = fs.read_parquet(
@@ -329,29 +275,13 @@ def _round_file_stats(
         stats["processed"] += terminal
         stats["fetched"] += fetched
         stats["link_occurrences"] += links
-    per_file_new: list[tuple[str, int]] = []
     for f in fs.glob(fs.join(out_dir, "frontier", f"r{r + 1}", "*.parquet")):
         t = fs.read_parquet(f, columns=["is_new"])
         is_new = t.column("is_new").to_numpy(zero_copy_only=False)
         n_new = int(is_new.sum())
-        per_file_new.append((f, n_new))
         stats["frontier_files"].append({"rows": t.num_rows, "new": n_new})
         stats["newly_discovered"] += n_new
         stats["deferred"] += t.num_rows - n_new
-    if 0 < stats["newly_discovered"] <= hash_limit:
-        stats["new_hashes"] = []
-        if want_hosts:
-            stats["new_hosts"] = []
-        cols = ["is_new", "url_hash"] + (["host"] if want_hosts else [])
-        for f, n_new in per_file_new:
-            if n_new:
-                t = fs.read_parquet(f, columns=cols)
-                is_new = t.column("is_new").to_numpy(zero_copy_only=False)
-                hashes = t.column("url_hash").to_numpy(zero_copy_only=False)
-                stats["new_hashes"].append(hashes[is_new])
-                if want_hosts:
-                    hosts = t.column("host").to_numpy(zero_copy_only=False)
-                    stats["new_hosts"].append(hosts[is_new])
     return stats
 
 
@@ -400,61 +330,30 @@ def _write_lineage_rows(fs, out_dir, run_id, r, stats: dict) -> None:
 
 def _resume_state(
     fs: LocalFS, out_dir: str, resume_round: int
-) -> tuple[int, dict[str, int], dict[str, int], str | None]:
-    """(visited, backoff_k, host_tally, hot_mode) for a resume —
-    O(rounds) marker reads.
-
-    ``hot_mode`` is the hot-filter regime the crawl was in at its last
-    committed round ("driver" / "distributed" / None for pre-hot or
-    hot-disabled markers): a crawl that migrated its per-host filters
-    executor-side must RE-ENTER the distributed regime on resume —
-    rebuilding driver-resident filters would pull every hot host's full
-    url_hash set onto the driver, exactly the memory blowup the
-    migration exists to avoid.
+) -> tuple[int, dict[str, int]]:
+    """(visited, backoff_k) for a resume — O(rounds) marker reads.
 
     Each committed round's marker carries ``processed`` and
     ``hosts_429`` (a tiny host list), so no committed crawl_log parquet
     is ever re-opened — at the 10^10 design point the marker path is
-    KBs where a log re-scan would be TBs of driver I/O. ``hot_tally``
-    (top hosts by new-URL count, present when hot-host filters are on)
-    resumes the promotion bookkeeping the same way; it is a truncated
-    heavy-hitter tally, which only influences WHICH hosts get a cuckoo
-    filter, never correctness. Markers written before the
-    ``hosts_429`` field existed fall back to the legacy crawl_log
-    column scan (still driver-side, still no Spark job).
+    KBs where a log re-scan would be TBs of driver I/O. A marker
+    without those fields was written by an older engine and fails
+    loudly, like :func:`_check_layout`.
     """
-    markers = [
-        fs.read_json(_marker(fs, out_dir, str(i)))
-        for i in range(resume_round + 1)
-    ]
-    if all("hosts_429" in mk and "processed" in mk for mk in markers):
-        visited = sum(mk["processed"] for mk in markers)
-        backoff_k: dict[str, int] = {}
-        host_tally: dict[str, int] = {}
-        for mk in markers:
-            for h in mk["hosts_429"]:
-                backoff_k[h] = backoff_k.get(h, 0) + 1
-            for h, n in mk.get("hot_tally", {}).items():
-                host_tally[h] = host_tally.get(h, 0) + n
-        return visited, backoff_k, host_tally, markers[-1].get("hot_mode")
-    # legacy markers (pre-hosts_429): recount from the committed log
     visited = 0
-    backoff_k = {}
-    for d in _committed_dirs(fs, out_dir, "crawl_log", resume_round):
-        round_429_hosts: set[str] = set()
-        for f in fs.glob(fs.join(d, "*.parquet")):
-            t = fs.read_parquet(f, columns=["crawl_status", "status_code", "host"])
-            status = t.column("crawl_status").to_numpy(zero_copy_only=False)
-            visited += int((status != schemas.FRONTIER).sum())
-            codes = t.column("status_code").to_numpy(zero_copy_only=False)
-            if (codes == 429).any():
-                hosts = t.column("host").to_pylist()
-                round_429_hosts.update(
-                    h for h, c in zip(hosts, codes) if c == 429
-                )
-        for h in round_429_hosts:
+    backoff_k: dict[str, int] = {}
+    for i in range(resume_round + 1):
+        mk = fs.read_json(_marker(fs, out_dir, str(i)))
+        if "hosts_429" not in mk or "processed" not in mk:
+            raise RuntimeError(
+                f"incompatible on-disk layout at {out_dir}: commit marker "
+                f"_committed_{i} lacks processed/hosts_429 (written by an "
+                "older engine). Re-run the crawl into a fresh out_dir."
+            )
+        visited += mk["processed"]
+        for h in mk["hosts_429"]:
             backoff_k[h] = backoff_k.get(h, 0) + 1
-    return visited, backoff_k, {}, None
+    return visited, backoff_k
 
 
 def _check_layout(fs: LocalFS, out_dir: str) -> None:
@@ -554,146 +453,16 @@ def crawl(
         _commit(fs, out_dir, "init", {"run_id": run_id})
         next_round = 0
         visited = 0
-        host_tally = {}
-        resumed_hot_mode: str | None = None
     else:
         _check_layout(fs, out_dir)
         next_round = resume_round + 1
-        # O(rounds) resume: visited + backoff + hot-host tally from the
-        # commit markers alone — no committed crawl_log parquet is
-        # re-opened.
-        visited, backoff_k, host_tally, resumed_hot_mode = _resume_state(
-            fs, out_dir, resume_round
-        )
+        # O(rounds) resume: visited + backoff from the commit markers
+        # alone — no committed crawl_log parquet is re-opened.
+        visited, backoff_k = _resume_state(fs, out_dir, resume_round)
         _append_run_event(
             fs, out_dir, run_id, seed_urls[0] if seed_urls else None,
             cfg.max_pages, "resume_run",
         )
-
-    # Bloom filter over everything ever seen — only in the regimes that
-    # need one (see CrawlConfig.bloom_mode); otherwise the exact
-    # anti-join alone filters the seen set. The seen set is a view over
-    # the committed frontier snapshots (is_new rows), so the rebuild
-    # scans those. Filters only skip definite-misses.
-    bloom = None
-    bloom_covered = next_round  # bloom holds seen rows with round_added <= this
-    use_join_bloom = cfg.use_bloom and (
-        cfg.bloom_mode == "distributed" or cfg.hot_hosts > 0
-    )
-    if use_join_bloom and cfg.bloom_mode == "distributed":
-        bloom = DistributedBloom(
-            spark, cfg.bloom_shards, cfg.bloom_bits_per_shard
-        )
-        dirs = _committed_dirs(fs, out_dir, "frontier", next_round)
-        if dirs:
-            bloom.update_from_df(
-                _read_frontier(spark, *dirs).where(F.col("is_new"))
-            )
-    elif use_join_bloom:
-        bloom = PartitionedBloom(cfg.bloom_shards, cfg.bloom_bits_per_shard)
-        files = [
-            f
-            for d in _committed_dirs(fs, out_dir, "frontier", next_round)
-            for f in fs.glob(fs.join(d, "*.parquet"))
-        ]
-        # footer row counts only — no column data read for the decision
-        total = sum(fs.parquet_num_rows(f) for f in files)
-        if 0 < total <= cfg.bloom_driver_update_limit:
-            import numpy as np
-
-            for f in files:
-                t = fs.read_parquet(f, columns=["is_new", "url_hash"])
-                is_new = t.column("is_new").to_numpy(zero_copy_only=False)
-                hashes = t.column("url_hash").to_numpy(zero_copy_only=False)
-                bloom.add_hashes(np.asarray(hashes[is_new], dtype=np.int64))
-        elif total:
-            bloom.update_from_df(
-                _read_frontier(
-                    spark, *_committed_dirs(fs, out_dir, "frontier", next_round)
-                ).where(F.col("is_new"))
-            )
-
-    # the driver touches url_hash only when a broadcast-mode Bloom will
-    # fold the delta in-process; distributed mode (and no-bloom runs)
-    # never read the hash column driver-side
-    hash_limit = (
-        cfg.bloom_driver_update_limit
-        if (use_join_bloom and cfg.bloom_mode != "distributed")
-        else -1
-    )
-
-    # per-host cuckoo filters for hot hosts. Two regimes, matching the
-    # Bloom's: driver-resident tables broadcast each round (small rounds
-    # under a PartitionedBloom), or executor-side host-keyed state rows
-    # consulted/updated via cogroup (DistributedBloom mode, and any
-    # broadcast-mode crawl once a round outgrows the driver fold — the
-    # filters MIGRATE executor-side instead of demoting, so the hot-host
-    # layer operates in exactly the big-round regime it exists for).
-    hot_enabled = cfg.hot_hosts > 0 and bloom is not None
-    use_hot_dist = hot_enabled and not isinstance(bloom, PartitionedBloom)
-    hot_filters: dict = {}
-    hot_bc_filter = None  # persistent wrapper (reclaims its broadcast each round)
-    hot_dist = None       # executor-side tables (DistributedHotHostFilter)
-
-    def _seen_new(up_to: int):
-        """Seen-set view (is_new frontier rows) over committed rounds —
-        executor-side input for hot-filter builds/rebuilds."""
-        return _read_frontier(
-            spark, *_committed_dirs(fs, out_dir, "frontier", up_to)
-        ).where(F.col("is_new"))
-
-    def _build_host_filter(host: str, up_to: int):
-        """Exact per-host filter from the committed seen snapshots —
-        the one-off promotion cost (columnar host+hash read)."""
-        import numpy as np
-
-        from sparkcrawler.operators.cuckoo import CuckooFilter
-
-        parts = []
-        for d in _committed_dirs(fs, out_dir, "frontier", up_to):
-            for f in fs.glob(fs.join(d, "*.parquet")):
-                t = fs.read_parquet(f, columns=["is_new", "host", "url_hash"])
-                is_new = t.column("is_new").to_numpy(zero_copy_only=False)
-                hosts = t.column("host").to_numpy(zero_copy_only=False)
-                hashes = t.column("url_hash").to_numpy(zero_copy_only=False)
-                mask = is_new & (hosts == host)
-                if mask.any():
-                    parts.append(hashes[mask])
-        hs = (
-            np.concatenate(parts).astype(np.int64)
-            if parts
-            else np.zeros(0, dtype=np.int64)
-        )
-        return CuckooFilter.from_hashes(hs)
-
-    def _hot_set(tally: dict) -> list[str]:
-        eligible = [
-            (n, h) for h, n in tally.items() if n >= cfg.hot_host_min_new
-        ]
-        return [h for _, h in sorted(eligible, reverse=True)[: cfg.hot_hosts]]
-
-    if hot_enabled and resumed_hot_mode == "distributed" and not use_hot_dist:
-        # The pre-crash crawl had MIGRATED its hot filters executor-side
-        # (recorded in the round marker): re-enter that regime directly.
-        # Instantiating the executor-side filter now keeps every later
-        # round out of the driver_fold branch, so resume never rebuilds
-        # driver-resident filters via _build_host_filter — which would
-        # pull every hot host's full url_hash set onto the driver, the
-        # memory blowup the migration existed to avoid.
-        from sparkcrawler.operators.cuckoo import DistributedHotHostFilter
-
-        hot_dist = DistributedHotHostFilter(spark, bloom)
-    if hot_enabled and host_tally:
-        want = _hot_set(host_tally)
-        if (use_hot_dist or hot_dist is not None) and want:
-            from sparkcrawler.operators.cuckoo import DistributedHotHostFilter
-
-            if hot_dist is None:
-                hot_dist = DistributedHotHostFilter(spark, bloom)
-            hot_dist.ensure_hosts(want, _seen_new(next_round))
-        elif hot_dist is None:
-            for h in want:
-                hot_filters[h] = _build_host_filter(h, next_round)
 
     trace = bool(__import__("os").environ.get("SPARKCRAWLER_TRACE"))
 
@@ -816,36 +585,12 @@ def crawl(
         seen_all = _read_frontier(
             spark, *_committed_dirs(fs, out_dir, "frontier", r)
         ).where(F.col("is_new"))
-        if bloom is None:
-            # within-round dedup + one exact anti-join against the seen
-            # view — rebuilt from the committed snapshots every round,
-            # so a resumed crawl needs no seen-state rebuild
-            new_links = ExactSeenShards().filter_new(
-                discovered_links(plan.extracted, dedup=False), seen_all
-            )
-        else:
-            discovered = discovered_links(plan.extracted)
-            seen_uncovered = (
-                seen_all.where(F.col("round") > F.lit(bloom_covered))
-                if bloom_covered < r
-                else None
-            )
-            if hot_dist is not None and hot_dist.hosts:
-                seen_filter = hot_dist
-            elif hot_enabled and hot_filters:
-                from sparkcrawler.operators.cuckoo import HotHostSeenFilter
-
-                if hot_bc_filter is None:
-                    # ONE wrapper for the whole crawl: it reclaims the
-                    # previous round's broadcast before shipping the next
-                    # (hot_filters is mutated in place, never rebound)
-                    hot_bc_filter = HotHostSeenFilter(bloom, hot_filters)
-                seen_filter = hot_bc_filter
-            else:
-                seen_filter = bloom
-            new_links = dedup_against_seen(
-                discovered, seen_all, seen_filter, spark, seen_uncovered
-            )
+        # within-round dedup + one exact anti-join against the seen
+        # view — rebuilt from the committed snapshots every round, so a
+        # resumed crawl needs no seen-state rebuild
+        new_links = ExactSeenShards().filter_new(
+            discovered_links(plan.extracted), seen_all
+        )
         next_frontier = plan.deferred.withColumn(
             "is_new", F.lit(False)
         ).unionByName(
@@ -869,12 +614,9 @@ def crawl(
         if log_future is None:
             _tr(f"r{r} frontier write", t2)
 
-        # ---- driver-side: metrics, lineage, bloom delta (no Spark jobs) ----
+        # ---- driver-side: metrics, lineage (no Spark jobs) ----
         t3 = time.time()
-        m = _round_file_stats(
-            fs, out_dir, r, hash_limit=hash_limit,
-            want_hosts=hot_enabled and hot_dist is None and not use_hot_dist,
-        )
+        m = _round_file_stats(fs, out_dir, r)
         processed = m["processed"]
         n_new = m["newly_discovered"]
         n_deferred = m["deferred"]
@@ -882,160 +624,24 @@ def crawl(
             backoff_k[h] = backoff_k.get(h, 0) + 1
         if cfg.lineage:
             _write_lineage_rows(fs, out_dir, run_id, r, m)
-
-        if bloom is not None and n_new >= cfg.bloom_update_min_batch:
-            # fold in EVERY round not yet covered — this round's delta
-            # plus any round previously skipped by the batching
-            # threshold (otherwise bloom_covered would overclaim and
-            # skipped-round URLs could be re-admitted as definite-new).
-            uncovered_dirs = [
-                fs.join(out_dir, "frontier", f"r{i}")
-                for i in range(bloom_covered + 1, r + 2)
-                if fs.exists(fs.join(out_dir, "frontier", f"r{i}"))
-            ]
-            if isinstance(bloom, DistributedBloom):
-                bloom.update_from_df(
-                    _read_frontier(spark, *uncovered_dirs).where(F.col("is_new")),
-                    n_rows=None if bloom_covered < r else n_new,
-                )
-            elif (
-                m["new_hashes"] is not None and bloom_covered == r
-            ):
-                # common case: nothing skipped — fold this round's delta
-                # from the lazily-read url_hash arrays (no Spark job)
-                import numpy as np
-
-                for arr in m["new_hashes"]:
-                    bloom.add_hashes(np.asarray(arr, dtype=np.int64))
-            elif n_new <= cfg.bloom_driver_update_limit:
-                # skipped rounds to catch up on, still small: fold all
-                # uncovered deltas driver-side from the written files
-                import numpy as np
-
-                for d in uncovered_dirs:
-                    for f in fs.glob(fs.join(d, "*.parquet")):
-                        t = fs.read_parquet(f, columns=["is_new", "url_hash"])
-                        is_new = t.column("is_new").to_numpy(zero_copy_only=False)
-                        hashes = t.column("url_hash").to_numpy(zero_copy_only=False)
-                        bloom.add_hashes(np.asarray(hashes[is_new], dtype=np.int64))
-            else:
-                # huge delta → distributed build over the written files;
-                # the driver never saw the hash column (new_hashes=None)
-                bloom.update_from_df(
-                    _read_frontier(spark, *uncovered_dirs).where(F.col("is_new"))
-                )
-            bloom_covered = r + 1
-
-        # ---- hot-host cuckoo maintenance ----
-        round_host_tally: dict[str, int] = {}
-        if hot_enabled:
-            driver_fold = (
-                hot_dist is None
-                and not use_hot_dist
-                and m["new_hashes"] is not None
-            )
-            if driver_fold:
-                import numpy as np
-
-                for hosts_arr, hash_arr in zip(
-                    m.get("new_hosts", []), m["new_hashes"]
-                ):
-                    uniq, counts = np.unique(hosts_arr, return_counts=True)
-                    for h, n in zip(uniq.tolist(), counts.tolist()):
-                        round_host_tally[h] = round_host_tally.get(h, 0) + int(n)
-                    for h in list(hot_filters):
-                        mask = hosts_arr == h
-                        if mask.any() and not hot_filters[h].insert_many(
-                            np.asarray(hash_arr[mask], dtype=np.int64)
-                        ):
-                            # filter full → exact rebuild, re-sized for
-                            # the host's full current seen set
-                            hot_filters[h] = _build_host_filter(h, r + 1)
-                for h, n in round_host_tally.items():
-                    host_tally[h] = host_tally.get(h, 0) + n
-                for h in _hot_set(host_tally):
-                    if h not in hot_filters:
-                        hot_filters[h] = _build_host_filter(h, r + 1)
-            elif n_new > 0:
-                # executor-side regime (distributed Bloom, or a round too
-                # big for the driver fold): the tally comes from one
-                # capped aggregation job (≤64 (host, n) rows ever reach
-                # the driver), and the tables update/promote via
-                # host-local cogroup tasks — no url_hash column is ever
-                # read driver-side, and nothing demotes.
-                from sparkcrawler.operators.cuckoo import (
-                    DistributedHotHostFilter,
-                )
-
-                new_df = _read_frontier(
-                    spark, fs.join(out_dir, "frontier", f"r{r + 1}")
-                ).where(F.col("is_new"))
-                for row in (
-                    new_df.groupBy("host")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .orderBy(F.desc("n"), "host")
-                    .limit(64)
-                    .collect()
-                ):
-                    round_host_tally[row["host"]] = int(row["n"])
-                for h, n in round_host_tally.items():
-                    host_tally[h] = host_tally.get(h, 0) + n
-                if hot_dist is None:
-                    hot_dist = DistributedHotHostFilter(spark, bloom)
-                    if hot_filters:
-                        # migrate driver-resident filters executor-side
-                        # (exact rebuild from the committed snapshots,
-                        # this round included) instead of demoting
-                        hot_dist.hosts_migrating = set(hot_filters)
-                        hot_filters.clear()
-                        if hot_bc_filter is not None:
-                            hot_bc_filter.release()
-                want = set(_hot_set(host_tally)) | hot_dist.hosts_migrating
-                if hot_dist.hosts or want:
-                    seen_now = _seen_new(r + 1)
-                    hot_dist.update_from_df(new_df, seen_now)
-                    hot_dist.ensure_hosts(want, seen_now)
-                    hot_dist.hosts_migrating = set()
         _tr(f"r{r} driver metrics+lineage+bloom", t3)
 
-        payload = {
+        _commit(fs, out_dir, str(r), {
             "processed": processed, "new": n_new,
             "hosts_429": sorted(m["hosts_429"]),
-        }
-        if hot_enabled:
-            payload["hot_tally"] = dict(
-                sorted(round_host_tally.items(), key=lambda kv: -kv[1])[:64]
-            )
-            # regime at commit time — resume re-enters it directly
-            # instead of rebuilding driver-side (see _resume_state)
-            payload["hot_mode"] = (
-                "distributed" if hot_dist is not None else "driver"
-            )
-        _commit(fs, out_dir, str(r), payload)
+        })
         visited += processed
-        entry = {
+        stats.append({
             "round": r, "frontier_in": frontier_count, "processed": processed,
             "new": n_new, "deferred": n_deferred,
             "wall": round(time.time() - t_round, 3),
-        }
-        if hot_enabled:
-            entry["hot_active"] = (
-                len(hot_dist.hosts) if hot_dist is not None else len(hot_filters)
-            )
-            entry["hot_mode"] = "distributed" if hot_dist is not None else "driver"
-        stats.append(entry)
+        })
         plan.decided.unpersist()
         plan.extracted.unpersist()
         frontier_count = n_new + n_deferred
         _tr(f"r{r} TOTAL", t_round)
         r += 1
 
-    if hot_bc_filter is not None:
-        hot_bc_filter.release()
-    if hot_dist is not None:
-        hot_dist.release()
-    if bloom is not None:
-        bloom.release()
     _append_run_event(
         fs, out_dir, run_id, seed_urls[0] if seed_urls else None,
         cfg.max_pages, "complete_run",

@@ -330,16 +330,16 @@ def build_round(
     )
 
 
-def discovered_links(parsed: DataFrame, dedup: bool = True) -> DataFrame:
+def discovered_links(parsed: DataFrame) -> DataFrame:
     """Explode parsed pages' same-host links into frontier candidates.
 
     ``parsed`` needs (links, depth, round) — either the persisted
     extracted cache (hot path: no crawl_log re-scan) or a crawl_log
     filtered to PARSED rows. Candidate identity (url_hash, host) is
-    computed JVM-side (xxhash64 + parse_url); within-round dedup keeps
-    one row per url_hash (depth is constant within a round).
-    ``dedup=False`` leaves the within-round dedup to the caller
-    (``ExactSeenShards.filter_new`` does its own).
+    computed JVM-side (xxhash64 + parse_url). A URL linked from several
+    pages yields one row per link; the caller's seen filter
+    (``ExactSeenShards.filter_new``) keeps one row per url_hash (depth
+    is constant within a round, so any row is the min).
     """
     if "crawl_status" in parsed.columns:
         parsed = parsed.where(F.col("crawl_status") == schemas.PARSED)
@@ -361,8 +361,4 @@ def discovered_links(parsed: DataFrame, dedup: bool = True) -> DataFrame:
         "round",
         "CAST(0 AS INT) AS attempt",
     )
-    # first-writer-wins across pages in the same round: keep one row per
-    # url_hash (depth is constant within a round, so any row is the min).
-    if not dedup:
-        return exploded.select(*FRONTIER_COLS)
-    return exploded.dropDuplicates(["url_hash"]).select(*FRONTIER_COLS)
+    return exploded.select(*FRONTIER_COLS)

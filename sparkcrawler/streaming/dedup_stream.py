@@ -2,7 +2,7 @@
 
 The reference deduplicates URLs against a Redis set inside its poll
 loop (reference consumer.py); the batch engine's analog is the
-Bloom + anti-join ``seen`` pipeline (operators/seen.py). This module is
+exact anti-join ``seen`` filter (operators/seen.py). This module is
 the *streaming* form of that contract for record streams: an ingest
 directory is drained micro-batch by micro-batch and every record key is
 emitted exactly once, with duplicate arrivals — including duplicates

@@ -207,20 +207,6 @@ def test_politeness_budget_enforced(spark, corpus):
     assert res.visited == 8
 
 
-def test_bloom_delta_batching_equivalent(spark, corpus, full_run):
-    """With bloom updates skipped entirely (min_batch=inf), the
-    uncovered-delta anti-join must keep outputs identical. The Bloom
-    prefilter runs only in its own regimes, so the test selects one."""
-    seed, _, log_full, seen_full, _ = full_run
-    cfg = CrawlConfig(
-        max_pages=10_000, bloom_update_min_batch=10**9,
-        bloom_mode="distributed",
-    )
-    _, log2, seen2, _ = _crawl(spark, corpus, seed, cfg)
-    assert _log_key(log2) == _log_key(log_full)
-    assert seen2 == seen_full
-
-
 def test_resume_bit_identical(spark, corpus, full_run):
     """Kill after round 3, resume → state identical to the uninterrupted
     run (north rule: resumable from checkpoint)."""
@@ -283,48 +269,41 @@ def test_lineage_totals_consistent(spark, full_run):
     assert total_fetched == sum(1 for r in log if r["crawl_status"] == 2)
 
 
-def test_bloom_partial_batching_equivalent(spark, corpus, full_run):
-    """Regression: with an intermediate update threshold some rounds'
-    deltas are skipped then caught up later — the catch-up must fold
-    EVERY uncovered round (a covered-but-unfolded round would let seen
-    URLs re-enter the frontier as definite-new)."""
-    seed, _, log_full, seen_full, _ = full_run
-    cfg = CrawlConfig(
-        max_pages=10_000, bloom_update_min_batch=30, bloom_mode="distributed"
-    )
-    _, log2, seen2, _ = _crawl(spark, corpus, seed, cfg)
-    assert _log_key(log2) == _log_key(log_full)
-    assert seen2 == seen_full
+def test_bloom_partial_batching_equivalent(spark, full_run):
+    """Regression kept from the Bloom-prefilter era, when a catch-up fold
+    that skipped a round let seen URLs re-enter the frontier as new. The
+    contract holds for the anti-join: across the committed frontier
+    snapshots every URL is tagged is_new in exactly one snapshot, and
+    those rows are the seen set."""
+    import glob
+    import os
 
+    import pyarrow.parquet as pq
 
-def test_distributed_bloom_crawl_identical(spark, corpus, full_run):
-    """bloom_mode=distributed (cogroup consult, DataFrame-resident
-    bitmaps) must reproduce the broadcast-bloom crawl bit-for-bit —
-    AND the driver must never read the url_hash column (the hashes
-    live executor-side in this mode)."""
-    seed, _, log_full, seen_full, _ = full_run
-    cfg = CrawlConfig(max_pages=10_000, bloom_mode="distributed")
-    fs = RecordingFS()
-    _, log2, seen2, _ = _crawl(spark, corpus, seed, cfg, fs=fs)
-    assert _log_key(log2) == _log_key(log_full)
-    assert seen2 == seen_full
-    hash_reads = [
-        (p, c) for p, c in fs.reads if c is not None and "url_hash" in c
-    ]
-    assert hash_reads == [], hash_reads
+    _, res, _, seen_full, out = full_run
+    snaps = sorted(glob.glob(os.path.join(out, "frontier", "r*")))
+    assert len(snaps) > res.rounds
+    first_new: dict[str, str] = {}
+    for snap in snaps:
+        t = pq.read_table(snap, columns=["url", "is_new"])
+        for url, is_new in zip(t.column("url").to_pylist(),
+                               t.column("is_new").to_pylist()):
+            if is_new:
+                assert url not in first_new, (url, first_new[url], snap)
+                first_new[url] = snap
+    assert set(first_new) == seen_full
 
 
 def test_large_round_never_materializes_hashes_on_driver(
     spark, corpus, full_run
 ):
-    """bloom_driver_update_limit=0 forces every Bloom delta down the
-    distributed-build path; the driver-side metrics pass must then read
-    only the is_new flag column, never url_hash (VERDICT r2 hazard #1:
-    a 10^8-new-URLs round must not put ~GBs of hashes on the driver)."""
+    """The driver-side passes (frontier probe, round metrics, lineage)
+    read only narrow columns, never url_hash: a 10^8-new-URLs round must
+    not put ~GBs of hashes on the driver — the seen anti-join reads
+    them executor-side."""
     seed, _, log_full, seen_full, _ = full_run
-    cfg = CrawlConfig(max_pages=10_000, bloom_driver_update_limit=0)
     fs = RecordingFS()
-    _, log2, seen2, _ = _crawl(spark, corpus, seed, cfg, fs=fs)
+    _, log2, seen2, _ = _crawl(spark, corpus, seed, FULL_CFG, fs=fs)
     assert _log_key(log2) == _log_key(log_full)
     assert seen2 == seen_full
     hash_reads = [
@@ -361,32 +340,43 @@ def test_resume_reads_markers_not_crawl_log(spark, corpus, full_run):
 
 
 def test_legacy_layout_fails_fast(spark, corpus):
-    """An out_dir written by a pre-is_new engine (frontier without the
-    is_new column / a separate seen/ tree) must fail with an explicit
+    """An out_dir written by an older engine must fail with an explicit
     incompatible-layout error on resume, not an opaque missing-column
-    error mid-crawl (ADVICE r2)."""
+    error mid-crawl (ADVICE r2) or a silent crawl_log rescan: frontier
+    snapshots without the is_new column, and a committed round whose
+    marker lacks hosts_429."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     import json
     import os
 
+    from sparkcrawler.plans.crawl import _frontier0_table, _seed_rows
+
     _, _, _, pages, rob = corpus
-    out = tempfile.mkdtemp(prefix="sc_legacy_")
-    try:
-        d = os.path.join(out, "frontier", "r0")
-        os.makedirs(d)
-        pq.write_table(
-            pa.table({"url": pa.array(["https://host1.example/p/0"]),
-                      "url_hash": pa.array([1], pa.int64())}),
-            os.path.join(d, "part-0.parquet"),
-        )
-        with open(os.path.join(out, "_committed_init"), "w") as fh:
-            json.dump({"run_id": "legacy"}, fh)
-        with pytest.raises(RuntimeError, match="incompatible on-disk layout"):
-            crawl(spark, pages, rob, [page_url(1, 0)], out,
-                  config=CrawlConfig(max_pages=5))
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    seed = page_url(1, 0)
+    no_is_new = pa.table({"url": pa.array([seed]),
+                          "url_hash": pa.array([1], pa.int64())})
+    cases = [
+        (no_is_new, {}),
+        (_frontier0_table(_seed_rows([seed])), {"0": {"processed": 1}}),
+    ]
+    for frontier0, markers in cases:
+        out = tempfile.mkdtemp(prefix="sc_legacy_")
+        try:
+            d = os.path.join(out, "frontier", "r0")
+            os.makedirs(d)
+            pq.write_table(frontier0, os.path.join(d, "part-0.parquet"))
+            markers = {"init": {"run_id": "legacy"}, **markers}
+            for name, payload in markers.items():
+                with open(os.path.join(out, f"_committed_{name}"), "w") as fh:
+                    json.dump(payload, fh)
+            with pytest.raises(
+                RuntimeError, match="incompatible on-disk layout"
+            ):
+                crawl(spark, pages, rob, [seed], out,
+                      config=CrawlConfig(max_pages=5))
+        finally:
+            shutil.rmtree(out, ignore_errors=True)
 
 
 def test_bucketed_corpus_forced_shuffle_crawl(spark, corpus, full_run):

@@ -3,19 +3,14 @@
 These pin INVARIANTS rather than examples: URL canonicalization must be
 a fixed point (re-canonicalizing canonical output changes nothing — the
 crawl's dedup identity depends on it), must never emit fragments, and
-must be insensitive to query-parameter order; the cuckoo filter must
-never produce a false negative (a false negative = a URL crawled twice,
-the bug class round 4's dtype fix closed) under arbitrary insert/delete
-workloads, including after state round-trips.
+must be insensitive to query-parameter order.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from sparkcrawler.functions.urlnorm import canonicalize, host_of
-from sparkcrawler.operators.cuckoo import CuckooFilter
 
 # --- URL strategies: hosts/paths/queries from URL-legal alphabets ------
 
@@ -95,44 +90,6 @@ def test_default_port_stripped_iff_default(url):
         port = h.rsplit(":", 1)[1]
         default = {"http": "80", "https": "443"}[scheme]
         assert port != default
-
-
-# --- Cuckoo filter: never a false negative -----------------------------
-
-_hashes = st.lists(
-    st.integers(min_value=-(2**63), max_value=2**63 - 1),
-    min_size=1, max_size=400, unique=True,
-)
-
-
-@settings(max_examples=100, deadline=None)
-@given(_hashes)
-def test_cuckoo_no_false_negatives(hs):
-    arr = np.array(hs, dtype=np.int64)
-    cf = CuckooFilter.from_hashes(arr)
-    assert bool(cf.contains_many(arr).all())
-
-
-@settings(max_examples=100, deadline=None)
-@given(_hashes, st.data())
-def test_cuckoo_delete_keeps_remaining_members(hs, data):
-    arr = np.array(hs, dtype=np.int64)
-    cf = CuckooFilter.from_hashes(arr)
-    n_del = data.draw(st.integers(0, len(hs) // 2))
-    for h in hs[:n_del]:
-        cf.delete(int(h))
-    rest = np.array(hs[n_del:], dtype=np.int64)
-    if len(rest):
-        assert bool(cf.contains_many(rest).all())
-
-
-@settings(max_examples=50, deadline=None)
-@given(_hashes)
-def test_cuckoo_state_roundtrip_preserves_membership(hs):
-    arr = np.array(hs, dtype=np.int64)
-    cf = CuckooFilter.from_hashes(arr)
-    cf2 = CuckooFilter.from_state(*cf.to_state())
-    assert bool(cf2.contains_many(arr).all())
 
 
 # --- Extractor: one-pass parser ≡ dedicated parsers, never raises ------

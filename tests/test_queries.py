@@ -54,7 +54,7 @@ ROWS_ONLY = sorted(n for n, s in CATALOG.items() if s.sql is None)
 def no_persist_leak(request, spark):
     """Every catalog query must leave executor storage no fuller than it
     found it: whatever a query persists internally (pagerank's edge
-    list, the crawl demo build's round caches, Bloom shard bitmaps)
+    list, the crawl demo build's round caches)
     must be unpersisted by the time its action returns — a long-lived
     session running the catalog repeatedly at scale must not accrete
     pinned blocks. Baseline-delta (not absolute-zero) plus gc.collect()
