@@ -2687,8 +2687,7 @@ FROM n GROUP BY label ORDER BY label
 
 
 def events_hourly_windows(spark, sf_dir):
-    """Tumbling event-time windows (the batch twin of the Structured
-    Streaming path in sparkcrawler.streaming.events_stream)."""
+    """Tumbling event-time windows: one-hour buckets per event type."""
     ev = _t(spark, sf_dir, "events")
     return (
         ev.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -2709,49 +2708,6 @@ HOURLY_SQL = """
 SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS window_start,
        event_type, count(*) AS n, round(sum(value), 2) AS total_value
 FROM events GROUP BY 1, 2 ORDER BY window_start, event_type
-"""
-
-
-def orders_upsert_latest(spark, sf_dir):
-    """Insert-or-update (reference S9, data.py:201-208) as
-    dedup-on-write MERGE: updates win over existing rows per key."""
-    from sparkcrawler.operators.upsert import upsert
-
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderdate"
-    )
-    # +1000.00 keeps the value conceptually 2-decimal: a ×1.1 style bump
-    # creates exact .5 rounding boundaries where Spark (HALF_UP) and
-    # DuckDB (HALF_EVEN) disagree.
-    updates = (
-        orders.where(F.col("o_orderkey") % 7 == 0)
-        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
-        .withColumn("o_orderdate", F.col("o_orderdate") + F.expr("INTERVAL 1 DAY"))
-    )
-    merged = upsert(orders, updates, ["o_orderkey"], "o_orderdate")
-    return merged.select(
-        "o_orderkey",
-        F.round("o_totalprice", 2).alias("totalprice"),
-        F.date_format("o_orderdate", "yyyy-MM-dd").alias("version_date"),
-    ).orderBy("o_orderkey")
-
-
-UPSERT_SQL = """
-WITH existing AS (
-  SELECT o_orderkey, o_totalprice, o_orderdate, 0 AS _src FROM orders
-),
-updates AS (
-  SELECT o_orderkey, o_totalprice + 1000.0 AS o_totalprice,
-         o_orderdate + INTERVAL 1 DAY AS o_orderdate, 1 AS _src
-  FROM orders WHERE o_orderkey % 7 = 0
-),
-u AS (SELECT * FROM existing UNION ALL SELECT * FROM updates)
-SELECT o_orderkey, round(o_totalprice, 2) AS totalprice,
-       strftime(o_orderdate, '%Y-%m-%d') AS version_date
-FROM u
-QUALIFY row_number() OVER (PARTITION BY o_orderkey
-                           ORDER BY o_orderdate DESC, _src DESC) = 1
-ORDER BY o_orderkey
 """
 
 
@@ -3133,35 +3089,6 @@ def crawl_corpus_kept(spark, sf_dir):
         )
         .orderBy("url")
     )
-
-
-def crawl_host_rates(spark, sf_dir):
-    """Per-host fetch accounting — the BATCH twin of the crawl-side
-    stateful stream (streaming/host_rates_stream.py; stream==batch is
-    pinned for any replay order in test_host_rates_stream.py) — over the
-    committed demo crawl. This catalog entry adds the missing leg: the
-    accounting values themselves hash-verified against DuckDB."""
-    from sparkcrawler.streaming.host_rates_stream import host_rates_batch
-
-    out = _demo_crawl_dir(spark)
-    return host_rates_batch(spark, f"{out}/crawl_log").orderBy("host")
-
-
-# fetch_rate: n/span at 6 dp never lands on an exact half (it would
-# need span divisible by 2^7; demo spans are <= ~10 rounds), so Spark
-# HALF_UP and DuckDB HALF_EVEN agree.
-HOST_RATES_SQL = f"""
-SELECT host,
-       CAST(sum(CASE WHEN crawl_status = 2 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_fetched,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(min(round) AS INT) AS first_round,
-       CAST(max(round) AS INT) AS last_round,
-       round(sum(CASE WHEN crawl_status = 2 THEN 1 ELSE 0 END)
-             / greatest(max(round) - min(round) + 1, 1), 6) AS fetch_rate
-FROM read_parquet('{_DEMO_CRAWL}/crawl_log/*/*.parquet')
-GROUP BY host ORDER BY host
-"""
 
 
 # A line is boilerplate when it appears verbatim on at least this many
@@ -4483,7 +4410,6 @@ CATALOG: dict[str, QuerySpec] = {
     "events_daily": QuerySpec(events_daily, DAILY_SQL),
     "monthly_order_growth": QuerySpec(monthly_order_growth, MONTHLY_SQL),
     "events_hourly_windows": QuerySpec(events_hourly_windows, HOURLY_SQL),
-    "orders_upsert_latest": QuerySpec(orders_upsert_latest, UPSERT_SQL),
     "part_brand_stats": QuerySpec(part_brand_stats, PART_SQL),
     "docs_dedup_exact": QuerySpec(docs_dedup_exact, DEDUP_SQL),
     "docs_minhash": QuerySpec(docs_minhash, MINHASH_SQL),
@@ -4543,7 +4469,6 @@ CATALOG: dict[str, QuerySpec] = {
     "crawl_pages_text": QuerySpec(crawl_pages_text, PAGES_TEXT_SQL),
     # the composed crawl→training-corpus emit (dedup + quality gate)
     "crawl_corpus_kept": QuerySpec(crawl_corpus_kept, CORPUS_KEPT_SQL),
-    "crawl_host_rates": QuerySpec(crawl_host_rates, HOST_RATES_SQL),
     "crawl_line_dedup": QuerySpec(crawl_line_dedup, LINE_DEDUP_SQL),
     # link extraction differential: Spark Arrow-UDF histogram vs the
     # pure-Python extractor's histogram materialized to parquet

@@ -98,18 +98,3 @@ def canonicalize_udf(base: pd.Series, href: pd.Series) -> pd.Series:
         [canonicalize(b, h) for b, h in zip(base, href)], dtype="object"
     )
 
-
-def with_url_identity(df, url_col: str = "url"):
-    """Append ``url_hash`` (builtin xxhash64 — JVM side) and ``host``.
-
-    Host extraction is builtin ``parse_url`` so the hot path stays inside
-    whole-stage codegen. AUTHORITY (host[:port]) rather than HOST so a
-    non-default explicit port makes a *different* host — matching both
-    :func:`host_of` and the reference's raw-netloc comparison; canonical
-    URLs already have lowercase netlocs with default ports stripped, so
-    parse_url(AUTHORITY) agrees with :func:`host_of`.
-    """
-    return df.withColumn("url_hash", F.xxhash64(F.col(url_col))).withColumn(
-        "host",
-        F.coalesce(F.parse_url(F.col(url_col), F.lit("AUTHORITY")), F.lit("")),
-    )

@@ -20,13 +20,17 @@ all meet in one task.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
+
+# salted sub-partitions per budgeted host in the pre-trim: a host's rows
+# spread over this many tasks, and the exact per-host window then ranks
+# at most SALT_BUCKETS × budget survivors per host
+SALT_BUCKETS = 16
 
 
 def politeness_decided(
     frontier: DataFrame,
     round_seconds: float = 60.0,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Tag each frontier row with ``_admitted`` under per-host budgets.
 
@@ -58,29 +62,17 @@ def politeness_decided(
     pre = budgeted.selectExpr(
         "*",
         "row_number() OVER (PARTITION BY host, pmod(url_hash, %d) %s) AS _rs"
-        % (salt_buckets, order_sql),
+        % (SALT_BUCKETS, order_sql),
     )
     survivors = pre.where("_rs <= _budget").drop("_rs")
     pre_deferred = pre.where("_rs > _budget").selectExpr(
         *cols, "false AS _admitted"
     )
 
-    # phase 2: exact per-host rank on ≤ salt_buckets×budget rows per host.
+    # phase 2: exact per-host rank on ≤ SALT_BUCKETS×budget rows per host.
     ranked = survivors.selectExpr(
         "*",
         "row_number() OVER (PARTITION BY host %s) AS _rn" % order_sql,
     ).selectExpr(*cols, "_rn <= _budget AS _admitted")
     return free.unionByName(ranked).unionByName(pre_deferred)
 
-
-def apply_politeness(
-    frontier: DataFrame,
-    round_seconds: float = 60.0,
-    salt_buckets: int = 16,
-) -> tuple[DataFrame, DataFrame]:
-    """(admitted, deferred) split view over :func:`politeness_decided`."""
-    decided = politeness_decided(frontier, round_seconds, salt_buckets)
-    return (
-        decided.where(F.col("_admitted")).drop("_admitted"),
-        decided.where(~F.col("_admitted")).drop("_admitted"),
-    )

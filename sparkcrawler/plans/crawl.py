@@ -58,35 +58,26 @@ from sparkcrawler.oracle import url_hash64
 from sparkcrawler.plans.round import FRONTIER_COLS, build_round, discovered_links
 
 
+# frontier row count at or below which the frontier's URLs are
+# collected and pushed into the corpus scan as an IN filter →
+# bucket pruning + row-group min/max skipping on url-sorted buckets
+FETCH_PUSHDOWN_LIMIT = 4096
+
+
 @dataclass
 class CrawlConfig:
+    """The knobs a crawl's caller sets. Engine tuning constants live
+    beside the code they tune (``FETCH_PUSHDOWN_LIMIT`` here,
+    ``plans.round.BROADCAST_FRONTIER_LIMIT``,
+    ``operators.politeness.SALT_BUCKETS``)."""
+
     max_pages: int = 10                # reference default MAX_PAGES=10
     retries: int = 1                   # corpus fetches are deterministic
     round_seconds: float = 60.0        # politeness budget window per round
-    salt_buckets: int = 16
     max_rounds: int = 1000
-    lineage: bool = True
     # >0 and pages carries an url_bucket partition column → per-round
     # partition pruning of the fetch scan (Iceberg-bucket semantics)
     corpus_buckets: int = 0
-    # frontier row count at or below which the round broadcasts the
-    # frontier side of the fetch join; above it, a shuffle join runs
-    # (against a bucketed corpus table only the frontier side moves)
-    broadcast_frontier_limit: int = 2_000_000
-    # frontier row count at or below which the frontier's URLs are
-    # collected and pushed into the corpus scan as an IN filter →
-    # bucket pruning + row-group min/max skipping on url-sorted buckets
-    fetch_pushdown_limit: int = 4096
-    # submit the round's two sink jobs (crawl_log write, next-frontier
-    # write) from two driver threads so the frontier job's tasks
-    # back-fill executors freed by the crawl_log job's tail instead of
-    # waiting for the full barrier (guide §2.6 overlap). Both jobs read
-    # the politeness decision and extract-UDF output through the same
-    # persisted DataFrames; Spark's per-block locking makes concurrent
-    # cache population compute each partition once. Writes land in
-    # different dirs and the round marker still commits strictly after
-    # both, so resume semantics and outputs are bit-identical.
-    overlap_sinks: bool = True
 
 
 @dataclass
@@ -106,11 +97,16 @@ def _sink_pool(spark):
     """Lazily-created single-worker driver thread pool for submitting a
     round's crawl_log write concurrently with its frontier write
     (guide §2.6: actions are only sequential because the driver calls
-    them sequentially). One worker is enough — exactly two jobs are
-    ever in flight, and FIFO scheduling lets the second back-fill the
-    first's straggler tail. Under Py4J pinned-thread mode (the default
-    since Spark 3.2) the pool thread owns its own JVM thread-locals,
-    so job descriptions set inside it never leak to the main thread."""
+    them sequentially), so the frontier job's tasks back-fill executors
+    freed by the crawl_log job's tail. Both jobs read the persisted
+    politeness decision and extract-UDF output; Spark's per-block
+    locking computes each cached partition once. The writes land in
+    different dirs and the round marker commits strictly after both,
+    so outputs and resume are the same as with sequential writes.
+    One worker is enough — exactly two jobs are ever in flight. Under
+    Py4J pinned-thread mode (the default since Spark 3.2) the pool
+    thread owns its own JVM thread-locals, so job descriptions set
+    inside it never leak to the main thread."""
     global _SINK_POOL
     if _SINK_POOL is None:
         from concurrent.futures import ThreadPoolExecutor
@@ -505,7 +501,7 @@ def crawl(
         # already do).
         frontier_buckets = None
         frontier_urls = None
-        if frontier_count <= cfg.fetch_pushdown_limit:
+        if frontier_count <= FETCH_PUSHDOWN_LIMIT:
             frontier_urls = sorted(
                 u
                 for f in fs.glob(fs.join(frontier_path, "*.parquet"))
@@ -538,13 +534,11 @@ def crawl(
         plan = build_round(
             pages, robots, frontier, run_id, r,
             round_seconds=cfg.round_seconds,
-            salt_buckets=cfg.salt_buckets,
             max_admit=max_admit,
             retries=cfg.retries,
             frontier_count=frontier_count,
             frontier_buckets=frontier_buckets,
             frontier_urls=frontier_urls,
-            broadcast_frontier_limit=cfg.broadcast_frontier_limit,
             backoff=backoff_df,
         )
         # windows compute once: both the crawl_log job and the
@@ -566,16 +560,11 @@ def crawl(
                 fs.join(out_dir, "crawl_log", f"r{r}")
             )
 
-        log_future = None
-        if cfg.overlap_sinks:
-            # FIFO scheduling gives the (heavier, first-submitted)
-            # crawl_log job priority; the frontier job below back-fills
-            # its tail (guide §2.6). Submitted first so it also drives
-            # population of the shared decided/extracted cache.
-            log_future = _sink_pool(spark).submit(_write_crawl_log)
-        else:
-            _write_crawl_log()
-            _tr(f"r{r} crawl_log write", t1)
+        # FIFO scheduling gives the (heavier, first-submitted) crawl_log
+        # job priority; the frontier job below back-fills its tail
+        # (guide §2.6). Submitted first so it also drives population of
+        # the shared decided/extracted cache.
+        log_future = _sink_pool(spark).submit(_write_crawl_log)
 
         # ---- job 2: next frontier = politeness-deferred ∪ (discovered ∖ seen)
         # Discovery reads the cached extract output, so the UDF never
@@ -596,7 +585,6 @@ def crawl(
         ).unionByName(
             new_links.select(*FRONTIER_COLS).withColumn("is_new", F.lit(True))
         )
-        t2 = time.time()
         try:
             spark.sparkContext.setJobDescription(f"crawl r{r}: frontier")
             next_frontier.coalesce(par).write.mode("overwrite").parquet(
@@ -608,11 +596,8 @@ def crawl(
             # the round is only committed once BOTH sinks are on disk,
             # and a frontier-side failure must still await (and
             # surface) the in-flight crawl_log job
-            if log_future is not None:
-                log_future.result()
-                _tr(f"r{r} crawl_log+frontier overlapped writes", t1)
-        if log_future is None:
-            _tr(f"r{r} frontier write", t2)
+            log_future.result()
+            _tr(f"r{r} crawl_log+frontier overlapped writes", t1)
 
         # ---- driver-side: metrics, lineage (no Spark jobs) ----
         t3 = time.time()
@@ -622,9 +607,8 @@ def crawl(
         n_deferred = m["deferred"]
         for h in m["hosts_429"]:
             backoff_k[h] = backoff_k.get(h, 0) + 1
-        if cfg.lineage:
-            _write_lineage_rows(fs, out_dir, run_id, r, m)
-        _tr(f"r{r} driver metrics+lineage+bloom", t3)
+        _write_lineage_rows(fs, out_dir, run_id, r, m)
+        _tr(f"r{r} driver metrics+lineage", t3)
 
         _commit(fs, out_dir, str(r), {
             "processed": processed, "new": n_new,
@@ -683,10 +667,6 @@ def read_seen(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     return _read_tree(spark, f"{out_dir}/lineage")
-
-
-def read_runs(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/runs")
 
 
 def read_crawl_pages(

@@ -62,6 +62,12 @@ def _ensure_extract_registered(spark) -> None:
 BACKOFF_BASE_DELAY = 10.0
 BACKOFF_FACTOR = 1.5
 
+# frontier row count at or below which the round broadcasts the
+# frontier side of the fetch join; above it, a shuffle join runs
+# (against a bucketed corpus table only the frontier side moves)
+BROADCAST_FRONTIER_LIMIT = 2_000_000
+
+
 def trim_order():
     """Deterministic total order used for the max_pages trim (SURVEY.md §7.3)."""
     return [F.col("depth"), F.col("priority"), F.col("url_hash"), F.col("url")]
@@ -93,11 +99,9 @@ def build_round(
     round_no: int,
     *,
     round_seconds: float = 60.0,
-    salt_buckets: int = 16,
     max_admit: int | None = None,
     retries: int = 1,
     frontier_count: int | None = None,
-    broadcast_frontier_limit: int = 2_000_000,
     frontier_buckets: list[int] | None = None,
     frontier_urls: list[str] | None = None,
     backoff: DataFrame | None = None,
@@ -150,9 +154,7 @@ def build_round(
     disallowed = gated.where(~F.col("allowed"))
     allowed = gated.where(F.col("allowed"))
 
-    decided = politeness_decided(
-        allowed, round_seconds=round_seconds, salt_buckets=salt_buckets
-    )
+    decided = politeness_decided(allowed, round_seconds=round_seconds)
     admitted = decided.where(F.col("_admitted")).drop("_admitted")
     deferred = decided.where(~F.col("_admitted")).drop("_admitted")
 
@@ -198,7 +200,7 @@ def build_round(
         "url", "html", *(["status_code"] if has_status else [])
     )
     broadcast_mode = (
-        frontier_count is not None and frontier_count <= broadcast_frontier_limit
+        frontier_count is not None and frontier_count <= BROADCAST_FRONTIER_LIMIT
     )
     if broadcast_mode:
         ok = corpus.join(F.broadcast(admitted), "url").where(

@@ -63,16 +63,6 @@ FRONTIER_SNAPSHOT_SCHEMA = StructType(
     list(FRONTIER_SCHEMA.fields) + [StructField("is_new", BooleanType(), True)]
 )
 
-# URL-seen set: replacement for the Redis `download_requests` SADD set
-# (reference cache.py:91-97). Membership = anti-join on url_hash.
-SEEN_SCHEMA = StructType(
-    [
-        StructField("url_hash", LongType(), False),
-        StructField("url", StringType(), False),
-        StructField("round_added", IntegerType(), False),
-    ]
-)
-
 # Per-URL crawl outcome log: replacement for the `urls:<url>` Redis hash +
 # SQLite `urls` table (reference cache.py:61-79, config/sqlite.yml:29-58).
 CRAWL_LOG_SCHEMA = StructType(

@@ -379,11 +379,19 @@ def test_legacy_layout_fails_fast(spark, corpus):
             shutil.rmtree(out, ignore_errors=True)
 
 
-def test_bucketed_corpus_forced_shuffle_crawl(spark, corpus, full_run):
-    """Deep-web fallback (round.py shuffle path): broadcast_frontier_limit=0
-    forces the shuffle fetch join against a url_bucket-PARTITIONED corpus
-    with URL pushdown disabled; the crawl must stay oracle-identical and
-    the fetch scan must be partition-pruned to the frontier's buckets."""
+def test_bucketed_corpus_forced_shuffle_crawl(
+    spark, corpus, full_run, monkeypatch
+):
+    """Deep-web fallback (round.py shuffle path): BROADCAST_FRONTIER_LIMIT
+    patched to 0 forces the shuffle fetch join against a url_bucket-
+    PARTITIONED corpus, and FETCH_PUSHDOWN_LIMIT patched to 0 disables
+    URL pushdown; the crawl must stay oracle-identical and the fetch
+    scan must be partition-pruned to the frontier's buckets. The plan
+    probe proves the patch reaches build_round: the broadcast path's
+    fetch-miss anti-join is in the crawl_log plan at the default limit
+    and gone at 0."""
+    import sparkcrawler.plans.crawl as crawl_mod
+    import sparkcrawler.plans.round as round_mod
     from sparkcrawler.plans.crawl import seed_frontier
     from sparkcrawler.plans.round import build_round
     from sparkcrawler.oracle import url_hash64
@@ -398,24 +406,27 @@ def test_bucketed_corpus_forced_shuffle_crawl(spark, corpus, full_run):
         ).write.mode("overwrite").partitionBy("url_bucket").parquet(bdir)
         bucketed = spark.read.parquet(bdir)
 
-        # plan-shape probe: one round at forced shuffle over the
-        # bucketed corpus → the scan carries PartitionFilters on
-        # url_bucket (only the frontier's buckets are read)
-        fr = seed_frontier(spark, [seed])
-        plan = build_round(
-            bucketed, rob, fr, "probe", 0,
-            frontier_count=1,
-            frontier_buckets=[url_hash64(seed) % nb],
-            broadcast_frontier_limit=0,
-        )
-        pstr = plan.crawl_log._jdf.queryExecution().executedPlan().toString()
+        # plan-shape probe: one round over the bucketed corpus
+        def probe_plan() -> str:
+            plan = build_round(
+                bucketed, rob, seed_frontier(spark, [seed]), "probe", 0,
+                frontier_count=1,
+                frontier_buckets=[url_hash64(seed) % nb],
+            )
+            return plan.crawl_log._jdf.queryExecution().executedPlan().toString()
+
+        assert "LeftAnti" in probe_plan()
+        monkeypatch.setattr(round_mod, "BROADCAST_FRONTIER_LIMIT", 0)
+        monkeypatch.setattr(crawl_mod, "FETCH_PUSHDOWN_LIMIT", 0)
+        # forced shuffle → no fetch-miss anti-join, and the scan carries
+        # PartitionFilters on url_bucket (only the frontier's buckets
+        # are read)
+        pstr = probe_plan()
+        assert "LeftAnti" not in pstr, pstr[:2000]
         assert "PartitionFilters" in pstr and "url_bucket" in pstr, pstr[:2000]
 
         # end-to-end: full crawl down the shuffle path == broadcast path
-        cfg = CrawlConfig(
-            max_pages=10_000, broadcast_frontier_limit=0,
-            corpus_buckets=nb, fetch_pushdown_limit=0,
-        )
+        cfg = CrawlConfig(max_pages=10_000, corpus_buckets=nb)
         out = tempfile.mkdtemp(prefix="sc_shuffle_crawl_")
         try:
             crawl(spark, bucketed, rob, [seed], out, config=cfg)
@@ -427,3 +438,24 @@ def test_bucketed_corpus_forced_shuffle_crawl(spark, corpus, full_run):
             shutil.rmtree(out, ignore_errors=True)
     finally:
         shutil.rmtree(bdir, ignore_errors=True)
+
+
+def test_retry_rounds(spark):
+    """O3: a missing URL is retried `retries` times across rounds, then
+    closed ERROR/404 exactly once."""
+    layout, pages = synth_pages_df(spark, 40, 4)
+    out = tempfile.mkdtemp(prefix="sc_retry_")
+    try:
+        res = crawl(
+            spark, pages, robots_df(spark, layout),
+            ["https://host1.example/p/424242"], out,
+            config=CrawlConfig(max_pages=10, retries=3),
+        )
+        log = read_crawl_log(spark, out).collect()
+        assert len(log) == 1
+        assert log[0]["crawl_status"] == -2 and log[0]["status_code"] == 404
+        # closed in round 2 (attempts 0,1 deferred; attempt 2 is final)
+        assert log[0]["round"] == 2
+        assert res.rounds == 3
+    finally:
+        shutil.rmtree(out, ignore_errors=True)

@@ -100,3 +100,12 @@ def test_rows_only_queries_run(spark, name):
     rows = df.collect()
     assert len(rows) >= 1
     assert df.columns  # stable schema
+
+
+def test_catalog_specs_are_well_formed():
+    for name, spec in CATALOG.items():
+        assert callable(spec.spark), name
+        # SQL oracles must be non-empty strings when present
+        assert spec.sql is None or (
+            isinstance(spec.sql, str) and spec.sql.strip()
+        ), name

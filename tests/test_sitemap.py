@@ -12,6 +12,7 @@ from sparkcrawler.plans.sitemap import (
     parse_sitemap_py,
     prime_from_sitemap,
     sitemap_candidates,
+    sitemap_index_edges,
 )
 from sparkcrawler.sources.synth import page_url, robots_df, synth_pages_df
 
@@ -120,3 +121,14 @@ def test_prime_missing_sitemap_returns_none(spark):
         spark, pages, rob, page_url(1, 0), "run_p2"
     )
     assert extra is None and details is None
+
+
+def test_sitemap_index_edges(spark):
+    layout, pages = synth_pages_df(spark, 80, 4)
+    _, details = prime_from_sitemap(
+        spark, pages, robots_df(spark, layout), page_url(0, 0), "run_e"
+    )
+    edges = sitemap_index_edges(details).collect()
+    assert len(edges) == 1
+    assert edges[0]["index_url"] == "https://host0.example/sitemap-index.xml"
+    assert edges[0]["n_children"] == 2
