@@ -2,8 +2,9 @@
 
 ``entry`` runs the flagship crawl (BFS frontier over the deterministic
 synthetic web corpus) plus a read of the sf0.001 testdata;
-``queries``/``oracle_sql`` expose the engine's full query catalog
-(sparkcrawler.analytics.CATALOG) for the DuckDB differential check.
+``queries``/``oracle_sql`` expose the crawl-output query catalog
+(``sparkcrawler.queries.CATALOG``, five queries) for the DuckDB
+differential check.
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from sparkcrawler import analytics  # noqa: E402
+from sparkcrawler.queries import CATALOG, _demo_crawl_dir  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -34,7 +35,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     # materialize the fixed demo-crawl dir the crawl-query DuckDB
     # oracles read, so it exists whichever order the driver evaluates
-    analytics._demo_crawl_dir(spark)
+    _demo_crawl_dir(spark)
 
     layout, pages = synth_pages_df(spark, 150, 5)
     pages = pages.persist()
@@ -57,11 +58,14 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator group (SURVEY.md §2)."""
-    return analytics.queries()
+    """The crawl-output catalog, in ``CATALOG`` order."""
+    return {name: spec.spark for name, spec in CATALOG.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL for every SQL-expressible query; crawl-loop
-    queries (UDF extraction, iterative BFS) are rows-only checked."""
-    return analytics.oracle_sql()
+    """DuckDB SQL over the same files each catalog query reads."""
+    return {
+        name: spec.sql.strip()
+        for name, spec in CATALOG.items()
+        if spec.sql is not None
+    }

@@ -10,8 +10,9 @@ as a batched DataFrame pipeline:
 - robots.txt politeness becomes a broadcast dimension join,
 - link/text extraction run as Arrow-batched pandas UDFs over the
   ``html: binary`` column of a Common-Crawl-style ``pages`` corpus,
-- each crawl round commits an atomic snapshot (crawl_log / seen /
-  frontier / lineage) so a killed run resumes bit-for-bit.
+- each crawl round commits an atomic snapshot (crawl_log / frontier /
+  lineage; the seen set is a view over the frontier snapshots) so a
+  killed run resumes bit-for-bit.
 
 No code is copied from the reference; behavior contracts come from its
 test suite (see SURVEY.md §5) and are re-verified in ``tests/``.

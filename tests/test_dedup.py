@@ -1,78 +1,9 @@
-"""Unit tests for near-dup cluster resolution (operators/dedup.py):
-min-label propagation must equal exact connected components (computed
-by a pure-Python union-find oracle) on adversarial graph shapes."""
+"""Tests for the near-dup text helpers in ``analytics.py``: the LSH
+hot-bucket cap of the Jaccard pair search, and the zero-shuffle
+mapInPandas twins of the MinHash, winnowing and SimHash queries, which
+must reproduce their relational forms exactly."""
 
 from __future__ import annotations
-
-import pytest
-
-
-def _uf_components(pairs):
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {x: find(x) for x in parent}
-
-
-def _clusters(spark, pairs):
-    from sparkcrawler.operators.dedup import dedup_clusters
-
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    return {
-        r["doc_id"]: r["cluster_id"] for r in dedup_clusters(df).collect()
-    }
-
-
-@pytest.mark.parametrize(
-    "pairs",
-    [
-        # long chain: worst case for propagation (diameter = n)
-        [(i, i + 1) for i in range(12)],
-        # two components + a triangle + an isolated pair
-        [(1, 2), (2, 3), (1, 3), (10, 11), (20, 21), (21, 22)],
-        # star: hub with min id
-        [(0, i) for i in range(1, 9)],
-        # star: hub with MAX id (label must flow against edge direction)
-        [(100, i) for i in range(1, 9)],
-        # duplicate + self-ish pairs in both orders
-        [(5, 6), (6, 5), (5, 6), (7, 8)],
-    ],
-)
-def test_clusters_match_union_find(spark, pairs):
-    got = _clusters(spark, pairs)
-    want = _uf_components(pairs)
-    assert got == want
-
-
-def test_empty_pairs(spark):
-    from sparkcrawler.operators.dedup import dedup_clusters
-
-    df = spark.createDataFrame([], "id_a long, id_b long")
-    assert dedup_clusters(df).collect() == []
-
-
-def test_keep_per_cluster_includes_singletons(spark):
-    from sparkcrawler.operators.dedup import dedup_clusters, keep_per_cluster
-
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
-    docs = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 9)], "doc_id long"
-    )
-    out = {
-        r["cluster_id"]: (r["keep_doc_id"], r["cluster_size"])
-        for r in keep_per_cluster(docs, dedup_clusters(pairs)).collect()
-    }
-    assert out == {1: (1, 3), 9: (9, 1)}
 
 
 def test_jaccard_hot_bucket_cap(spark):
@@ -140,101 +71,3 @@ def test_arrow_twins_null_text(spark, tmp_path):
                  docs_simhash_arrow):
         ids = [r["doc_id"] for r in twin(spark, str(tmp_path)).collect()]
         assert ids == [1, 4], twin.__name__
-
-
-# ------------------- round 4: large-star/small-star components ----------
-
-
-def _uf_components(pairs):
-    """Pure-Python union-find oracle → {node: min-of-component}."""
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {x: find(x) for x in list(parent)}
-
-
-def _run_clusters(spark, pairs, **kw):
-    from sparkcrawler.operators.dedup import dedup_clusters
-
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    return {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup_clusters(df, **kw).collect()
-    }
-
-
-def test_star_components_match_union_find_random(spark):
-    import random
-
-    rng = random.Random(17)
-    pairs = [
-        (rng.randrange(400), rng.randrange(400)) for _ in range(300)
-    ]
-    pairs = [(a, b) for a, b in pairs if a != b]
-    want = _uf_components(pairs)
-    got_star = _run_clusters(spark, pairs, algorithm="star")
-    got_label = _run_clusters(spark, pairs, algorithm="label")
-    assert got_star == want
-    assert got_label == want
-
-
-def test_star_handles_long_chain_label_raises(spark):
-    """A 300-node chain: diameter 299 > the label algorithm's default
-    100-step budget (it must REFUSE, not return split clusters); the
-    star algorithm converges in O(log n) rounds and labels everything
-    with the chain minimum."""
-    import pytest as _pytest
-
-    chain = [(i, i + 1) for i in range(300)]
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        _run_clusters(spark, chain, algorithm="label")
-    got = _run_clusters(spark, chain, algorithm="star")
-    assert got == {i: 0 for i in range(301)}
-
-
-def test_star_keep_per_cluster_composes(spark):
-    """keep_per_cluster over star-resolved clusters: singletons kept."""
-    from sparkcrawler.operators.dedup import dedup_clusters, keep_per_cluster
-
-    pairs = spark.createDataFrame(
-        [(1, 5), (5, 9), (2, 7)], "id_a long, id_b long"
-    )
-    docs = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 5, 7, 9)], "doc_id long"
-    )
-    clusters = dedup_clusters(pairs, algorithm="star")
-    kept = {
-        r["cluster_id"]: (r["keep_doc_id"], r["cluster_size"])
-        for r in keep_per_cluster(docs, clusters).collect()
-    }
-    assert kept == {1: (1, 3), 2: (2, 2), 3: (3, 1)}
-
-
-@pytest.mark.parametrize("algorithm", ["label", "star"])
-def test_no_persisted_rdds_after_clusters(spark, algorithm):
-    """dedup_clusters must leave executor storage exactly as it found
-    it: lineage truncation now snapshots to temp parquet instead of
-    ``localCheckpoint`` (whose RDDs stay pinned until the
-    ContextCleaner races GC), so the check needs no gc.collect()."""
-    from sparkcrawler.operators.dedup import dedup_clusters
-
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(8)], "id_a long, id_b long"
-    )
-    out = dedup_clusters(df, algorithm=algorithm)
-    assert out.count() == 9
-    after = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert after <= before, f"persisted RDDs grew {before} -> {after}"
-    # the result stays readable after the run (snapshot dir is live)
-    assert len(out.collect()) == 9

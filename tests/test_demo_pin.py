@@ -6,7 +6,7 @@ must therefore travel via the in-dir _VERSION marker, never the name.
 
 import os
 
-from sparkcrawler import analytics as A
+from sparkcrawler import queries as A
 
 PINNED = "b34fdeb6b9"
 

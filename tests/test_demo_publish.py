@@ -1,17 +1,19 @@
-"""The demo/ANN publishers must build their tmp dirs on the DESTINATION
-filesystem (``analytics._DEMO_ROOT``), never under ``tempfile.tempdir``:
+"""The demo publishers must build their tmp dirs on the DESTINATION
+filesystem (``queries._DEMO_ROOT``), never under ``tempfile.tempdir``:
 with a cross-device TMPDIR the publish ``os.rename`` raises EXDEV, and a
 publisher that both built under TMPDIR and swallowed the OSError would
 silently discard the freshly built artifact and return a nonexistent
-path. Pin (a) TMPDIR is ignored and (b) a failed rename that did NOT
-lose a race re-raises instead of being swallowed."""
+path. Pin (a) TMPDIR is ignored, (b) a failed rename that did NOT
+lose a race re-raises instead of being swallowed, and (c) a fresh
+build a concurrent process published meanwhile is reused, never
+deleted."""
 
 from __future__ import annotations
 
 import os
 import tempfile
 
-import sparkcrawler.analytics as A
+import sparkcrawler.queries as A
 
 
 def test_outdeg_publisher_ignores_tmpdir(monkeypatch, tmp_path):
@@ -73,3 +75,39 @@ def test_failed_publish_rename_reraises(monkeypatch):
         import shutil
 
         shutil.rmtree(f"{A._DEMO_ROOT}/outdeg_test_exdev2", ignore_errors=True)
+
+
+def test_fresh_concurrent_publish_is_not_deleted(monkeypatch):
+    """A concurrent process publishes a FRESH outdeg dir while this one
+    builds: the publisher must keep it (a reader may hold its file
+    listing), drop its own build, and return the published path."""
+    import shutil
+
+    dest = f"{A._DEMO_ROOT}/outdeg_test_race"
+    shutil.rmtree(dest, ignore_errors=True)
+    monkeypatch.setattr(A, "_OUTDEG_DIR", dest)
+    real_mkdtemp = tempfile.mkdtemp
+    builds = []
+
+    def mkdtemp_then_concurrent_publish(*args, **kwargs):
+        tmp = real_mkdtemp(*args, **kwargs)
+        builds.append(tmp)
+        os.makedirs(dest, exist_ok=True)
+        for name, body in (
+            ("_READY", "ok"), ("_VERSION", A._demo_version()),
+            ("sentinel", "published by the other process"),
+        ):
+            with open(os.path.join(dest, name), "w") as fh:
+                fh.write(body)
+        return tmp
+
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp_then_concurrent_publish)
+    try:
+        out = A._outdegree_expected_dir()
+        assert os.path.exists(os.path.join(dest, "sentinel"))
+        assert out == dest
+        # its own sc_outdeg_build_* dir is dropped, not left behind
+        assert len(builds) == 1
+        assert not os.path.exists(builds[0])
+    finally:
+        shutil.rmtree(dest, ignore_errors=True)

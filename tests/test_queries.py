@@ -1,6 +1,8 @@
-"""Driver-contract differential tests: every CATALOG query vs its
-DuckDB oracle at sf0.01 — row count, column names, and values must
-match (mimics the driver's CORRECTNESS check)."""
+"""Differential tests: every catalog query vs its DuckDB oracle at
+sf0.01 — row count, column names, and values must match (mimics the
+driver's CORRECTNESS check). The catalog is the driver's crawl-output
+catalog (``sparkcrawler.queries``) plus the test-only
+``sparkcrawler.analytics`` catalog."""
 
 from __future__ import annotations
 
@@ -9,7 +11,9 @@ import math
 import duckdb
 import pytest
 
-from sparkcrawler.analytics import CATALOG
+from sparkcrawler import analytics, queries
+
+CATALOG = {**queries.CATALOG, **analytics.CATALOG}
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -53,13 +57,13 @@ ROWS_ONLY = sorted(n for n, s in CATALOG.items() if s.sql is None)
 @pytest.fixture(autouse=True)
 def no_persist_leak(request, spark):
     """Every catalog query must leave executor storage no fuller than it
-    found it: whatever a query persists internally (pagerank's edge
-    list, the crawl demo build's round caches)
-    must be unpersisted by the time its action returns — a long-lived
-    session running the catalog repeatedly at scale must not accrete
-    pinned blocks. Baseline-delta (not absolute-zero) plus gc.collect()
-    so the check cannot race the ContextCleaner over RDDs released
-    asynchronously by earlier test modules in the same session."""
+    found it: whatever a query persists internally (the crawl demo
+    build's round caches) must be unpersisted by the time its action
+    returns — a long-lived session running the catalog repeatedly at
+    scale must not accrete pinned blocks. Baseline-delta (not
+    absolute-zero) plus gc.collect() so the check cannot race the
+    ContextCleaner over RDDs released asynchronously by earlier test
+    modules in the same session."""
     import gc
 
     gc.collect()
@@ -103,9 +107,19 @@ def test_rows_only_queries_run(spark, name):
 
 
 def test_catalog_specs_are_well_formed():
+    import __spark_entry__ as e
+
     for name, spec in CATALOG.items():
         assert callable(spec.spark), name
         # SQL oracles must be non-empty strings when present
         assert spec.sql is None or (
             isinstance(spec.sql, str) and spec.sql.strip()
         ), name
+    # the driver serves exactly the crawl-output catalog, oracle texts
+    # verbatim; the test-only catalog shares none of its names
+    assert not set(queries.CATALOG) & set(analytics.CATALOG)
+    assert list(e.queries()) == list(queries.CATALOG)
+    oracles = e.oracle_sql()
+    assert list(oracles) == list(queries.CATALOG)
+    for name, sql in oracles.items():
+        assert sql == queries.CATALOG[name].sql.strip(), name
