@@ -64,8 +64,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB SQL over the same files each catalog query reads."""
-    return {
-        name: spec.sql.strip()
-        for name, spec in CATALOG.items()
-        if spec.sql is not None
-    }
+    return {name: spec.sql.strip() for name, spec in CATALOG.items()}

@@ -32,8 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 @dataclass(frozen=True)
 class QuerySpec:
     spark: Callable[[SparkSession, str], DataFrame]
-    sql: str | None          # DuckDB oracle (tables pre-registered as views)
-    doc: str = ""
+    sql: str  # DuckDB oracle (tables pre-registered as views)
 
 
 # Explicit schema of the driver's nation table: the scan skips

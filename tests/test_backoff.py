@@ -67,10 +67,19 @@ def _oracle(rl_corpus, cfg):
     )
 
 
-def test_429_terminal_after_retries_matches_oracle(spark, rl_corpus):
-    cfg = CrawlConfig(max_pages=24, retries=2, round_seconds=30.0)
-    res, log = _run(spark, rl_corpus, cfg)
-    ores = _oracle(rl_corpus, cfg)
+FULL_CFG = CrawlConfig(max_pages=24, retries=2, round_seconds=30.0)
+
+
+@pytest.fixture(scope="module")
+def full_run(spark, rl_corpus):
+    """The uninterrupted 429 crawl, run once for the module: the oracle
+    test checks it and the resume test compares against its log."""
+    return _run(spark, rl_corpus, FULL_CFG)
+
+
+def test_429_terminal_after_retries_matches_oracle(rl_corpus, full_run):
+    res, log = full_run
+    ores = _oracle(rl_corpus, FULL_CFG)
     assert _key(log) == _key(ores.log)
     assert res.visited == ores.visited
     # the throttled URLs show one observation row then a terminal 429
@@ -99,16 +108,15 @@ def test_backoff_throttles_host_budget(spark, rl_corpus):
     assert later and all(v <= 3 for v in later.values()), per_round
 
 
-def test_backoff_state_survives_resume(spark, rl_corpus):
-    cfg_full = CrawlConfig(max_pages=24, retries=2, round_seconds=30.0)
-    _, log_full = _run(spark, rl_corpus, cfg_full)
+def test_backoff_state_survives_resume(spark, rl_corpus, full_run):
+    _, log_full = full_run
     _, _, _, pages, rob = rl_corpus
     out = tempfile.mkdtemp(prefix="sc_backoff_resume_")
     try:
         crawl(spark, pages, rob, [page_url(RL_HOST, 0)], out,
               config=CrawlConfig(max_pages=24, retries=2,
                                  round_seconds=30.0, max_rounds=3))
-        crawl(spark, pages, rob, [page_url(RL_HOST, 0)], out, config=cfg_full)
+        crawl(spark, pages, rob, [page_url(RL_HOST, 0)], out, config=FULL_CFG)
         log2 = read_crawl_log(spark, out).collect()
         assert _key(log2) == _key(log_full)
     finally:

@@ -18,7 +18,7 @@ CATALOG = {**queries.CATALOG, **analytics.CATALOG}
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
+    "lineitem", "events", "documents",
 ]
 
 
@@ -50,8 +50,7 @@ def _norm(rows, cols):
     return sorted(out)
 
 
-SQL_QUERIES = sorted(n for n, s in CATALOG.items() if s.sql is not None)
-ROWS_ONLY = sorted(n for n, s in CATALOG.items() if s.sql is None)
+SQL_QUERIES = sorted(CATALOG)
 
 
 @pytest.fixture(autouse=True)
@@ -98,23 +97,13 @@ def test_query_matches_duckdb_oracle(spark, duck, name):
         raise AssertionError(f"{name}: value mismatch, first diffs: {diff}")
 
 
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_queries_run(spark, name):
-    df = CATALOG[name].spark(spark, SF_DIR)
-    rows = df.collect()
-    assert len(rows) >= 1
-    assert df.columns  # stable schema
-
-
 def test_catalog_specs_are_well_formed():
     import __spark_entry__ as e
 
     for name, spec in CATALOG.items():
         assert callable(spec.spark), name
-        # SQL oracles must be non-empty strings when present
-        assert spec.sql is None or (
-            isinstance(spec.sql, str) and spec.sql.strip()
-        ), name
+        # every spec carries its oracle: a non-empty SQL string
+        assert isinstance(spec.sql, str) and spec.sql.strip(), name
     # the driver serves exactly the crawl-output catalog, oracle texts
     # verbatim; the test-only catalog shares none of its names
     assert not set(queries.CATALOG) & set(analytics.CATALOG)
