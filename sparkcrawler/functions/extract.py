@@ -20,12 +20,19 @@ Text extraction (north-rule addition; the reference stores raw HTML
 only) is the concatenation of character data in document order — the
 same routine generates the corpus ``text`` column, so the UDF output is
 byte-identical by construction and verified byte-for-byte in tests.
+
+The crawl's UDF path (:func:`extract_page_py`) canonicalizes through a
+per-worker memo: pages repeat the same hrefs, so each distinct href is
+canonicalized once per Python worker instead of once per occurrence.
+:func:`extract_links_py` and the oracle call :func:`canonicalize`
+directly and stay the memo-free reference.
 """
 
 from __future__ import annotations
 
 from html.parser import HTMLParser
 from typing import Iterable
+from urllib.parse import urlsplit
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -158,6 +165,36 @@ def extract_text_py(html) -> str:
     return "".join(parser.chunks)
 
 
+# canonicalize memo of extract_page_py; module-level, so it lives as long
+# as the Python worker (across tasks and rounds when workers are reused)
+_CANON_MEMO: dict[tuple[str, str], str | None] = {}
+# a worker may serve a whole crawl: clearing at the cap bounds its memory
+# (tens of MB) however many distinct hrefs the corpus holds
+_CANON_MEMO_CAP = 1 << 16
+_MISS = object()
+
+
+def _canonicalize_memo(url: str, scheme: str | None, href: str) -> str | None:
+    """``canonicalize(url, href)`` through the worker memo. ``urljoin``
+    resolves an href that has a netloc (``https://h/p``, ``//h/p``)
+    against the page only through the page's ``scheme``, so such hrefs
+    are keyed on (scheme, href) and shared by every page of that scheme.
+    Any other href (relative, root-relative, ``http:g``, empty) is keyed
+    on (page URL, href). ``scheme`` None bypasses the memo."""
+    if scheme is None:
+        return canonicalize(url, href)
+    try:
+        key = (scheme, href) if urlsplit(href).netloc else (url, href)
+    except ValueError:
+        return canonicalize(url, href)
+    link = _CANON_MEMO.get(key, _MISS)
+    if link is _MISS:
+        if len(_CANON_MEMO) >= _CANON_MEMO_CAP:
+            _CANON_MEMO.clear()
+        link = _CANON_MEMO[key] = canonicalize(url, href)
+    return link
+
+
 def extract_page_py(url: str, html) -> tuple[list[str], str]:
     """(canonical links all-hosts, extracted text) in ONE tokenizer pass."""
     content = _as_str(html)
@@ -169,10 +206,16 @@ def extract_page_py(url: str, html) -> tuple[list[str], str]:
         parser.close()
     except Exception:
         return [], ""
+    scheme = None
+    if url:  # a falsy page URL leaves hrefs unresolved: no memo
+        try:
+            scheme = urlsplit(url).scheme
+        except ValueError:
+            pass
     seen: set[str] = set()
     out: list[str] = []
     for href in parser.hrefs:
-        link = canonicalize(url, href)
+        link = _canonicalize_memo(url, scheme, href)
         if link and link not in seen:
             seen.add(link)
             out.append(link)

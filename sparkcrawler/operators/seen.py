@@ -19,7 +19,8 @@ from pyspark.sql import DataFrame
 def anti_join_seen(candidates: DataFrame, seen: DataFrame) -> DataFrame:
     """Rows of ``candidates`` whose ``url_hash`` is NOT in ``seen`` — the
     one exact membership test: a JVM left-anti join on ``url_hash``
-    (AQE broadcasts the smaller side or shuffles both)."""
+    (the planner broadcasts ``seen`` while its file-size estimate is
+    under ``spark.sql.autoBroadcastJoinThreshold``, else shuffles both)."""
     return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
 
 
@@ -32,8 +33,8 @@ class ExactSeenShards:
     ``read_seen`` view the crawl already writes). Nothing is persisted,
     packed or rebuilt on resume: about 1% of candidates are new, so a
     membership structure in front of the join would let few of them
-    skip it. The seen scan grows with the crawl; AQE picks a broadcast
-    or a shuffle join for it.
+    skip it. The seen scan grows with the crawl; the planner picks a
+    broadcast or a shuffle join for it from the scan's file sizes.
 
     :meth:`update_from_df` adds rows to a lazily-unioned seen set for
     callers that hold one themselves; the crawl passes its seen view

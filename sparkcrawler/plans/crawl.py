@@ -11,10 +11,12 @@ is exactly the previously committed parquet.
 
 Job budget: a round submits TWO actions — the crawl_log write (the one
 extract-UDF execution) and the next-frontier write (discovery + seen
-dedup). Each runs as several Spark jobs (broadcast builds and AQE query
-stages): ``plans.crawl.jobs_per_round`` in ``crawlbench`` measures
-about 15 on ``bulk_crawl`` and 21–22 on ``polite_crawl``, whose corpus
-carries a ``status_code`` column. Everything else the driver derives
+dedup). Each runs as several Spark jobs, one per broadcast build plus
+the write itself; ``crawl()`` runs without AQE, so no query stage runs
+as a job of its own. ``plans.crawl.jobs_per_round`` in ``crawlbench``
+measures 8 on ``bulk_crawl`` and 9.3 on ``polite_crawl``, whose corpus
+carries a ``status_code`` column (15 and 21.3 with AQE on).
+Everything else the driver derives
 from the just-written parquet files (row counts, per-file lineage
 counters, run events): a Spark job costs seconds of
 scheduling in local mode and driver round-trips on a cluster, while a
@@ -374,6 +376,9 @@ def _check_layout(fs: LocalFS, out_dir: str) -> None:
         )
 
 
+_AQE = "spark.sql.adaptive.enabled"
+
+
 def crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -396,7 +401,38 @@ def crawl(
     ``fs`` routes all driver-side state I/O (markers, metrics reads,
     lineage writes) — local disk by default, object-store backends are
     drop-in (:mod:`sparkcrawler.fs`).
+
+    The call runs with AQE off (``spark.sql.adaptive.enabled=false``) and
+    restores the caller's value on exit, whether it returns or raises.
+    Each AQE query stage runs as a Spark job of its own, which is most of
+    a small round's fixed cost, and AQE has little to adapt here: every
+    crawl shuffle is keyed on a hash or a salted host, so skew-join
+    splitting has nothing to split, and ``get_spark`` sizes the shuffle
+    partitions to the core count. The setting is session-wide, so other
+    queries run on the same session during the call run without AQE too.
     """
+    aqe = spark.conf.get(_AQE)
+    spark.conf.set(_AQE, "false")
+    try:
+        return _crawl(
+            spark, pages, robots, seed_urls, out_dir, run_id, config,
+            extra_frontier, fs,
+        )
+    finally:
+        spark.conf.set(_AQE, aqe)
+
+
+def _crawl(
+    spark: SparkSession,
+    pages: DataFrame,
+    robots: DataFrame,
+    seed_urls: list[str],
+    out_dir: str,
+    run_id: str,
+    config: CrawlConfig | None,
+    extra_frontier: DataFrame | None,
+    fs: LocalFS | None,
+) -> CrawlResult:
     cfg = config or CrawlConfig()
     fs = fs or DEFAULT_FS
     t0 = time.time()
@@ -643,21 +679,39 @@ def crawl(
 # ------------------------------------------------------------- read side --
 
 
-def _read_tree(spark: SparkSession, path: str) -> DataFrame:
-    """Read all round subdirs (r0, r1, ...) under a state table dir."""
-    return spark.read.option("recursiveFileLookup", "true").parquet(path)
+def _read_committed(
+    spark: SparkSession, out_dir: str, table: str, schema, ahead: int = 0
+) -> DataFrame:
+    """The round dirs of ``table`` that belong to committed rounds:
+    r0..r{K+ahead}, where K is the highest round with a
+    ``_committed_<K>`` marker. A round exists once its marker does, so
+    the dirs of a round killed between its writes and its marker are
+    never read. No committed dir → an empty frame of ``schema``."""
+    k = _max_committed_round(DEFAULT_FS, out_dir)
+    paths = [] if k is None else _committed_dirs(
+        DEFAULT_FS, out_dir, table, k + ahead
+    )
+    if not paths:
+        return spark.createDataFrame([], schema)
+    return spark.read.parquet(*paths)
 
 
 def read_crawl_log(spark: SparkSession, out_dir: str) -> DataFrame:
-    return _read_tree(spark, f"{out_dir}/crawl_log")
+    return _read_committed(
+        spark, out_dir, "crawl_log", schemas.CRAWL_LOG_SCHEMA
+    )
 
 
 def read_seen(spark: SparkSession, out_dir: str) -> DataFrame:
     """URL-seen set (url_hash, url, round_added) — a view over the
     committed frontier snapshots' ``is_new`` rows; nothing is stored
-    twice. The reference's Redis SADD set (cache.py:91-97) analog."""
+    twice. Round K writes and commits ``frontier/r{K+1}``, so the view
+    reads one snapshot past the last committed round. The reference's
+    Redis SADD set (cache.py:91-97) analog."""
     return (
-        _read_tree(spark, f"{out_dir}/frontier")
+        _read_committed(
+            spark, out_dir, "frontier", schemas.FRONTIER_SNAPSHOT_SCHEMA, 1
+        )
         .where(F.col("is_new"))
         .select(
             "url_hash", "url", F.col("round").cast("int").alias("round_added")
@@ -666,7 +720,7 @@ def read_seen(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    return _read_tree(spark, f"{out_dir}/lineage")
+    return _read_committed(spark, out_dir, "lineage", schemas.LINEAGE_SCHEMA)
 
 
 def read_crawl_pages(

@@ -1,9 +1,11 @@
 """SparkSession factory tuned for the crawl workload.
 
 Local-mode testing stands in for a multi-executor cluster; every config
-here is chosen so the same code path scales: AQE for runtime re-plan and
-skew-join splitting, Arrow for the pandas-UDF extract stage, UTC session
-timezone so results compare bit-for-bit against the DuckDB oracle.
+here is chosen so the same code path scales: shuffle partitions sized to
+the cores, Arrow for the pandas-UDF extract stage, UTC session timezone
+so results compare bit-for-bit against the DuckDB oracle. AQE stays on
+for the session's other queries; ``crawl()`` switches it off for the
+duration of each call.
 """
 
 from __future__ import annotations
@@ -63,7 +65,10 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back to
     ``local[*]``). ``shuffle_partitions`` defaults to the core count —
     the 200 default over-parallelizes small local runs and
-    under-parallelizes big ones.
+    under-parallelizes big ones. Under ``spark-submit`` it defaults to
+    the submitted cluster's ``defaultParallelism`` unless the submitter
+    set ``spark.sql.shuffle.partitions``: the crawl runs without AQE, so
+    nothing would coalesce 200 partitions.
     """
     # Under spark-submit the JVM gateway already exists and carries the
     # submitted --master / conf (client AND cluster deploy-mode set
@@ -114,5 +119,13 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    if (
+        under_submit
+        and shuffle_partitions is None
+        and not sc.getConf().contains("spark.sql.shuffle.partitions")
+    ):
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(sc.defaultParallelism))
+    sc.setLogLevel("WARN")
     return spark

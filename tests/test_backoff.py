@@ -44,7 +44,8 @@ def rl_corpus(spark):
 
 def _key(rows):
     return sorted(
-        (r["url"], r["depth"], r["crawl_status"], r["status_code"]) for r in rows
+        (r["url"], r["depth"], r["crawl_status"], r["status_code"], r["round"])
+        for r in rows
     )
 
 

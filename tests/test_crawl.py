@@ -82,7 +82,10 @@ def _oracle(corpus, seed, cfg):
 
 
 def _log_key(rows):
-    return sorted((r["url"], r["depth"], r["crawl_status"], r["status_code"]) for r in rows)
+    return sorted(
+        (r["url"], r["depth"], r["crawl_status"], r["status_code"], r["round"])
+        for r in rows
+    )
 
 
 # ---------------------------------------------------------- shared runs --
@@ -459,3 +462,73 @@ def test_retry_rounds(spark):
         assert res.rounds == 3
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_readers_skip_uncommitted_rounds(spark, full_run, tmp_path):
+    """A round exists once its commit marker does: with the markers of
+    the last rounds deleted (a kill after a round's writes, before its
+    marker), every reader returns exactly the committed rounds' rows of
+    the uninterrupted crawl. Round K commits frontier r{K+1}, so the
+    seen view keeps the is_new rows added up to that snapshot."""
+    import os
+
+    _, res, log, _, out = full_run
+    copy = str(tmp_path / "out")
+    shutil.copytree(out, copy)
+    lineage = read_lineage(spark, out).collect()
+    seen = read_seen(spark, out).collect()
+    last = res.round_stats[-1]["round"]
+    assert last >= 2
+    for k in (last, last - 1):
+        os.remove(os.path.join(copy, f"_committed_{k}"))
+        assert _log_key(read_crawl_log(spark, copy).collect()) == _log_key(
+            [r for r in log if r["round"] < k]
+        )
+        assert sorted(read_lineage(spark, copy).collect()) == sorted(
+            r for r in lineage if r["round"] < k
+        )
+        assert sorted(read_seen(spark, copy).collect()) == sorted(
+            r for r in seen if r["round_added"] <= k
+        )
+
+
+AQE = "spark.sql.adaptive.enabled"
+
+
+def test_crawl_runs_without_aqe_and_restores_it(spark, corpus, monkeypatch):
+    """Each crawl() call plans its rounds with AQE off and hands the
+    caller's setting back, whether it returns or raises."""
+    import sparkcrawler.plans.crawl as crawl_mod
+
+    _, _, _, pages, rob = corpus
+    real_build_round = crawl_mod.build_round
+    aqe_in_round = []
+
+    def spy(*args, **kwargs):
+        aqe_in_round.append(spark.conf.get(AQE))
+        if fail:
+            raise RuntimeError("round build failed")
+        return real_build_round(*args, **kwargs)
+
+    monkeypatch.setattr(crawl_mod, "build_round", spy)
+    cfg = CrawlConfig(max_pages=1)
+    try:
+        for caller in ("true", "false"):
+            spark.conf.set(AQE, caller)
+            for fail in (False, True):
+                out = tempfile.mkdtemp(prefix="sc_aqe_")
+                try:
+                    if fail:
+                        with pytest.raises(RuntimeError, match="round build"):
+                            crawl(spark, pages, rob, [page_url(1, 0)], out,
+                                  config=cfg)
+                    else:
+                        res = crawl(spark, pages, rob, [page_url(1, 0)], out,
+                                    config=cfg)
+                        assert res.visited == 1
+                finally:
+                    shutil.rmtree(out, ignore_errors=True)
+                assert spark.conf.get(AQE) == caller
+    finally:
+        spark.conf.set(AQE, "true")
+    assert aqe_in_round == ["false"] * 4

@@ -98,3 +98,66 @@ def test_same_host_filter_jvm_side_matches_oracle(spark):
     )
     for r in df:
         assert list(r["links"]) == oracle_links(r["url"], bytes(r["html"])), r["url"]
+
+
+# hrefs whose canonical form depends on the page differently: absolute,
+# scheme-relative (shared by http and https pages), root-relative,
+# relative, same-scheme without netloc (`http:g` resolves against the
+# page), empty, fragment-only, default ports and upper-case schemes
+MEMO_PAGES = [
+    "http://h/p/a",
+    "https://h/p/a",
+    "https://h/q/b?x=1",
+    "http://other.example/",
+]
+MEMO_HREFS = [
+    "//h/p",
+    "//H:443/p#f",
+    "//h:80/p",
+    "https://h/p?b=2&a=1",
+    "HTTPS://H:443/P#x",
+    "HTTP://h:80",
+    "http:g",
+    "https:g",
+    "/top",
+    "rel/x",
+    "../up",
+    "",
+    "#frag",
+    "?q=1",
+    "mailto:a@b",
+    "javascript:void(0)",
+]
+
+
+def test_canonicalize_memo_matches_plain_calls(monkeypatch):
+    from sparkcrawler.functions import extract
+    from sparkcrawler.functions.urlnorm import canonicalize
+
+    monkeypatch.setattr(extract, "_CANON_MEMO", {})
+    html = "".join(f'<a href="{h}">x</a>' for h in MEMO_HREFS)
+    for _warm in (False, True):
+        for page in MEMO_PAGES:
+            scheme = page.split(":", 1)[0]
+            for href in MEMO_HREFS:
+                assert extract._canonicalize_memo(page, scheme, href) == (
+                    canonicalize(page, href)
+                ), (page, href)
+            links, _ = extract.extract_page_py(page, html)
+            assert links == extract_links_py(page, html), page
+    assert extract._CANON_MEMO
+
+
+def test_canonicalize_memo_cleared_at_cap(monkeypatch):
+    from sparkcrawler.functions import extract
+    from sparkcrawler.functions.urlnorm import canonicalize
+
+    monkeypatch.setattr(extract, "_CANON_MEMO", {})
+    monkeypatch.setattr(extract, "_CANON_MEMO_CAP", 3)
+    sizes = []
+    for i in range(7):
+        href = f"/p/{i}"
+        link = extract._canonicalize_memo("https://h/", "https", href)
+        assert link == canonicalize("https://h/", href)
+        sizes.append(len(extract._CANON_MEMO))
+    assert sizes == [1, 2, 3, 1, 2, 3, 1]

@@ -59,6 +59,7 @@ print("PYFILES_PROBE " + json.dumps({
     "driver": sparkcrawler.__file__,
     "workers": worker_paths,
     "master": spark.sparkContext.master,
+    "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
 }))
 """
 
@@ -106,6 +107,9 @@ def test_spark_submit_pyfiles_self_contained(tmp_path):
         "sparkcrawler.zip" in p for p in info["workers"]), info
     # get_spark respected the submitted master instead of forcing local[*]
     assert info["master"] == "local[4]", info
+    # without AQE nothing coalesces Spark's 200 default: get_spark sizes
+    # the crawl's shuffles to the submitted master's parallelism
+    assert info["shuffle_partitions"] == "4", info
     # the crawl itself completed and committed state under out_dir
     crawl_json = [ln for ln in res.stdout.splitlines()
                   if ln.startswith("{") and "visited" in ln]

@@ -107,6 +107,13 @@ def test_robots_from_corpus_matches_handbuilt_dim(spark):
     assert f"host{layout.n_hosts - 1}.example" not in parsed
 
 
+def _log_key(rows):
+    return sorted(
+        (r["url"], r["depth"], r["crawl_status"], r["status_code"], r["round"])
+        for r in rows
+    )
+
+
 def test_crawl_with_parsed_robots_matches_oracle(spark):
     """End-to-end: dim parsed from corpus content, crawl == BFS oracle
     (robots gate + crawl_delay budget both come from the parse)."""
@@ -131,9 +138,7 @@ def test_crawl_with_parsed_robots_matches_oracle(spark):
         pages_map, robots_map, [page_url(0, 0)],
         max_pages=cfg.max_pages, round_seconds=cfg.round_seconds,
     )
-    got = sorted((r["url"], r["depth"], r["crawl_status"]) for r in log)
-    want = sorted((r["url"], r["depth"], r["crawl_status"]) for r in ores.log)
-    assert got == want
+    assert _log_key(log) == _log_key(ores.log)
 
 
 def test_parsed_dim_equivalent_to_handbuilt_in_gate(spark):
@@ -148,12 +153,7 @@ def test_parsed_dim_equivalent_to_handbuilt_in_gate(spark):
             out = tempfile.mkdtemp(prefix="sc_dimcmp_")
             try:
                 crawl(spark, pages, dim, [page_url(0, 0)], out, config=cfg)
-                logs.append(
-                    sorted(
-                        (r["url"], r["depth"], r["crawl_status"], r["status_code"])
-                        for r in read_crawl_log(spark, out).collect()
-                    )
-                )
+                logs.append(_log_key(read_crawl_log(spark, out).collect()))
             finally:
                 shutil.rmtree(out, ignore_errors=True)
     finally:
