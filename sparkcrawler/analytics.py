@@ -1,5 +1,5 @@
-"""Test-only analytics catalog: TPC-H-style, event, text-dedup and
-media queries over the driver-provided testdata star schema.
+"""Test-only analytics catalog: TPC-H-style, event, text and media
+queries over the driver-provided testdata star schema.
 
 No crawl calls this module and the driver contract does not serve it:
 ``__spark_entry__`` serves the crawl-output catalog in
@@ -18,40 +18,10 @@ tiebreak column so the selected row *set* is deterministic.
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from sparkcrawler.queries import QuerySpec
-
-_SNAP_DIRS: set[str] = set()
-
-
-def _cleanup_snap_dirs() -> None:
-    for d in list(_SNAP_DIRS):
-        shutil.rmtree(d, ignore_errors=True)
-
-
-atexit.register(_cleanup_snap_dirs)
-
-
-def _snapshot(df: DataFrame) -> DataFrame:
-    """Eagerly materialize a small intermediate to a temp parquet dir
-    and read it back, so a plan that references it several times
-    computes it ONCE per query invocation instead of once per subtree.
-    Unlike ``persist``/``localCheckpoint`` this pins no executor
-    storage (the ``no_persist_leak`` contract: every catalog query
-    leaves storage empty), and unlike a cache it is recomputed from the
-    parquet inputs on every invocation — nothing survives across runs.
-    The dir is deleted at interpreter exit."""
-    out = tempfile.mkdtemp(prefix="sc_q_snap_")
-    _SNAP_DIRS.add(out)
-    df.write.mode("overwrite").parquet(out)
-    return df.sparkSession.read.parquet(out)
 
 
 # Explicit schemas for the driver-provided testdata tables: a scan
@@ -454,858 +424,6 @@ def _words(spark, sf_dir):
     return _words_of(_t(spark, sf_dir, "documents"))
 
 
-def docs_dedup_exact(spark, sf_dir):
-    """Exact dedup: hash-groupBy keeping the min doc_id (J1 analog)."""
-    docs = _t(spark, sf_dir, "documents", wide=False)
-    return (
-        docs.groupBy(F.md5(F.col("text").cast("binary")).alias("text_hash"))
-        .agg(
-            F.count(F.lit(1)).alias("n_copies"),
-            F.min("doc_id").alias("keep_doc_id"),
-        )
-        .orderBy("text_hash")
-    )
-
-
-DEDUP_SQL = """
-SELECT md5(text) AS text_hash, count(*) AS n_copies,
-       min(doc_id) AS keep_doc_id
-FROM documents GROUP BY 1 ORDER BY text_hash
-"""
-
-# MinHash: k=64 permutations from ONE md5 per word. The word's 60-bit
-# md5 prefix becomes an integer h (exact in both engines), and the i-th
-# permutation is the classic (a_i·h + b_i) mod p universal hash with
-# p = 2^31 − 1 — all multiplications stay below 2^63, so Spark and
-# DuckDB compute bit-identical signatures with no overflow semantics in
-# play. 16 bands × 4 rows for LSH (catch probability ≈0.89 at J=0.6).
-_MINHASH_K = 64
-_MINHASH_BANDS = 16
-_MH_ROWS = _MINHASH_K // _MINHASH_BANDS
-_MH_MOD = 2147483647  # 2^31 - 1
-_MH_A = [(1103515245 * (i + 1)) % _MH_MOD for i in range(_MINHASH_K)]
-_MH_B = [(12345 + 7919 * i) % _MH_MOD for i in range(_MINHASH_K)]
-
-_MH_HM_SQL = (
-    "('0x' || substr(md5(w), 1, 15))::BIGINT % 2147483647"
-)
-
-
-def _mh_words_sql(src: str = "documents") -> str:
-    """Word→hash rows; ``src`` is any (doc_id, text) relation name."""
-    return (
-        "SELECT doc_id, " + _MH_HM_SQL + " AS hm FROM "
-        f"(SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM {src}) "
-        "WHERE w <> ''"
-    )
-
-
-def _mh_sig_sql(src: str = "documents") -> str:
-    return (
-        "SELECT doc_id, "
-        + ", ".join(
-            f"min((hm * {a} + {b}) % {_MH_MOD}) AS g{i}"
-            for i, (a, b) in enumerate(zip(_MH_A, _MH_B))
-        )
-        + f" FROM ({_mh_words_sql(src)}) GROUP BY doc_id"
-    )
-
-
-_MH_WORDS_SQL = _mh_words_sql()
-_MH_SIG_SQL = _mh_sig_sql()
-
-
-def _minhash_sig_of(docs: DataFrame, source: str = "relational") -> DataFrame:
-    """The shared k=64 signature table (doc_id, g0..g63) over any
-    (doc_id, text) DataFrame.
-
-    ``source`` picks the physical form: ``"relational"`` (explode words
-    → groupBy min — the shape the DuckDB oracle mirrors term-for-term)
-    or ``"arrow"`` (the zero-shuffle mapInPandas pass, identical values
-    — proven by docs_minhash_arrow sharing the relational oracle). The
-    LSH/Jaccard/cluster pipeline consumes the arrow form, so at corpus
-    scale no per-word exploded rows ever cross a shuffle to build
-    signatures."""
-    if source == "arrow":
-        return _minhash_sig_arrow_of(docs)
-    # MinHash is set semantics: min over the doc's word MULTISET equals
-    # min over its word SET, so dedup within the doc at the array level
-    # (array_distinct, still inside the scan task — zero extra shuffle)
-    # before paying md5+conv per row. Distinct words per doc is never
-    # more than occurrences, so this only removes work (A/B: 1.62 vs
-    # 1.96s at sf1.0). Values are bit-identical (min over the same set).
-    words = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(F.filter(F.split("text", " "), lambda w: w != ""))
-        ).alias("w"),
-    )
-    hm = (
-        F.conv(F.substring(F.md5(F.col("w").cast("binary")), 1, 15), 16, 10)
-        .cast("long") % _MH_MOD
-    )
-    words = words.select("doc_id", hm.alias("hm"))
-    aggs = [
-        F.min((F.col("hm") * F.lit(a) + F.lit(b)) % _MH_MOD).alias(f"g{i}")
-        for i, (a, b) in enumerate(zip(_MH_A, _MH_B))
-    ]
-    return words.groupBy("doc_id").agg(*aggs)
-
-
-def _minhash_sig(spark, sf_dir):
-    return _minhash_sig_of(_t(spark, sf_dir, "documents"))
-
-
-def _band_cols():
-    """16 LSH band keys: md5 over each 4-value slice of the signature."""
-    cols = []
-    for j in range(_MINHASH_BANDS):
-        parts = [
-            F.col(f"g{4 * j + r}").cast("string") for r in range(_MH_ROWS)
-        ]
-        cols.append(F.substring(F.md5(F.concat_ws("-", *parts)), 1, 16))
-    return cols
-
-
-def _band_sql(j: int) -> str:
-    parts = ", ".join(f"g{4 * j + r}" for r in range(_MH_ROWS))
-    return f"substr(md5(concat_ws('-', {parts})), 1, 16)"
-
-
-def docs_minhash(spark, sf_dir):
-    """Word-level MinHash signature (k=64) — the shingle→minhash step of
-    near-dup detection, emitted as one joined string per doc."""
-    sig = _minhash_sig(spark, sf_dir)
-    parts = [F.col(f"g{i}").cast("string") for i in range(_MINHASH_K)]
-    return sig.select(
-        "doc_id", F.concat_ws("-", *parts).alias("sig")
-    ).orderBy("doc_id")
-
-
-MINHASH_SQL = f"""
-WITH sig AS ({_MH_SIG_SQL})
-SELECT doc_id, concat_ws('-', {", ".join(f"g{i}" for i in range(_MINHASH_K))}) AS sig
-FROM sig ORDER BY doc_id
-"""
-
-
-def _lsh_membership_of(docs: DataFrame, source: str = "relational") -> DataFrame:
-    """(doc_id, band_id, band_key) — each doc lands in 16 LSH buckets."""
-    sig = _minhash_sig_of(docs, source=source)
-    return sig.select(
-        "doc_id", F.posexplode(F.array(*_band_cols())).alias("band_id", "band_key")
-    ).select("doc_id", (F.col("band_id") + 1).cast("int").alias("band_id"), "band_key")
-
-
-def _lsh_membership(spark, sf_dir, source: str = "relational"):
-    return _lsh_membership_of(_t(spark, sf_dir, "documents"), source=source)
-
-
-def _lsh_member_sql(src: str = "documents") -> str:
-    return (
-        f"SELECT doc_id, CAST(generate_subscripts(bands, 1) AS INTEGER) AS band_id, "
-        f"unnest(bands) AS band_key FROM ("
-        f"SELECT doc_id, [{', '.join(_band_sql(j) for j in range(_MINHASH_BANDS))}] "
-        f"AS bands FROM ({_mh_sig_sql(src)}))"
-    )
-
-
-_LSH_MEMBER_SQL = _lsh_member_sql()
-
-
-def docs_lsh_buckets(spark, sf_dir):
-    """LSH banding over the k=64 minhash signature: bucket = (band_id,
-    band slice hash); buckets with >1 doc are the candidate near-dup
-    groups — candidate generation is bucket-local, never all-pairs.
-    Consumes the Arrow-pass signature (same values, no shuffle)."""
-    return (
-        _lsh_membership(spark, sf_dir, source="arrow")
-        .groupBy("band_id", "band_key")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("doc_id").alias("sample_doc"),
-        )
-        .where(F.col("n_docs") > 1)
-        .orderBy("band_id", "band_key")
-    )
-
-
-LSH_SQL = f"""
-SELECT band_id, band_key, count(*) AS n_docs, min(doc_id) AS sample_doc
-FROM ({_LSH_MEMBER_SQL})
-GROUP BY band_id, band_key HAVING count(*) > 1
-ORDER BY band_id, band_key
-"""
-
-
-def _jaccard_pairs_of(
-    docs: DataFrame, threshold: float = 0.6,
-    max_bucket: int | None = None,
-    source: str = "arrow",
-) -> DataFrame:
-    """Verified near-dup pairs (id_a < id_b, jaccard ≥ threshold) over
-    any (doc_id, text) DataFrame. Candidates come from the LSH buckets
-    (co-bucketed in ≥1 band) — the word self-join touches only
-    candidate pairs, never all pairs.
-
-    ``max_bucket`` (off by default, so the oracle contract is
-    unchanged): skip LSH buckets holding more than this many docs
-    before pairing. At corpus scale a template/boilerplate cluster
-    makes some buckets near-complete graphs — candidate pairs grow
-    quadratically in the bucket size (the synthetic corpus reproduces
-    this: one ~2300-doc component at sf0.1 → 7M verified pairs). A
-    production dedup caps hot buckets and routes their docs to exact
-    dedup on a boilerplate-stripped key instead; the cap is one
-    groupBy(count) + semi-join, shuffle-free beyond what banding
-    already pays.
-
-    Signatures feed in through the zero-shuffle Arrow pass by default
-    (``source`` — see :func:`_minhash_sig_of`); values are identical to
-    the relational form, so the DuckDB oracles are unchanged."""
-    member = _lsh_membership_of(docs, source=source)
-    if max_bucket is not None:
-        small = (
-            member.groupBy("band_id", "band_key")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") <= max_bucket)
-            .select("band_id", "band_key")
-        )
-        member = member.join(small, ["band_id", "band_key"], "left_semi")
-    a = member.alias("a")
-    b = member.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .distinct()
-    )
-    w = _words_of(docs).dropDuplicates(["doc_id", "w"])
-    counts = w.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    wa = w.select(F.col("doc_id").alias("id_a"), "w")
-    wb = w.select(F.col("doc_id").alias("_idb"), F.col("w").alias("w2"))
-    inter = (
-        pairs.join(wa, "id_a")
-        .join(wb, (F.col("id_b") == F.col("_idb")) & (F.col("w") == F.col("w2")))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("ninter"))
-    )
-    ca = counts.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    cb = counts.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
-    return (
-        inter.join(ca, "id_a")
-        .join(cb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("ninter") / (F.col("na") + F.col("nb") - F.col("ninter")), 4
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def docs_jaccard_pairs(spark, sf_dir):
-    """Exact word-set Jaccard VERIFY step over LSH-bucket candidates —
-    the scale-safe shape (see :func:`_jaccard_pairs_of`)."""
-    return _jaccard_pairs_of(_t(spark, sf_dir, "documents")).orderBy(
-        "id_a", "id_b"
-    )
-
-
-def _jaccard_sql(
-    src: str = "documents", threshold: float = 0.6, order: bool = True
-) -> str:
-    """The verify-step SQL over any (doc_id, text) relation — shares its
-    member/words fragments with the Spark plan builders above."""
-    return f"""
-WITH member AS ({_lsh_member_sql(src)}),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM member a JOIN member b
-    ON a.band_id = b.band_id AND a.band_key = b.band_key
-   AND a.doc_id < b.doc_id
-),
-w AS (
-  SELECT DISTINCT doc_id, w FROM (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM {src}
-  ) WHERE w <> ''
-),
-c AS (SELECT doc_id, count(*) AS n FROM w GROUP BY doc_id),
-inter AS (
-  SELECT id_a, id_b, count(*) AS ninter
-  FROM pairs
-  JOIN w wa ON wa.doc_id = id_a
-  JOIN w wb ON wb.doc_id = id_b AND wa.w = wb.w
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b,
-       round(ninter * 1.0 / (ca.n + cb.n - ninter), 4) AS jaccard
-FROM inter
-JOIN c ca ON ca.doc_id = id_a
-JOIN c cb ON cb.doc_id = id_b
-WHERE round(ninter * 1.0 / (ca.n + cb.n - ninter), 4) >= {threshold}
-{"ORDER BY id_a, id_b" if order else ""}
-"""
-
-
-JACCARD_SQL = _jaccard_sql()
-
-
-def docs_ngram_jaccard(spark, sf_dir):
-    """Character 5-gram Jaccard RE-verification of the word-level
-    near-dup pairs (word-Jaccard ≥ 0.9): a second, character-level
-    similarity feature over the already-verified candidates — the
-    tokenization-robust check a training-data dedup runs on pairs whose
-    word overlap could be an artifact of whitespace splitting. Scale
-    shape: the gram self-join touches verified pairs only (≪ candidate
-    pairs ≪ all pairs)."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = _jaccard_pairs_of(docs, 0.9).select("id_a", "id_b")
-    grams = (
-        docs.select(
-            "doc_id",
-            F.explode(
-                F.when(
-                    F.length("text") >= 5,
-                    F.expr(
-                        "transform(sequence(1, length(text) - 4),"
-                        " i -> substring(text, i, 5))"
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
-            ).alias("g"),
-        )
-        .dropDuplicates(["doc_id", "g"])
-    )
-    counts = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    ga = grams.select(F.col("doc_id").alias("id_a"), "g")
-    gb = grams.select(F.col("doc_id").alias("_idb"), F.col("g").alias("g2"))
-    inter = (
-        pairs.join(ga, "id_a")
-        .join(gb, (F.col("id_b") == F.col("_idb")) & (F.col("g") == F.col("g2")))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("ninter"))
-    )
-    ca = counts.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    cb = counts.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
-    ni = F.coalesce("ninter", F.lit(0))
-    return (
-        pairs.join(inter, ["id_a", "id_b"], "left")
-        .join(ca, "id_a")
-        .join(cb, "id_b")
-        .withColumn(
-            "ngram_jaccard",
-            F.round(ni / (F.col("na") + F.col("nb") - ni), 4),
-        )
-        .select("id_a", "id_b", "ngram_jaccard")
-        .orderBy("id_a", "id_b")
-    )
-
-
-NGRAM_JACCARD_SQL = f"""
-WITH wp AS ({_jaccard_sql("documents", 0.9, order=False)}),
-pairs AS (SELECT id_a, id_b FROM wp),
-g AS (
-  SELECT DISTINCT doc_id, substring(text, gs, 5) AS g
-  FROM (SELECT doc_id, text,
-               unnest(range(1, greatest(length(text) - 3, 1))) AS gs
-        FROM documents)
-),
-c AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id),
-inter AS (
-  SELECT id_a, id_b, count(*) AS ninter
-  FROM pairs
-  JOIN g ga ON ga.doc_id = id_a
-  JOIN g gb ON gb.doc_id = id_b AND ga.g = gb.g
-  GROUP BY 1, 2
-)
-SELECT p.id_a, p.id_b,
-       round(coalesce(ninter, 0) * 1.0 /
-             (ca.n + cb.n - coalesce(ninter, 0)), 4) AS ngram_jaccard
-FROM pairs p
-LEFT JOIN inter i ON i.id_a = p.id_a AND i.id_b = p.id_b
-JOIN c ca ON ca.doc_id = p.id_a
-JOIN c cb ON cb.doc_id = p.id_b
-ORDER BY p.id_a, p.id_b
-"""
-
-
-def docs_simhash(spark, sf_dir):
-    """64-bit SimHash (a corpus-scale fingerprint — 8 bits collide
-    constantly at 10^10 docs). Per word, bit i = bit (i mod 4) of md5
-    hex nibble i//4 (integer-exact on both engines); per doc,
-    fingerprint bit i = sign of the ±1 sum over words. Emitted as two
-    32-bit halves in BIGINT columns (``simhash_hi``/``simhash_lo``) so
-    no signed-64 overflow semantics are in play cross-engine."""
-    # project the 16 nibble ints ONCE per word before the aggregate:
-    # the round-6 shape evaluated conv(substring(h, ...)) inside every
-    # one of the 64 sum() expressions — 4× the string slicing and
-    # radix conversion per word for the same values (guide §1.2
-    # per-task work); the aggregate itself now reads int columns and a
-    # bitmask only, and still partial-aggregates map-side.
-    words = _words(spark, sf_dir).withColumn(
-        "h", F.md5(F.col("w").cast("binary"))
-    )
-    nibs = words.select(
-        "doc_id",
-        *[
-            F.conv(F.substring("h", j + 1, 1), 16, 10).cast("int").alias(f"n{j}")
-            for j in range(16)
-        ],
-    )
-    bit_sums = []
-    for i in range(64):
-        bit_set = F.col(f"n{i // 4}").bitwiseAND(F.lit(1 << (i % 4))) > 0
-        bit_sums.append(
-            F.sum(F.when(bit_set, F.lit(1)).otherwise(F.lit(-1))).alias(f"s{i}")
-        )
-    per_doc = nibs.groupBy("doc_id").agg(*bit_sums)
-
-    def _half(lo: int) -> F.Column:
-        e = None
-        for i in range(lo, lo + 32):
-            term = F.when(
-                F.col(f"s{i}") > 0, F.lit(1 << (i - lo)).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-            e = term if e is None else e + term
-        return e
-
-    return per_doc.select(
-        "doc_id",
-        _half(0).alias("simhash_lo"),
-        _half(32).alias("simhash_hi"),
-    ).orderBy("doc_id")
-
-
-def _simhash_sql() -> str:
-    sums = ",\n         ".join(
-        "sum(CASE WHEN (('0x' || substr(h, {p}, 1))::INTEGER & {m}) > 0 "
-        "THEN 1 ELSE -1 END) AS s{i}".format(p=i // 4 + 1, m=1 << (i % 4), i=i)
-        for i in range(64)
-    )
-
-    def half(lo: int) -> str:
-        return " + ".join(
-            "(CASE WHEN s{i} > 0 THEN {v} ELSE 0 END)".format(
-                i=i, v=1 << (i - lo)
-            )
-            for i in range(lo, lo + 32)
-        )
-
-    return f"""
-WITH words AS (
-  SELECT doc_id, md5(w) AS h FROM (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
-  ) WHERE w <> ''
-),
-sums AS (
-  SELECT doc_id,
-         {sums}
-  FROM words GROUP BY doc_id
-)
-SELECT doc_id,
-       CAST({half(0)} AS BIGINT) AS simhash_lo,
-       CAST({half(32)} AS BIGINT) AS simhash_hi
-FROM sums ORDER BY doc_id
-"""
-
-
-SIMHASH_SQL = _simhash_sql()
-
-
-def docs_token_stats(spark, sf_dir):
-    """Token counting + quality features (length, alpha ratio)."""
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        "lang",
-        F.length("text").cast("long").alias("text_len"),
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens_ws"),
-        F.length(F.regexp_replace("text", "[^a-z]", "")).cast("long").alias("n_alpha"),
-    ).orderBy("doc_id")
-
-
-TOKENS_SQL = """
-SELECT doc_id, lang,
-       length(text) AS text_len,
-       CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens_ws,
-       length(regexp_replace(text, '[^a-z]', '', 'g')) AS n_alpha
-FROM documents ORDER BY doc_id
-"""
-
-# BPE-ish pre-tokenization regex: letter runs, digit runs, single
-# punctuation marks — the GPT-2-style split shape restricted to
-# constructs Java regex and RE2 evaluate identically (no lookarounds).
-_BPE_RE = "[a-z]+|[0-9]+|[^a-z0-9 ]"
-
-
-def docs_bpe_tokens(spark, sf_dir):
-    """Token counting with a BPE-ish pre-tokenizer: subword-style
-    counts from a regex split (letter runs / digit runs / punctuation)
-    next to the whitespace count — the pair a training-data pipeline
-    uses to estimate tokenizer cost per document. Pure builtins
-    (regexp_count), one scan, no UDF."""
-    docs = _t(spark, sf_dir, "documents")
-    n_bpe = F.regexp_count("text", F.lit(_BPE_RE)).cast("long")
-    n_ws = F.size(F.filter(F.split("text", " "), lambda w: w != "")).cast("long")
-    return (
-        docs.select(
-            "doc_id",
-            n_bpe.alias("n_bpe_tokens"),
-            n_ws.alias("n_ws_tokens"),
-            F.round(n_bpe / F.greatest(n_ws, F.lit(1)), 4).alias(
-                "subtokens_per_word"
-            ),
-        )
-        .orderBy("doc_id")
-    )
-
-
-BPE_TOKENS_SQL = f"""
-SELECT doc_id,
-       CAST(len(regexp_extract_all(text, '{_BPE_RE}')) AS BIGINT)
-         AS n_bpe_tokens,
-       CAST(len(list_filter(string_split(text, ' '), w -> w <> '')) AS BIGINT)
-         AS n_ws_tokens,
-       round(len(regexp_extract_all(text, '{_BPE_RE}')) * 1.0 /
-             greatest(len(list_filter(string_split(text, ' '), w -> w <> '')),
-                      1), 4) AS subtokens_per_word
-FROM documents ORDER BY doc_id
-"""
-
-
-# Gopher-style repetition gate thresholds (Rae et al. 2021 use the same
-# signal family — most-frequent-unigram/bigram share + duplicate share;
-# values tuned so the synthetic corpus splits ~50/50, exercising both
-# branches of `keep` in the oracle diff):
-_GQ_TOP_UNI = 0.12
-_GQ_TOP_BI = 0.05
-_GQ_DUP = 0.65
-
-
-def docs_gopher_quality(spark, sf_dir):
-    """Gopher-style repetition/quality gate per document: the share of
-    the most frequent unigram and bigram plus the duplicate-word share,
-    with a boolean ``keep`` verdict — the filter family an LLM-corpus
-    pipeline runs right after language-ID. Relational form: pure JVM
-    builtins with ZERO exchanges before the output sort — every signal
-    is a per-document function, so the most-frequent unigram/bigram
-    counts come from a sort + run-length pass over the document's own
-    token array (array_sort, then boundary positions, then adjacent
-    differences), computed entirely inside the scan task. The round-6
-    shape exploded every word AND every bigram through two
-    (doc_id, term) aggregation shuffles and joined three per-doc
-    tables back together — three exchanges for work with no
-    cross-document dependency (guide §2.4). Docs with NULL/
-    whitespace-only text emit no row (same contract as the minhash
-    forms)."""
-    docs = _t(spark, sf_dir, "documents")
-    words_col = F.filter(F.split("text", " "), lambda w: w != "")
-
-    def _top_count(sorted_col: str):
-        """Max multiplicity of any element of the pre-SORTED (and
-        non-empty) array column, via run lengths: boundary indices,
-        each run's length = next boundary − own boundary. The sorted
-        array is a materialized column (not an inline expression) so
-        the interpreted HOF lambda never re-sorts per element."""
-        s = F.col(sorted_col)
-        n = F.size(s)
-        starts = F.filter(
-            F.sequence(F.lit(1), n),
-            lambda i: (i == 1) | (F.element_at(s, i) != F.element_at(s, i - 1)),
-        )
-        runs = F.zip_with(
-            F.concat(F.slice(starts, 2, F.size(starts)), F.array(n + 1)),
-            starts,
-            lambda nxt, cur: nxt - cur,
-        )
-        return F.array_max(runs)
-
-    base = (
-        docs.select("doc_id", words_col.alias("words"))
-        .where(F.size("words") > 0)
-        .select(
-            "doc_id",
-            F.size("words").cast("long").alias("n_words"),
-            F.size(F.array_distinct("words")).cast("long").alias("n_distinct"),
-            F.array_sort("words").alias("ws"),
-            F.array_sort(
-                F.zip_with(
-                    F.slice("words", 1, F.size("words") - 1),
-                    F.slice(F.col("words"), F.lit(2), F.size("words") - 1),
-                    lambda a, b: F.concat_ws(" ", a, b),
-                )
-            ).alias("bs"),
-        )
-        .select(
-            "doc_id",
-            "n_words",
-            "n_distinct",
-            _top_count("ws").cast("long").alias("top_uni"),
-            F.when(
-                F.size("bs") > 0, _top_count("bs")
-            ).cast("long").alias("top_bi"),
-        )
-    )
-    fu = F.round(F.col("top_uni") / F.col("n_words"), 4)
-    fb = F.round(
-        F.coalesce(F.col("top_bi"), F.lit(0))
-        / F.greatest(F.col("n_words") - 1, F.lit(1)),
-        4,
-    )
-    fd = F.round(F.lit(1.0) - F.col("n_distinct") / F.col("n_words"), 4)
-    return (
-        base.select(
-            "doc_id",
-            "n_words",
-            fu.alias("top_unigram_frac"),
-            fb.alias("top_bigram_frac"),
-            fd.alias("dup_word_frac"),
-        )
-        .withColumn(
-            "keep",
-            (F.col("top_unigram_frac") <= _GQ_TOP_UNI)
-            & (F.col("top_bigram_frac") <= _GQ_TOP_BI)
-            & (F.col("dup_word_frac") <= _GQ_DUP),
-        )
-        .orderBy("doc_id")
-    )
-
-
-GOPHER_SQL = f"""
-WITH w AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS words
-  FROM documents
-),
-base AS (
-  SELECT doc_id, words, len(words) AS n_words,
-         len(list_distinct(words)) AS n_distinct,
-         list_transform(range(1, len(words)),
-                        i -> words[i] || ' ' || words[i + 1]) AS bigrams
-  FROM w WHERE len(words) > 0
-),
-uni AS (
-  SELECT doc_id, max(cnt) AS top_uni FROM (
-    SELECT doc_id, count(*) AS cnt
-    FROM (SELECT doc_id, unnest(words) AS x FROM base) GROUP BY doc_id, x
-  ) GROUP BY doc_id
-),
-bi AS (
-  SELECT doc_id, max(cnt) AS top_bi FROM (
-    SELECT doc_id, count(*) AS cnt
-    FROM (SELECT doc_id, unnest(bigrams) AS x FROM base) GROUP BY doc_id, x
-  ) GROUP BY doc_id
-)
-SELECT b.doc_id, b.n_words,
-       round(u.top_uni * 1.0 / b.n_words, 4) AS top_unigram_frac,
-       round(coalesce(bb.top_bi, 0) * 1.0 / greatest(b.n_words - 1, 1), 4)
-         AS top_bigram_frac,
-       round(1.0 - b.n_distinct * 1.0 / b.n_words, 4) AS dup_word_frac,
-       (round(u.top_uni * 1.0 / b.n_words, 4) <= {_GQ_TOP_UNI}
-        AND round(coalesce(bb.top_bi, 0) * 1.0 / greatest(b.n_words - 1, 1), 4)
-            <= {_GQ_TOP_BI}
-        AND round(1.0 - b.n_distinct * 1.0 / b.n_words, 4) <= {_GQ_DUP})
-         AS keep
-FROM base b JOIN uni u USING (doc_id) LEFT JOIN bi bb USING (doc_id)
-ORDER BY doc_id
-"""
-
-
-def docs_gopher_quality_arrow(spark, sf_dir):
-    """Gopher repetition gate, Arrow-pass twin of
-    :func:`docs_gopher_quality`: every signal is a per-document
-    function of that document's words alone, so one mapInPandas pass
-    computes them all with two Counters — zero shuffles, no exploded
-    per-word rows. The 100-TB production form (same DuckDB oracle).
-    Rounding matches Spark's HALF_UP-on-the-exact-double semantics via
-    Decimal quantize."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def compute(batches):
-        from collections import Counter
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q4 = Decimal("0.0001")
-
-        def r4(x: float) -> float:
-            return float(Decimal(x).quantize(q4, ROUND_HALF_UP))
-
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "n_words", "top_unigram_frac",
-                    "top_bigram_frac", "dup_word_frac", "keep",
-                )
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if not isinstance(text, str):
-                    continue  # NULL text: relational form emits no row
-                words = [w for w in text.split(" ") if w]
-                if not words:
-                    continue
-                n = len(words)
-                cu = Counter(words)
-                top_bi = 0
-                if n > 1:
-                    top_bi = max(
-                        Counter(
-                            words[i] + " " + words[i + 1]
-                            for i in range(n - 1)
-                        ).values()
-                    )
-                fu = r4(max(cu.values()) / n)
-                fb = r4(top_bi / max(n - 1, 1))
-                fd = r4(1.0 - len(cu) / n)
-                out["doc_id"].append(doc_id)
-                out["n_words"].append(n)
-                out["top_unigram_frac"].append(fu)
-                out["top_bigram_frac"].append(fb)
-                out["dup_word_frac"].append(fd)
-                out["keep"].append(
-                    fu <= _GQ_TOP_UNI and fb <= _GQ_TOP_BI and fd <= _GQ_DUP
-                )
-            yield pd.DataFrame(out)
-
-    schema = (
-        "doc_id long, n_words long, top_unigram_frac double, "
-        "top_bigram_frac double, dup_word_frac double, keep boolean"
-    )
-    return docs.mapInPandas(compute, schema=schema).orderBy("doc_id")
-
-
-_TOP_TERMS_K = 50
-
-
-def corpus_top_terms(spark, sf_dir):
-    """Corpus-wide heavy hitters: the top-K terms by total occurrences
-    with their document frequency — the vocabulary/stopword profile a
-    training-data pipeline derives before tokenizer fitting. One explode
-    + one shuffle on term; occurrence counts partial-aggregate map-side,
-    and the per-term document frequency is a count-distinct whose key
-    (term, doc_id) is already co-located after the same shuffle. At
-    100 TB the explode never materializes: Tungsten pipelines
-    explode→partial-agg inside the scan stage, so only (term, count)
-    pairs — bounded by the vocabulary, not the corpus — cross the wire.
-    Ties broken by term for a deterministic cut."""
-    docs = _t(spark, sf_dir, "documents")
-    words_col = F.filter(F.split("text", " "), lambda w: w != "")
-    return (
-        docs.select("doc_id", F.explode(words_col).alias("term"))
-        .groupBy("term")
-        .agg(
-            F.count("*").cast("long").alias("n_occurrences"),
-            F.countDistinct("doc_id").cast("long").alias("n_docs"),
-        )
-        .orderBy(F.desc("n_occurrences"), "term")
-        .limit(_TOP_TERMS_K)
-    )
-
-
-TOP_TERMS_SQL = f"""
-SELECT term, count(*) AS n_occurrences,
-       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-FROM (
-  SELECT doc_id,
-         unnest(list_filter(string_split(text, ' '), w -> w <> '')) AS term
-  FROM documents
-)
-GROUP BY term
-ORDER BY n_occurrences DESC, term
-LIMIT {_TOP_TERMS_K}
-"""
-
-
-# --------------------------------------------------------------------------
-# Benchmark decontamination (13-gram overlap) + unigram-LM surprisal
-# --------------------------------------------------------------------------
-
-# Canonical eval-set decontamination gram width (GPT-3 appendix C /
-# The Pile use 13-gram collision as the contamination test).
-DECON_N = 13
-# Deterministic stand-in for the held-out benchmark: every 5th doc_id.
-DECON_BENCH_MOD = 5
-
-
-def docs_decontaminate(spark, sf_dir):
-    """Training-set decontamination: find every non-benchmark document
-    sharing at least one word 13-gram with the benchmark set, with the
-    count of distinct shared grams (the GPT-3/Pile collision rule). The
-    benchmark here is a deterministic slice of the corpus itself
-    (doc_id % DECON_BENCH_MOD == 0) so the check is self-contained; in
-    production it is the eval suites' text.
-
-    Scale shape: the benchmark side is SMALL by construction (eval
-    suites are MBs against a 100-TB corpus), so its distinct grams are
-    broadcast — the corpus side streams through scan → explode →
-    broadcast-hash-join → partial agg with NO shuffle of the corpus
-    grams; only (doc_id, gram-hit) pairs reach the one exchange for the
-    per-doc count-distinct. Gram construction is pure JVM higher-order
-    functions (sequence/slice/concat_ws, whole-stage codegen); at real
-    scale you'd xxhash64 the grams before the join to shrink the
-    broadcast — kept as strings here so the oracle comparison is exact
-    on the grams themselves. `sequence(1, n-12)` is guarded by the
-    WHERE on word count: Spark generates a DESCENDING sequence when the
-    stop is below the start, so short docs must never reach it."""
-    docs = _t(spark, sf_dir, "documents")
-    words_col = F.filter(F.split("text", " "), lambda w: w != "")
-    grams = (
-        docs.select("doc_id", words_col.alias("words"))
-        .where(F.size("words") >= DECON_N)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("words") - (DECON_N - 1)),
-                    lambda i: F.concat_ws(" ", F.slice(F.col("words"), i, DECON_N)),
-                )
-            ).alias("gram"),
-        )
-    )
-    bench = (
-        grams.where(F.col("doc_id") % DECON_BENCH_MOD == 0)
-        .select("gram")
-        .distinct()
-    )
-    return (
-        grams.where(F.col("doc_id") % DECON_BENCH_MOD != 0)
-        .join(F.broadcast(bench), "gram")
-        .groupBy("doc_id")
-        .agg(F.countDistinct("gram").cast("long").alias("n_contaminated_grams"))
-        .orderBy("doc_id")
-    )
-
-
-DECON_SQL = f"""
-WITH w AS (
-  SELECT doc_id,
-         list_filter(string_split(text, ' '), x -> x <> '') AS words
-  FROM documents
-),
-g AS (
-  SELECT doc_id,
-         unnest(list_transform(
-           range(1, len(words) + 1 - {DECON_N - 1}),
-           i -> array_to_string(words[i:i + {DECON_N - 1}], ' ')
-         )) AS gram
-  FROM w WHERE len(words) >= {DECON_N}
-),
-bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % {DECON_BENCH_MOD} = 0)
-SELECT g.doc_id,
-       CAST(count(DISTINCT g.gram) AS BIGINT) AS n_contaminated_grams
-FROM g JOIN bench USING (gram)
-WHERE g.doc_id % {DECON_BENCH_MOD} <> 0
-GROUP BY g.doc_id
-ORDER BY doc_id
-"""
-
-
 def docs_unigram_surprisal(spark, sf_dir):
     """Perplexity-proxy quality score: per-document mean surprisal
     −(1/n)·Σ ln p(w) under the corpus's own unigram distribution — the
@@ -1374,497 +492,6 @@ ORDER BY doc_id
 """
 
 
-# Duplicated-substring spans (Lee et al., "Deduplicating Training Data
-# Makes Language Models Better"): anchor width in tokens. Their
-# suffix-array pass finds exact repeats ≥ L tokens; this is the
-# distributed n-gram-anchored approximation — a position is covered
-# when its W-token gram occurs ≥2 times corpus-wide, and covered
-# positions merge into maximal spans (misses repeats < W, may bridge
-# gaps < W; exact integer interval arithmetic otherwise).
-DUPSPAN_W = 10
-
-
-def docs_dup_spans(spark, sf_dir):
-    """Cross-document duplicated-substring spans: every token position
-    whose W-token gram appears at least twice in the corpus is 'covered';
-    per document, covered positions merge into maximal spans (classic
-    interval-merge via a running-max window — is_new when the position
-    starts past every previous span's end), and the doc reports its span
-    count and total duplicated-token mass. This is the signal the
-    substring-dedup pass cuts on (drop or trim docs whose dup mass is
-    high) — document-level MinHash misses it when only a paragraph is
-    copied.
-
-    Scale shape: gram construction is the same JVM HOF pipeline as the
-    decontamination op (no UDFs), computed ONCE; a single shuffle
-    keyed on the gram serves both the ≥2-occurrence test and the
-    join-back (a count window over the gram partition — round 6 paid
-    an aggregate plus a sort-merge self-join, i.e. the gram pipeline
-    and its shuffle twice); the interval merge windows over HIT
-    positions only — a tiny fraction of the corpus — partitioned by
-    doc_id. All arithmetic is int64-exact, so the oracle matches
-    bit-for-bit."""
-    docs = _t(spark, sf_dir, "documents")
-    words_col = F.filter(F.split("text", " "), lambda w: w != "")
-    grams = (
-        docs.select("doc_id", words_col.alias("words"))
-        .where(F.size("words") >= DUPSPAN_W)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("words") - (DUPSPAN_W - 1)),
-                    lambda i: F.struct(
-                        (i - 1).cast("int").alias("pos"),
-                        F.concat_ws(
-                            " ", F.slice(F.col("words"), i, DUPSPAN_W)
-                        ).alias("gram"),
-                    ),
-                )
-            ).alias("g"),
-        )
-        .select("doc_id", F.col("g.pos").alias("pos"), F.col("g.gram").alias("gram"))
-    )
-    # one exchange keyed on the gram serves both the >= 2-occurrence
-    # test AND the join-back: a count window over the gram partition
-    # replaces the round-6 aggregate + sort-merge self-join, which
-    # computed the gram pipeline twice and shuffled it twice (guide
-    # §2.4: operations keyed the same way share one exchange)
-    w_gram = Window.partitionBy("gram")
-    hits = (
-        grams.withColumn("c", F.count(F.lit(1)).over(w_gram))
-        .where(F.col("c") >= 2)
-        .select("doc_id", "pos")
-    )
-    w_prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_run = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    flagged = hits.withColumn(
-        "is_new",
-        F.when(
-            F.col("pos")
-            > F.coalesce(F.max("pos").over(w_prev), F.lit(-DUPSPAN_W))
-            + (DUPSPAN_W - 1),
-            1,
-        ).otherwise(0),
-    ).withColumn("span_id", F.sum("is_new").over(w_run))
-    spans = flagged.groupBy("doc_id", "span_id").agg(
-        F.min("pos").alias("st"),
-        (F.max("pos") + (DUPSPAN_W - 1)).alias("en"),
-    )
-    return (
-        spans.groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_spans"),
-            F.sum(F.col("en") - F.col("st") + 1).cast("long").alias("dup_tokens"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-DUPSPAN_SQL = f"""
-WITH w AS (
-  SELECT doc_id,
-         list_filter(string_split(text, ' '), x -> x <> '') AS words
-  FROM documents
-),
-g AS (
-  SELECT doc_id,
-         unnest(list_transform(
-           range(1, len(words) + 2 - {DUPSPAN_W}),
-           i -> array_to_string(words[i:i + {DUPSPAN_W - 1}], ' ')
-         )) AS gram,
-         unnest(range(1, len(words) + 2 - {DUPSPAN_W})) - 1 AS pos
-  FROM w WHERE len(words) >= {DUPSPAN_W}
-),
-dupg AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-hits AS (SELECT g.doc_id, g.pos FROM g JOIN dupg USING (gram)),
-m AS (
-  SELECT doc_id, pos,
-         max(pos) OVER (
-           PARTITION BY doc_id ORDER BY pos
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-         ) AS pmax
-  FROM hits
-),
-f AS (
-  SELECT doc_id, pos,
-         CASE WHEN pmax IS NULL OR pos > pmax + {DUPSPAN_W - 1}
-              THEN 1 ELSE 0 END AS is_new
-  FROM m
-),
-s AS (
-  SELECT doc_id, pos,
-         sum(is_new) OVER (
-           PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING
-         ) AS span_id
-  FROM f
-),
-spans AS (
-  SELECT doc_id, span_id, min(pos) AS st, max(pos) + {DUPSPAN_W - 1} AS en
-  FROM s GROUP BY doc_id, span_id
-)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_spans,
-       CAST(sum(en - st + 1) AS BIGINT) AS dup_tokens
-FROM spans GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-TFIDF_TOPN = 3
-
-
-def docs_tfidf_topk(spark, sf_dir):
-    """Per-document top-3 TF-IDF terms — the classic keyword/topic
-    signal a corpus profiler emits next to the quality scores. tf is
-    the in-doc count, idf = ln(N/df) with N the corpus size and df the
-    term's document frequency. Ranking happens on the 6-dp ROUNDED
-    score (then term asc) so both engines rank the same numbers — raw
-    double ordering could flip at a 1-ulp ln() difference.
-
-    Scale shape: one explode feeds a map-side partial agg on
-    (doc_id, term) — per-doc terms co-reside in the scan task — one
-    exchange; df reuses the same shuffled layout (term already a key);
-    N attaches like the surprisal total: a single-partition window over
-    the BOUNDED df table, broadcast back.
-
-    Round 7: the document table is hash-partitioned on doc_id up
-    front, so BOTH per-doc stages — the (doc_id, term) tf aggregate
-    (partitioning on a subset of the grouping keys satisfies its
-    clustered distribution) and the per-doc top-3 ranking window —
-    reuse that one exchange of ~50 kB/core of raw docs instead of each
-    shuffling the multi-million-row term table (guide §2.4). N also no
-    longer explodes words a third time: docs with ≥1 word is the same
-    count, computed from the doc rows directly."""
-    docs = _t(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    docs_by_id = docs.repartition(par, "doc_id")
-    words = _words_of(docs_by_id)
-    tf = words.groupBy("doc_id", F.col("w").alias("term")).agg(
-        F.count("*").cast("long").alias("tf")
-    )
-    df_ = tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-    n_docs = docs.where(
-        F.size(F.filter(F.split("text", " "), lambda w: w != "")) > 0
-    ).select(F.count("*").cast("double").alias("n"))
-    dfn = df_.join(F.broadcast(n_docs))
-    scored = tf.join(F.broadcast(dfn), "term").withColumn(
-        "tfidf",
-        F.round(
-            F.col("tf").cast("double")
-            * F.log(F.col("n") / F.col("df").cast("double")),
-            6,
-        ),
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("tfidf"), F.col("term")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= TFIDF_TOPN)
-        .select("doc_id", F.col("rk").cast("int").alias("rk"), "term", "tf", "tfidf")
-        .orderBy("doc_id", "rk")
-    )
-
-
-TFIDF_SQL = f"""
-WITH words AS (
-  SELECT doc_id,
-         unnest(list_filter(string_split(text, ' '), w -> w <> '')) AS w
-  FROM documents
-),
-tf AS (
-  SELECT doc_id, w AS term, CAST(count(*) AS BIGINT) AS tf
-  FROM words GROUP BY doc_id, w
-),
-df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-n AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n FROM words),
-scored AS (
-  SELECT tf.doc_id, tf.term, tf.tf,
-         round(CAST(tf.tf AS DOUBLE) * ln(n.n / CAST(df.df AS DOUBLE)), 6)
-           AS tfidf
-  FROM tf JOIN df USING (term) CROSS JOIN n
-)
-SELECT doc_id, CAST(rk AS INT) AS rk, term, tf, tfidf
-FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY doc_id ORDER BY tfidf DESC, term
-  ) AS rk
-  FROM scored
-)
-WHERE rk <= {TFIDF_TOPN}
-ORDER BY doc_id, rk
-"""
-
-
-def docs_winnow_fp(spark, sf_dir):
-    """Winnowing document fingerprints (Schleimer et al., SIGMOD 2003 —
-    the MOSS algorithm): hash every char 5-gram (integer-exact
-    md5-prefix recipe), slide a window of 8 gram-hashes, keep each
-    window's minimum — the guaranteed-coverage fingerprint set a
-    copy-detector indexes. Emitted per doc: fingerprint count + min,
-    both engine-exact. Relational form: one window function over the
-    gram sequence, no UDF — the gram hash (a long) is projected before
-    the exchange, and the distinct + per-doc aggregate both reuse the
-    window's doc_id partitioning, so exactly ONE data exchange carries
-    ~20 B/gram. (An all-array zero-exchange variant — transform +
-    array_min over slices — was measured SLOWER here: interpreted HOF
-    lambdas lose to the codegen'd explode+window pipeline.)"""
-    docs = _t(spark, sf_dir, "documents")
-    grams = docs.select(
-        "doc_id",
-        F.posexplode(
-            F.when(
-                F.length("text") >= 5,
-                F.expr(
-                    "transform(sequence(1, length(text) - 4),"
-                    " i -> substring(text, i, 5))"
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("pos", "g"),
-    )
-    hm = (
-        F.conv(F.substring(F.md5(F.col("g").cast("binary")), 1, 15), 16, 10)
-        .cast("long") % _MH_MOD
-    )
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.currentRow, 7)
-    )
-    fps = (
-        grams.select("doc_id", "pos", hm.alias("h"))
-        .withColumn("wmin", F.min("h").over(w))
-        # last 7 positions have truncated windows; winnowing drops them
-        .withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
-        .where(F.col("pos") <= F.col("_n") - 8)
-        .select("doc_id", "wmin")
-        .distinct()
-    )
-    return (
-        fps.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_fingerprints"),
-            F.min("wmin").alias("min_fp"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-WINNOW_SQL = f"""
-WITH grams AS (
-  SELECT doc_id, gs AS pos, substring(text, gs, 5) AS g
-  FROM (SELECT doc_id, text,
-               unnest(range(1, greatest(length(text) - 3, 1))) AS gs
-        FROM documents)
-),
-h AS (
-  SELECT doc_id, pos,
-         ('0x' || substr(md5(g), 1, 15))::BIGINT % {_MH_MOD} AS h
-  FROM grams
-),
-wm AS (
-  SELECT doc_id, pos,
-         min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING) AS wmin,
-         count(*) OVER (PARTITION BY doc_id) AS _n
-  FROM h
-),
-fps AS (
-  -- pos is 1-based here (Spark's posexplode is 0-based): a full
-  -- window [pos, pos+7] needs pos+7 <= _n
-  SELECT DISTINCT doc_id, wmin FROM wm WHERE pos <= _n - 7
-)
-SELECT doc_id, count(*) AS n_fingerprints, min(wmin) AS min_fp
-FROM fps GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# Arrow-pass twins: per-doc signatures with NO shuffle. The relational
-# forms above are the cross-engine ORACLE contract (DuckDB must agree
-# bit-for-bit), but they explode per-word / per-gram rows and shuffle
-# ~1-5× the corpus text bytes through a groupBy/window — for work that
-# has no cross-document dependency at all. These twins compute the
-# identical signatures inside ONE mapInPandas pass (hashlib+numpy per
-# Arrow batch, zero movement): the shape a 100-TB run wants. Equality
-# with the relational forms is pinned in tests AND by sharing their
-# DuckDB oracle SQL in the catalog.
-# ---------------------------------------------------------------------------
-
-
-def _md5_mod(strings, cache: dict) -> "np.ndarray":
-    """int(md5(s)[:15 hex], 16) % (2^31-1) per string — the engine-exact
-    hash recipe shared with the relational forms; memoized per batch."""
-    import hashlib
-
-    out = np.empty(len(strings), dtype=np.int64)
-    for i, s in enumerate(strings):
-        v = cache.get(s)
-        if v is None:
-            v = int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16) % _MH_MOD
-            cache[s] = v
-        out[i] = v
-    return out
-
-
-def _minhash_sig_arrow_of(docs: DataFrame) -> DataFrame:
-    """(doc_id, g0..g63) in ONE mapInPandas pass — the zero-shuffle twin
-    of the relational :func:`_minhash_sig_of` (bit-identical values; the
-    whole LSH/Jaccard/cluster pipeline consumes this form, so building
-    signatures never explodes per-word rows through a shuffle)."""
-    docs = docs.select("doc_id", "text")
-    A = np.array(_MH_A, dtype=np.int64)
-    B = np.array(_MH_B, dtype=np.int64)
-
-    def compute(batches):
-        for pdf in batches:
-            cache: dict = {}
-            ids, sigs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if not isinstance(text, str):
-                    continue  # NULL text: relational form emits no row
-                words = {w for w in text.split(" ") if w}
-                if not words:
-                    continue  # relational groupBy has no row either
-                hm = _md5_mod(list(words), cache)
-                ids.append(doc_id)
-                sigs.append(
-                    ((hm[:, None] * A[None, :] + B[None, :]) % _MH_MOD).min(
-                        axis=0
-                    )
-                )
-            mat = (
-                np.stack(sigs)
-                if sigs
-                else np.zeros((0, _MINHASH_K), dtype=np.int64)
-            )
-            out = {"doc_id": ids}
-            for i in range(_MINHASH_K):
-                out[f"g{i}"] = mat[:, i]
-            yield pd.DataFrame(out)
-
-    schema = "doc_id long, " + ", ".join(
-        f"g{i} long" for i in range(_MINHASH_K)
-    )
-    return docs.mapInPandas(compute, schema=schema)
-
-
-def docs_minhash_arrow(spark, sf_dir):
-    """MinHash signatures, Arrow-pass twin of :func:`docs_minhash`: the
-    k=64 permutation minima computed per document in one vectorized
-    numpy step (:func:`_minhash_sig_arrow_of`) — no explode, no shuffle,
-    the signature never leaves the task that read the document."""
-    sig = _minhash_sig_arrow_of(_t(spark, sf_dir, "documents"))
-    parts = [F.col(f"g{i}").cast("string") for i in range(_MINHASH_K)]
-    return sig.select(
-        "doc_id", F.concat_ws("-", *parts).alias("sig")
-    ).orderBy("doc_id")
-
-
-def docs_winnow_fp_arrow(spark, sf_dir):
-    """Winnowing fingerprints, Arrow-pass twin of :func:`docs_winnow_fp`:
-    gram hashes + the 8-gram sliding-window minima computed per document
-    with a numpy stride trick — where the relational form posexplodes
-    every char 5-gram (~5× the text bytes) through a per-doc window
-    shuffle, this moves nothing."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def compute(batches):
-        for pdf in batches:
-            cache: dict = {}
-            ids, counts, mins = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if not isinstance(text, str):
-                    continue  # NULL text: relational form emits no row
-                n = len(text) - 4
-                if n < 8:
-                    continue  # no full 8-gram window → no relational rows
-                grams = [text[i : i + 5] for i in range(n)]
-                h = _md5_mod(grams, cache)
-                wmins = np.lib.stride_tricks.sliding_window_view(h, 8).min(
-                    axis=1
-                )
-                uniq = np.unique(wmins)
-                ids.append(doc_id)
-                counts.append(len(uniq))
-                mins.append(int(uniq[0]))
-            yield pd.DataFrame(
-                {"doc_id": ids, "n_fingerprints": counts, "min_fp": mins}
-            )
-
-    return docs.mapInPandas(
-        compute, schema="doc_id long, n_fingerprints long, min_fp long"
-    ).orderBy("doc_id")
-
-
-def docs_simhash_arrow(spark, sf_dir):
-    """64-bit SimHash, Arrow-pass twin of :func:`docs_simhash`: each
-    word's ±1 bit vector is derived once from its md5 nibbles (memoized)
-    and scaled by its occurrence count — one vectorized accumulation per
-    document, no explode and no 64-aggregate shuffle."""
-    return _simhash_arrow_of(
-        _t(spark, sf_dir, "documents").select("doc_id", "text")
-    ).orderBy("doc_id")
-
-
-def _simhash_arrow_of(docs: DataFrame) -> DataFrame:
-    """Unordered (doc_id, simhash_lo, simhash_hi) via the zero-shuffle
-    mapInPandas pass — composable form (no output sort)."""
-    import hashlib
-    from collections import Counter
-
-    docs = docs.select("doc_id", "text")
-    bit_pos = np.arange(4, dtype=np.int64)
-
-    def compute(batches):
-        for pdf in batches:
-            cache: dict = {}
-            ids, los, his = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if not isinstance(text, str):
-                    continue  # NULL text: relational form emits no row
-                counts = Counter(w for w in text.split(" ") if w)
-                if not counts:
-                    continue
-                s = np.zeros(64, dtype=np.int64)
-                for w, n in counts.items():
-                    pm = cache.get(w)
-                    if pm is None:
-                        hx = hashlib.md5(w.encode("utf-8")).hexdigest()[:16]
-                        nibs = np.array(
-                            [int(c, 16) for c in hx], dtype=np.int64
-                        )
-                        bits = ((nibs[:, None] >> bit_pos) & 1).reshape(64)
-                        pm = bits * 2 - 1  # ±1 per bit
-                        cache[w] = pm
-                    s += n * pm
-                fp = s > 0
-                lo = int(
-                    (fp[:32].astype(np.int64) << np.arange(32)).sum()
-                )
-                hi = int(
-                    (fp[32:].astype(np.int64) << np.arange(32)).sum()
-                )
-                ids.append(doc_id)
-                los.append(lo)
-                his.append(hi)
-            yield pd.DataFrame(
-                {"doc_id": ids, "simhash_lo": los, "simhash_hi": his}
-            )
-
-    return docs.mapInPandas(
-        compute, schema="doc_id long, simhash_lo long, simhash_hi long"
-    )
-
-
 _STOPWORDS = ["the", "a", "join", "group", "order"]
 
 
@@ -1905,22 +532,6 @@ SELECT doc_id, n_stop, n_words,
        CASE WHEN round(n_stop * 1.0 / n_words, 4) > 0.05
             THEN 'en' ELSE 'other' END AS lang_guess
 FROM agg ORDER BY doc_id
-"""
-
-
-def docs_fingerprint(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    h = F.md5(F.col("text").cast("binary"))
-    return docs.select(
-        "doc_id",
-        h.alias("fp"),
-        F.substring(h, 1, 2).alias("bucket"),
-    ).orderBy("doc_id")
-
-
-FP_SQL = """
-SELECT doc_id, md5(text) AS fp, substr(md5(text), 1, 2) AS bucket
-FROM documents ORDER BY doc_id
 """
 
 
@@ -1995,7 +606,7 @@ FROM range(200) t(i) ORDER BY media_id
 # --------------------------------------------------------------------------
 # Privacy / normalization / sampling / packing — the remaining
 # curation stages of a training-data pipeline (beyond the reference's
-# crawl surface, like the dedup + quality ops above). The testdata
+# crawl surface, like the quality ops above). The testdata
 # corpus carries no real PII or non-NFC text, so each op first injects
 # a deterministic doc_id-derived payload IN THE QUERY on both engines
 # — the detection/redaction/normalization logic then has real work to
@@ -2162,7 +773,7 @@ def docs_sample_hash(spark, sf_dir):
     and 40% of every other language — the rebalancing step a
     multilingual training mix uses to up-weight low-resource
     languages. The sampling key is content-derived (md5-prefix of the
-    text, the cross-engine-exact conv recipe from the MinHash ops), so
+    text, a conv recipe both engines compute exactly), so
     the decision is reproducible across engines, runs, AND cluster
     sizes — no RNG, no per-partition state, embarrassingly parallel at
     100 TB (a pure filter: pushes below any downstream shuffle)."""
@@ -2442,232 +1053,6 @@ SELECT source, n_docs, n_tokens,
          AS sample_weight
 FROM toks, tot ORDER BY source
 """
-
-
-def docs_dedup_incremental(spark, sf_dir):
-    """Incremental ingest dedup: a new arrival batch is deduplicated
-    WITHIN itself (first arrival per content hash wins) and AGAINST
-    the existing corpus — the continuous-crawl form of exact dedup,
-    where only the day's batch is reprocessed, never the 100-TB
-    corpus (which contributes only its distinct hashes; in the crawl
-    engine proper the same contract is the seen anti-join,
-    operators/seen.py). Corpus = even doc_ids; arrivals = odd doc_ids
-    plus deterministic re-tagged copies of corpus texts (doc_id%10==0)
-    and within-batch duplicates (doc_id%20==1) so both suppression
-    paths do real work. One shuffle each side on the content hash;
-    the anti-join is hash-partitioned on the same key."""
-    # (a hash-once _snapshot variant was measured here and rejected:
-    # at bench scale the snapshot write+read costs more than the three
-    # extra 6 MB scans it saves; at 100 TB the incremental contract
-    # already guarantees only the BATCH is scanned, so the multi-scan
-    # shape never touches the corpus anyway)
-    docs = _t(spark, sf_dir, "documents", wide=False).select("doc_id", "text")
-    corpus = (
-        docs.where(F.col("doc_id") % 2 == 0)
-        .select(F.md5(F.col("text").cast("binary")).alias("h"))
-        .distinct()
-    )
-    arrivals = (
-        docs.where(F.col("doc_id") % 2 == 1)
-        .select(F.col("doc_id").alias("arrival_id"), "text")
-        .unionAll(
-            docs.where(F.col("doc_id") % 10 == 0).select(
-                (F.col("doc_id") + 100000).alias("arrival_id"), "text"
-            )
-        )
-        .unionAll(
-            docs.where(F.col("doc_id") % 20 == 1).select(
-                (F.col("doc_id") + 200000).alias("arrival_id"), "text"
-            )
-        )
-    )
-    w = Window.partitionBy("h").orderBy("arrival_id")
-    batch = (
-        arrivals.select(
-            "arrival_id", F.md5(F.col("text").cast("binary")).alias("h")
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-    )
-    return (
-        batch.join(corpus, "h", "left_anti")
-        .select("arrival_id", F.col("h").alias("text_hash"))
-        .orderBy("arrival_id")
-    )
-
-
-INC_DEDUP_SQL = """
-WITH corpus AS (
-  SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 2 = 0
-),
-arrivals AS (
-  SELECT doc_id AS arrival_id, text FROM documents WHERE doc_id % 2 = 1
-  UNION ALL
-  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 0
-  UNION ALL
-  SELECT doc_id + 200000, text FROM documents WHERE doc_id % 20 = 1
-),
-batch AS (
-  SELECT arrival_id, md5(text) AS h,
-         row_number() OVER (PARTITION BY md5(text) ORDER BY arrival_id)
-           AS rn
-  FROM arrivals
-)
-SELECT b.arrival_id, b.h AS text_hash
-FROM batch b LEFT JOIN corpus c ON b.h = c.h
-WHERE b.rn = 1 AND c.h IS NULL
-ORDER BY b.arrival_id
-"""
-
-
-def docs_snapshot_diff(spark, sf_dir):
-    """Snapshot delta: which content entered, left, or persisted
-    between two corpus snapshots (A = even doc_ids, B = doc_id%3!=0 —
-    deterministic overlapping slices so all three statuses occur) —
-    the audit query a recurring-crawl pipeline runs per snapshot pair.
-    Each side collapses to (hash, min doc_id) with map-side partial
-    aggs; the full-outer join runs hash-partitioned on the same key,
-    so text crosses the wire exactly once per side."""
-    docs = _t(spark, sf_dir, "documents", wide=False).select("doc_id", "text")
-
-    def side(pred):
-        return (
-            docs.where(pred)
-            .groupBy(F.md5(F.col("text").cast("binary")).alias("h"))
-            .agg(F.min("doc_id").alias("rep"))
-        )
-
-    a = side(F.col("doc_id") % 2 == 0).withColumnRenamed("rep", "rep_a")
-    b = side(F.col("doc_id") % 3 != 0).withColumnRenamed("rep", "rep_b")
-    return (
-        a.join(b, "h", "full_outer")
-        .select(
-            F.col("h").alias("text_hash"),
-            F.when(F.col("rep_a").isNull(), "added")
-            .when(F.col("rep_b").isNull(), "removed")
-            .otherwise("kept")
-            .alias("status"),
-            F.coalesce("rep_b", "rep_a").alias("rep_doc_id"),
-        )
-        .orderBy("text_hash")
-    )
-
-
-SNAPSHOT_DIFF_SQL = """
-WITH a AS (SELECT md5(text) AS h, min(doc_id) AS rep_a FROM documents
-           WHERE doc_id % 2 = 0 GROUP BY md5(text)),
-b AS (SELECT md5(text) AS h, min(doc_id) AS rep_b FROM documents
-      WHERE doc_id % 3 != 0 GROUP BY md5(text))
-SELECT coalesce(a.h, b.h) AS text_hash,
-       CASE WHEN a.h IS NULL THEN 'added'
-            WHEN b.h IS NULL THEN 'removed'
-            ELSE 'kept' END AS status,
-       coalesce(rep_b, rep_a) AS rep_doc_id
-FROM a FULL OUTER JOIN b ON a.h = b.h
-ORDER BY text_hash
-"""
-
-
-_SIMHASH_HAMMING_MAX = 5
-
-
-def docs_simhash_neardup(spark, sf_dir):
-    """SimHash near-duplicate pairs via 4×16-bit banding — the
-    Manku/Jain/Sarma (WWW'07) web-scale simhash dedup join: any pair
-    within Hamming distance 3 of a 64-bit simhash shares at least one
-    of the 4 bands verbatim (pigeonhole), so exact-match band buckets
-    generate the candidates (67× fewer than all-pairs here) and the
-    exact `bit_count(xor)` distance is computed only on those. The
-    signature comes from the zero-shuffle Arrow pass
-    (:func:`docs_simhash_arrow` — value-identical to the relational
-    form, both hash-verified); candidates self-join on (band, value),
-    never on the corpus. Threshold 5 keeps recall past the pigeonhole
-    guarantee; at 100 TB you re-probe with rotated band splits instead
-    of raising the threshold."""
-    # unordered signature pass (no orderBy: the catalog form's output
-    # sort would force a global range-exchange under every join side),
-    # materialized ONCE per invocation: the plan references the
-    # signature table three times (band explode + both verify sides),
-    # and without the snapshot Spark re-ran the whole Arrow pass per
-    # subtree — 3× the corpus scan+hash work for a 16-byte/doc table
-    # (guide §5 caching / §8 "decide with small rows")
-    sh = _snapshot(_simhash_arrow_of(_t(spark, sf_dir, "documents")))
-    bands = sh.selectExpr(
-        "doc_id", "simhash_lo", "simhash_hi",
-        "explode(array("
-        "  struct(0 AS b, CAST(simhash_lo & 65535 AS BIGINT) AS bv),"
-        "  struct(1 AS b, CAST(shiftright(simhash_lo, 16) & 65535 AS BIGINT) AS bv),"
-        "  struct(2 AS b, CAST(simhash_hi & 65535 AS BIGINT) AS bv),"
-        "  struct(3 AS b, CAST(shiftright(simhash_hi, 16) & 65535 AS BIGINT) AS bv)"
-        ")) AS band",
-    ).select("doc_id", "simhash_lo", "simhash_hi", "band.b", "band.bv")
-    # Second pass: the band rows already carry both signature halves,
-    # so the Hamming verify runs INLINE in the band join (2 xor +
-    # bit_count per candidate — cheaper than shuffling the candidate)
-    # and the pair-dedup `distinct` moves AFTER the filter: only TRUE
-    # near-dup pairs (few) ever shuffle, where the previous shape
-    # shuffled every candidate pair through `distinct` and then joined
-    # the signatures back twice. A pair co-bucketed in k≤4 bands is
-    # verified k times — duplicated cheap arithmetic for an avoided
-    # exchange of the full candidate set (guide §2.2: shuffle fewer
-    # bytes). A/B: 1.8→1.3s at sf0.1, 4.4→2.3 at sfgen-1.0, 30→9.7 at
-    # sfgen-3.0 (near-dup-rich); rows identical at all three.
-    a = bands.select(
-        "b", "bv", F.col("doc_id").alias("id_a"),
-        F.col("simhash_lo").alias("lo_a"), F.col("simhash_hi").alias("hi_a"),
-    )
-    c = bands.select(
-        "b", "bv", F.col("doc_id").alias("id_b"),
-        F.col("simhash_lo").alias("lo_b"), F.col("simhash_hi").alias("hi_b"),
-    )
-    return (
-        a.join(F.broadcast(c), ["b", "bv"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "hamming",
-            F.bit_count(F.expr("lo_a ^ lo_b"))
-            + F.bit_count(F.expr("hi_a ^ hi_b")),
-        )
-        .where(F.col("hamming") <= _SIMHASH_HAMMING_MAX)
-        .select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
-        .distinct()
-        .orderBy("id_a", "id_b")
-    )
-
-
-def _simhash_neardup_sql() -> str:
-    base = SIMHASH_SQL.strip().rsplit("ORDER BY doc_id", 1)[0]
-    return f"""
-WITH sh AS ({base}),
-bands AS (
-  SELECT doc_id, simhash_lo, simhash_hi, b,
-         CASE b
-           WHEN 0 THEN simhash_lo & 65535
-           WHEN 1 THEN (simhash_lo // 65536) & 65535
-           WHEN 2 THEN simhash_hi & 65535
-           ELSE (simhash_hi // 65536) & 65535
-         END AS bv
-  FROM sh, (SELECT unnest([0,1,2,3]) AS b)
-),
-cand AS (
-  SELECT DISTINCT least(a.doc_id, c.doc_id) AS id_a,
-                  greatest(a.doc_id, c.doc_id) AS id_b
-  FROM bands a JOIN bands c ON a.b = c.b AND a.bv = c.bv
-               AND a.doc_id < c.doc_id
-)
-SELECT id_a, id_b,
-       CAST(bit_count(xor(x.simhash_lo, y.simhash_lo))
-            + bit_count(xor(x.simhash_hi, y.simhash_hi)) AS BIGINT)
-         AS hamming
-FROM cand JOIN sh x ON x.doc_id = id_a JOIN sh y ON y.doc_id = id_b
-WHERE bit_count(xor(x.simhash_lo, y.simhash_lo))
-      + bit_count(xor(x.simhash_hi, y.simhash_hi))
-      <= {_SIMHASH_HAMMING_MAX}
-ORDER BY id_a, id_b
-"""
-
-
-SIMHASH_NEARDUP_SQL = _simhash_neardup_sql()
 
 
 def events_funnel(spark, sf_dir):
@@ -2977,29 +1362,8 @@ CATALOG: dict[str, QuerySpec] = {
     "monthly_order_growth": QuerySpec(monthly_order_growth, MONTHLY_SQL),
     "events_hourly_windows": QuerySpec(events_hourly_windows, HOURLY_SQL),
     "part_brand_stats": QuerySpec(part_brand_stats, PART_SQL),
-    "docs_dedup_exact": QuerySpec(docs_dedup_exact, DEDUP_SQL),
-    "docs_minhash": QuerySpec(docs_minhash, MINHASH_SQL),
-    "docs_lsh_buckets": QuerySpec(docs_lsh_buckets, LSH_SQL),
-    "docs_jaccard_pairs": QuerySpec(docs_jaccard_pairs, JACCARD_SQL),
-    "docs_ngram_jaccard": QuerySpec(docs_ngram_jaccard, NGRAM_JACCARD_SQL),
-    "docs_simhash": QuerySpec(docs_simhash, SIMHASH_SQL),
-    "docs_token_stats": QuerySpec(docs_token_stats, TOKENS_SQL),
-    "docs_bpe_tokens": QuerySpec(docs_bpe_tokens, BPE_TOKENS_SQL),
-    "docs_gopher_quality": QuerySpec(docs_gopher_quality, GOPHER_SQL),
-    "docs_gopher_quality_arrow": QuerySpec(
-        docs_gopher_quality_arrow, GOPHER_SQL),
-    "corpus_top_terms": QuerySpec(corpus_top_terms, TOP_TERMS_SQL),
-    "docs_decontaminate": QuerySpec(docs_decontaminate, DECON_SQL),
     "docs_unigram_surprisal": QuerySpec(
         docs_unigram_surprisal, SURPRISAL_SQL),
-    "docs_tfidf_topk": QuerySpec(docs_tfidf_topk, TFIDF_SQL),
-    "docs_dup_spans": QuerySpec(docs_dup_spans, DUPSPAN_SQL),
-    "docs_winnow_fp": QuerySpec(docs_winnow_fp, WINNOW_SQL),
-    # Arrow-pass twins: same results, zero-shuffle mapInPandas plans —
-    # verified against the SAME DuckDB oracles as their relational forms
-    "docs_minhash_arrow": QuerySpec(docs_minhash_arrow, MINHASH_SQL),
-    "docs_winnow_fp_arrow": QuerySpec(docs_winnow_fp_arrow, WINNOW_SQL),
-    "docs_simhash_arrow": QuerySpec(docs_simhash_arrow, SIMHASH_SQL),
     "docs_pii_scrub": QuerySpec(docs_pii_scrub, PII_SQL),
     "docs_nfc_norm": QuerySpec(docs_nfc_norm, NFC_SQL),
     "docs_sample_hash": QuerySpec(docs_sample_hash, SAMPLE_SQL),
@@ -3007,15 +1371,11 @@ CATALOG: dict[str, QuerySpec] = {
     "docs_quality_classifier": QuerySpec(docs_quality_classifier, CLS_SQL),
     "corpus_vocab_coverage": QuerySpec(corpus_vocab_coverage, VOCAB_SQL),
     "corpus_mix_weights": QuerySpec(corpus_mix_weights, MIX_SQL),
-    "docs_dedup_incremental": QuerySpec(docs_dedup_incremental, INC_DEDUP_SQL),
-    "docs_snapshot_diff": QuerySpec(docs_snapshot_diff, SNAPSHOT_DIFF_SQL),
-    "docs_simhash_neardup": QuerySpec(docs_simhash_neardup, SIMHASH_NEARDUP_SQL),
     "events_funnel": QuerySpec(events_funnel, FUNNEL_SQL),
     "events_retention": QuerySpec(events_retention, RETENTION_SQL),
     "docs_length_quantiles": QuerySpec(docs_length_quantiles, QUANTILES_SQL),
     "corpus_bigram_lm": QuerySpec(corpus_bigram_lm, BIGRAM_SQL),
     "corpus_bpe_merges": QuerySpec(corpus_bpe_merges, BPE_MERGES_SQL),
     "docs_lang_quality": QuerySpec(docs_lang_quality, LANG_SQL),
-    "docs_fingerprint": QuerySpec(docs_fingerprint, FP_SQL),
     "media_metadata": QuerySpec(media_metadata, MEDIA_SQL),
 }

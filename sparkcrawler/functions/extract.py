@@ -243,13 +243,6 @@ def extract_page_udf(url: pd.Series, html: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"links": links, "text_len": tlen})
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def extract_links_udf(url: pd.Series, html: pd.Series) -> pd.Series:
-    return pd.Series(
-        [extract_links_py(u, h) for u, h in zip(url, html)], dtype="object"
-    )
-
-
 @F.pandas_udf(StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:
     return pd.Series([extract_text_py(h) for h in html], dtype="object")

@@ -79,7 +79,6 @@ class RoundPlan:
 
     crawl_log: DataFrame   # terminal rows logged this round
     deferred: DataFrame    # politeness overflow + retryable errors → next frontier
-    admitted: DataFrame    # what passed trim+robots+politeness (pre-fetch)
     decided: DataFrame     # politeness-tagged frontier — persist across the
                            # round's jobs so the windows compute once
     extracted: DataFrame   # fetched+extracted rows (FRONTIER_COLS + links +
@@ -286,7 +285,6 @@ def build_round(
         )
     else:
         parsed_rows = extracted
-        rl_retry = None
 
     crawl_log = (
         log_row(parsed_rows, schemas.PARSED, 200, True)
@@ -319,14 +317,13 @@ def build_round(
         # data), and keeping the branch would drag the fetch-miss
         # anti-join's broadcast build into every frontier-write job
         deferred_out = deferred_out.unionByName(retryable.selectExpr(*retry_sel))
-    if has_status and rl_retry is not None and retries > 1:
+    if has_status and retries > 1:
         # same construction argument: 429 re-enqueues need retries > 1
         deferred_out = deferred_out.unionByName(rl_retry.selectExpr(*retry_sel))
 
     return RoundPlan(
         crawl_log=crawl_log,
         deferred=deferred_out,
-        admitted=admitted.select(*FRONTIER_COLS),
         decided=decided,
         extracted=extracted,
     )
@@ -335,16 +332,13 @@ def build_round(
 def discovered_links(parsed: DataFrame) -> DataFrame:
     """Explode parsed pages' same-host links into frontier candidates.
 
-    ``parsed`` needs (links, depth, round) — either the persisted
-    extracted cache (hot path: no crawl_log re-scan) or a crawl_log
-    filtered to PARSED rows. Candidate identity (url_hash, host) is
+    ``parsed`` needs (links, depth, round): the persisted extracted
+    cache, so no crawl_log re-scan. Candidate identity (url_hash, host) is
     computed JVM-side (xxhash64 + parse_url). A URL linked from several
     pages yields one row per link; the caller's seen filter
     (``ExactSeenShards.filter_new``) keeps one row per url_hash (depth
     is constant within a round, so any row is the min).
     """
-    if "crawl_status" in parsed.columns:
-        parsed = parsed.where(F.col("crawl_status") == schemas.PARSED)
     if "status_code" in parsed.columns:
         # rate-limited / HTTP-error fetches are not parsed pages —
         # their links never enter discovery

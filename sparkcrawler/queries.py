@@ -379,12 +379,12 @@ def _outdegree_expected_dir() -> str:
 
 
 def pages_outdegree_hist(spark, sf_dir):
-    """Link-extraction UDF exercised standalone: out-degree histogram
-    of the synthetic corpus (same-host links only). The oracle is the
-    pure-Python extractor's histogram (:func:`_outdegree_expected_dir`)
-    — a genuine differential check of the Arrow UDF against the
-    reference-parity extractor."""
-    from sparkcrawler.functions.extract import extract_links_udf
+    """The crawl's extract UDF exercised standalone: out-degree
+    histogram of the synthetic corpus (same-host links only). The
+    oracle is the pure-Python extractor's histogram
+    (:func:`_outdegree_expected_dir`) — a genuine differential check of
+    the Arrow UDF against the reference-parity extractor."""
+    from sparkcrawler.functions.extract import extract_page_udf
     from sparkcrawler.sources.synth import synth_pages_df
 
     _outdegree_expected_dir()
@@ -392,7 +392,7 @@ def pages_outdegree_hist(spark, sf_dir):
     deg = pages.select(
         F.size(
             F.filter(
-                extract_links_udf("url", "html"),
+                extract_page_udf("url", "html").links,
                 lambda x: F.parse_url(x, F.lit("HOST"))
                 == F.parse_url(F.col("url"), F.lit("HOST")),
             )

@@ -21,7 +21,7 @@ def _scratch_dir() -> str | None:
     dir on ``/dev/shm`` when it exists with generous headroom.
 
     Why: every byte this engine scratches — shuffle spill, per-round
-    crawl_log/frontier sinks, snapshot intermediates — is ephemeral
+    crawl_log/frontier sinks — is ephemeral
     within one run, but on a disk-backed ``/tmp`` those writes
     accumulate dirty pages whose periodic writeback stalls the WHOLE
     box for seconds (measured: one in ~4 bench crawls hit a 15-20s

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from sparkcrawler.functions.extract import (
     extract_links_py,
-    extract_links_udf,
+    extract_page_udf,
     extract_text_py,
     extract_text_udf,
     oracle_links,
@@ -65,7 +65,7 @@ def test_udfs_match_python_and_corpus_text_byte_identical(spark):
 
     _, pages = synth_pages_df(spark, 120, 5, with_sitemaps=False)
     got = (
-        pages.withColumn("links", extract_links_udf("url", "html"))
+        pages.withColumn("links", extract_page_udf("url", "html").links)
         .withColumn("text2", extract_text_udf("html"))
         .select("url", "html", "links", "text", "text2")
         .collect()
@@ -84,7 +84,7 @@ def test_same_host_filter_jvm_side_matches_oracle(spark):
 
     _, pages = synth_pages_df(spark, 60, 4, with_sitemaps=False)
     df = (
-        pages.withColumn("links_all", extract_links_udf("url", "html"))
+        pages.withColumn("links_all", extract_page_udf("url", "html").links)
         .withColumn("host", F.parse_url("url", F.lit("HOST")))
         .withColumn(
             "links",
