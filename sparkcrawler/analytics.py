@@ -1,563 +1,17 @@
-"""Test-only analytics catalog: TPC-H-style, event, text and media
-queries over the driver-provided testdata star schema.
+"""Test-only analytics catalog: one media query.
 
 No crawl calls this module and the driver contract does not serve it:
 ``__spark_entry__`` serves the crawl-output catalog in
 :mod:`sparkcrawler.queries`. ``tests/test_queries.py`` still checks
-every entry of :data:`CATALOG` against its DuckDB oracle until later
-stages delete these queries and, last, this module.
-
-Alignment rules (the tests hash values after sorting columns by
-name): every computed column is aliased identically on both sides;
-doubles are rounded (2dp for money sums, 4dp for ratios) so
-summation-order differences between engines vanish; DuckDB integer
-sums are cast to BIGINT to match Spark's long; dates are emitted as
-``yyyy-MM-dd`` strings; every ORDER BY under a LIMIT carries a unique
-tiebreak column so the selected row *set* is deterministic.
+:data:`CATALOG`'s one entry, ``media_metadata``, against its DuckDB
+oracle until the media stage deletes it and, with it, this module.
+The query reads no testdata table: the Spark side sniffs 200 synthetic
+blobs and the oracle computes their metadata from the row index.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-
 from sparkcrawler.queries import QuerySpec
-
-
-# Explicit schemas for the driver-provided testdata tables: a scan
-# should never pay driver-side footer/schema inference per query — at
-# 100 TB the footer listing alone is a distributed job, and even here
-# it is 0.1-2s of py4j/driver latency on EVERY _t() call. Matches the
-# parquet files bit-for-bit (generated from their arrow schemas).
-_TESTDATA_DDL = {
-    "region": "r_regionkey int, r_name string",
-    "nation": "n_nationkey int, n_name string, n_regionkey int",
-    "customer": "c_custkey bigint, c_name string, c_nationkey int, "
-                "c_acctbal double, c_mktsegment string",
-    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, "
-                "s_acctbal double",
-    "part": "p_partkey bigint, p_name string, p_brand string, "
-            "p_type string, p_size int, p_retailprice double",
-    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
-              "o_totalprice double, o_orderdate timestamp_ntz, "
-              "o_orderpriority string",
-    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
-                "l_linenumber int, l_quantity double, "
-                "l_extendedprice double, l_discount double, l_tax double, "
-                "l_returnflag string, l_linestatus string, "
-                "l_shipdate timestamp_ntz",
-    "events": "event_id bigint, ts timestamp_ntz, user_id bigint, "
-              "event_type string, value double, props string",
-    "documents": "doc_id bigint, text string, lang string, source string, "
-                 "n_chars bigint",
-}
-
-
-# Tables whose per-row work dominates their byte size (text payloads
-# feeding UDF-heavy or explode-heavy pipelines). Their scans are
-# widened to the session's core count when the natural file split
-# produces fewer tasks — at sandbox scale a 6 MB documents.parquet
-# splits into 2 tasks (maxPartitionBytes=128m, openCostInBytes=4m), so
-# every pre-exchange stage (gram explode, regex, Arrow pass) ran on 2
-# of N cores. Scale-adaptive by construction: a corpus that already
-# scans with >= defaultParallelism splits is returned untouched, so no
-# full-corpus shuffle ever appears at real scale (guide §2.5/§6.1).
-_WIDEN_TABLES = frozenset({"documents"})
-# (sf_dir, table, parallelism) -> widen?  The natural-split probe
-# (df.rdd.getNumPartitions()) costs ~0.1s of driver-side planning per
-# call; the answer is a pure function of the on-disk file layout and
-# the session core count, so it is computed once per table.
-_WIDEN_CACHE: dict[tuple[str, str, int], bool] = {}
-
-
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, wide: bool = True
-) -> DataFrame:
-    ddl = _TESTDATA_DDL.get(name)
-    reader = spark.read.schema(ddl) if ddl else spark.read
-    df = reader.parquet(f"{sf_dir}/{name}.parquet")
-    if wide and name in _WIDEN_TABLES:
-        par = spark.sparkContext.defaultParallelism
-        key = (sf_dir, name, par)
-        widen = _WIDEN_CACHE.get(key)
-        if widen is None:
-            widen = df.rdd.getNumPartitions() < par
-            _WIDEN_CACHE[key] = widen
-        if widen:
-            df = df.repartition(par)
-    return df
-
-
-# --------------------------------------------------------------------------
-# Relational core over the TPC-H-ish star schema
-# --------------------------------------------------------------------------
-
-
-def q1_pricing_summary(spark, sf_dir):
-    """TPC-H Q1 shape: wide multi-agg groupBy — partial aggregation is
-    map-side, one shuffle on the 2 group keys."""
-    li = _t(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-01"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
-            F.round(F.sum(disc_price * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-Q1_SQL = """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-       round(avg(l_quantity), 4) AS avg_qty,
-       round(avg(l_discount), 4) AS avg_disc,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-01'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
-
-
-def q3_shipping_priority(spark, sf_dir):
-    """TPC-H Q3 shape: 3-way join + agg + deterministic top-10."""
-    cust = _t(spark, sf_dir, "customer").where(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    orders = _t(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < F.lit("1998-06-01")
-    )
-    li = _t(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") > F.lit("1998-06-01")
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .select(
-            "l_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-            "revenue",
-        )
-        .orderBy(F.desc("revenue"), "l_orderkey")
-        .limit(10)
-    )
-
-
-Q3_SQL = """
-SELECT l_orderkey,
-       strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-06-01'
-  AND l_shipdate > TIMESTAMP '1998-06-01'
-GROUP BY l_orderkey, o_orderdate
-ORDER BY revenue DESC, l_orderkey
-LIMIT 10
-"""
-
-
-def q5_region_revenue(spark, sf_dir):
-    """TPC-H Q5 shape: 6-way join; small dims broadcast."""
-    region = _t(spark, sf_dir, "region")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    sup = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01"))
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(
-            F.broadcast(sup),
-            (li.l_suppkey == sup.s_suppkey)
-            & (cust.c_nationkey == sup.s_nationkey),
-        )
-        .join(F.broadcast(nation), sup.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_name", "n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .orderBy("r_name", "n_name")
-    )
-
-
-Q5_SQL = """
-SELECT r_name, n_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate < TIMESTAMP '1997-01-01'
-GROUP BY r_name, n_name
-ORDER BY r_name, n_name
-"""
-
-
-def q4_order_priority(spark, sf_dir):
-    """TPC-H Q4 shape: correlated EXISTS → left-semi join."""
-    orders = _t(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1996-10-01"))
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        orders.join(
-            li,
-            (orders.o_orderkey == li.l_orderkey)
-            & (li.l_shipdate > orders.o_orderdate),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
-Q4_SQL = """
-SELECT o_orderpriority, count(*) AS order_count
-FROM orders
-WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate < TIMESTAMP '1996-10-01'
-  AND EXISTS (SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
-"""
-
-
-def top3_customers_per_nation(spark, sf_dir):
-    """Top-K per group: the politeness-budget window shape (P2)."""
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    w = Window.partitionBy("n_name").orderBy(
-        F.desc("c_acctbal"), F.col("c_custkey")
-    )
-    return (
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 3)
-        .select(
-            "n_name", "c_custkey", F.round("c_acctbal", 2).alias("acctbal"), "rnk"
-        )
-        .orderBy("n_name", "rnk")
-    )
-
-
-TOP3_SQL = """
-SELECT n_name, c_custkey, round(c_acctbal, 2) AS acctbal,
-       CAST(row_number() OVER (PARTITION BY n_name
-            ORDER BY c_acctbal DESC, c_custkey) AS INTEGER) AS rnk
-FROM customer JOIN nation ON c_nationkey = n_nationkey
-QUALIFY rnk <= 3
-ORDER BY n_name, rnk
-"""
-
-
-def customers_without_orders(spark, sf_dir):
-    """Anti-join — the URL-seen dedup shape (J1/J5) on relational data."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-    )
-
-
-ANTI_SQL = """
-SELECT c_custkey, c_name
-FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-ORDER BY c_custkey
-"""
-
-
-def events_sessionized(spark, sf_dir):
-    """Sessionization: lag + gap>30min cumulative flags (streaming-ish
-    semantics done relationally; A4/round analog)."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # parquet ts is TIMESTAMP_NTZ; session tz is UTC so the NTZ→TZ cast
-    # is identity, matching DuckDB's naive-timestamp date_diff
-    secs = F.col("ts").cast("timestamp").cast("long")
-    gap = secs - F.lag(secs).over(w)
-    return (
-        ev.withColumn(
-            "new_s",
-            F.when(gap.isNull() | (gap > 1800), F.lit(1)).otherwise(F.lit(0)),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.sum("new_s").alias("n_sessions"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .orderBy("user_id")
-    )
-
-
-SESSION_SQL = """
-WITH g AS (
-  SELECT user_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR date_diff('second', lag(ts) OVER w, ts) > 1800
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-)
-SELECT user_id, CAST(sum(new_s) AS BIGINT) AS n_sessions,
-       count(*) AS n_events
-FROM g GROUP BY user_id ORDER BY user_id
-"""
-
-
-def events_daily(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .orderBy("day", "event_type")
-    )
-
-
-DAILY_SQL = """
-SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
-       count(*) AS n, round(sum(value), 2) AS total_value
-FROM events GROUP BY 1, 2 ORDER BY day, event_type
-"""
-
-
-def monthly_order_growth(spark, sf_dir):
-    orders = _t(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        F.date_format("o_orderdate", "yyyy-MM").alias("month")
-    ).agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-    )
-    w = Window.orderBy("month")
-    return monthly.withColumn("prev_n", F.lag("n_orders").over(w)).orderBy(
-        "month"
-    )
-
-
-MONTHLY_SQL = """
-WITH m AS (
-  SELECT strftime(o_orderdate, '%Y-%m') AS month,
-         count(*) AS n_orders, round(sum(o_totalprice), 2) AS revenue
-  FROM orders GROUP BY 1
-)
-SELECT month, n_orders, revenue,
-       lag(n_orders) OVER (ORDER BY month) AS prev_n
-FROM m ORDER BY month
-"""
-
-
-def part_brand_stats(spark, sf_dir):
-    part = _t(spark, sf_dir, "part")
-    return (
-        part.groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).alias("n_parts"),
-            F.round(F.avg("p_retailprice"), 4).alias("avg_price"),
-            F.min("p_size").alias("min_size"),
-            F.max("p_size").alias("max_size"),
-        )
-        .orderBy("p_brand")
-    )
-
-
-PART_SQL = """
-SELECT p_brand, count(*) AS n_parts,
-       round(avg(p_retailprice), 4) AS avg_price,
-       min(p_size) AS min_size, max(p_size) AS max_size
-FROM part GROUP BY p_brand ORDER BY p_brand
-"""
-
-
-# --------------------------------------------------------------------------
-# Training-data pipeline ops over `documents`
-# --------------------------------------------------------------------------
-
-
-def _words_of(docs: DataFrame) -> DataFrame:
-    return docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).where(F.col("w") != "")
-
-
-def _words(spark, sf_dir):
-    return _words_of(_t(spark, sf_dir, "documents"))
-
-
-def docs_unigram_surprisal(spark, sf_dir):
-    """Perplexity-proxy quality score: per-document mean surprisal
-    −(1/n)·Σ ln p(w) under the corpus's own unigram distribution — the
-    cheap stand-in for a KenLM quality filter (CCNet-style) that needs
-    no external model. High surprisal = rare-word soup (gibberish,
-    boilerplate hashes); low = repetitive filler; both tails get cut in
-    a real pipeline.
-
-    Scale shape: the vocabulary is BOUNDED (Heaps' law — millions of
-    types against 10^10 tokens), so the unigram table is the small side:
-    one explode + partial-agg shuffle builds it, a single-partition
-    window-sum over the *vocab only* attaches the corpus total with no
-    driver action and no crossJoin, and the word→count lookup is a
-    broadcast hash join the corpus streams through. avg() of doubles
-    differs across engines only in summation order; round(·,6) absorbs
-    it (both engines' ln is the same IEEE libm contract).
-
-    Round 7 (second pass): a (doc_id, word, count) restructure was
-    measured and REVERTED — its tf subtree feeds both the vocab
-    broadcast build side and the per-doc aggregate, so the
-    repartition+aggregate pipeline ran twice per query (broadcast build
-    sides recompute their subtree), which lost to this shape's two
-    cheap partial-agg shuffles at every SF (A/B at sf0.1: 0.75 vs
-    1.19s; at sf1.0: tie). The explode stays narrow (``wide=False``):
-    the per-row work is one split+log, so the widening exchange costs
-    more than the 2-task scan it fixes (same finding as
-    docs_sample_hash et al.)."""
-    words = _words_of(_t(spark, sf_dir, "documents", wide=False))
-    vocab = words.groupBy("w").agg(F.count("*").cast("long").alias("c"))
-    vocab_tot = vocab.withColumn(
-        "total", F.sum("c").over(Window.partitionBy())
-    )
-    return (
-        words.join(F.broadcast(vocab_tot), "w")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_words"),
-            F.round(
-                F.avg(
-                    F.log(
-                        F.col("total").cast("double")
-                        / F.col("c").cast("double")
-                    )
-                ),
-                6,
-            ).alias("surprisal_nats"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-SURPRISAL_SQL = """
-WITH words AS (
-  SELECT doc_id,
-         unnest(list_filter(string_split(text, ' '), w -> w <> '')) AS w
-  FROM documents
-),
-vocab AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM words GROUP BY w),
-tot AS (SELECT CAST(sum(c) AS DOUBLE) AS total FROM vocab)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_words,
-       round(avg(ln(total / CAST(c AS DOUBLE))), 6) AS surprisal_nats
-FROM words JOIN vocab USING (w) CROSS JOIN tot
-GROUP BY doc_id
-ORDER BY doc_id
-"""
-
-
-_STOPWORDS = ["the", "a", "join", "group", "order"]
-
-
-def docs_lang_quality(spark, sf_dir):
-    """Stopword-ratio quality score + threshold language flag — the
-    deterministic heuristic both engines compute identically."""
-    words = _words(spark, sf_dir)
-    agg = words.groupBy("doc_id").agg(
-        F.sum(
-            F.when(F.col("w").isin(_STOPWORDS), F.lit(1)).otherwise(F.lit(0))
-        ).cast("long").alias("n_stop"),
-        F.count(F.lit(1)).alias("n_words"),
-    )
-    ratio = F.round(F.col("n_stop") / F.col("n_words"), 4)
-    return (
-        agg.withColumn("stop_ratio", ratio)
-        .withColumn(
-            "lang_guess",
-            F.when(F.col("stop_ratio") > 0.05, F.lit("en")).otherwise(
-                F.lit("other")
-            ),
-        )
-        .orderBy("doc_id")
-    )
-
-
-LANG_SQL = """
-WITH agg AS (
-  SELECT doc_id,
-         CAST(sum(CASE WHEN w IN ('the','a','join','group','order')
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_stop,
-         count(*) AS n_words
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
-  WHERE w <> '' GROUP BY doc_id
-)
-SELECT doc_id, n_stop, n_words,
-       round(n_stop * 1.0 / n_words, 4) AS stop_ratio,
-       CASE WHEN round(n_stop * 1.0 / n_words, 4) > 0.05
-            THEN 'en' ELSE 'other' END AS lang_guess
-FROM agg ORDER BY doc_id
-"""
-
-
-def events_hourly_windows(spark, sf_dir):
-    """Tumbling event-time windows: one-hour buckets per event type."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm").alias("window_start"),
-            "event_type", "n", "total_value",
-        )
-        .orderBy("window_start", "event_type")
-    )
-
-
-HOURLY_SQL = """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS window_start,
-       event_type, count(*) AS n, round(sum(value), 2) AS total_value
-FROM events GROUP BY 1, 2 ORDER BY window_start, event_type
-"""
 
 
 def media_metadata(spark, sf_dir):
@@ -603,779 +57,6 @@ FROM range(200) t(i) ORDER BY media_id
 """
 
 
-# --------------------------------------------------------------------------
-# Privacy / normalization / sampling / packing — the remaining
-# curation stages of a training-data pipeline (beyond the reference's
-# crawl surface, like the quality ops above). The testdata
-# corpus carries no real PII or non-NFC text, so each op first injects
-# a deterministic doc_id-derived payload IN THE QUERY on both engines
-# — the detection/redaction/normalization logic then has real work to
-# do and the oracle checks it byte-for-byte (md5 of the cleaned text).
-# --------------------------------------------------------------------------
-
-# RE2 (DuckDB) and java.util.regex (Spark) evaluate these identically:
-# character classes + bounded/greedy quantifiers only, no lookarounds,
-# no backreferences.
-_PII_EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}"
-_PII_IP_RE = "[0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}"
-_PII_PHONE_RE = "555-[0-9]{4}"
-
-
-def _pii_augmented(docs: DataFrame):
-    """text + deterministic synthetic PII: every doc gets an email,
-    even doc_ids an IPv4, doc_id%3==0 a phone — so per-doc counts vary
-    and the redactor is exercised on 0/1/2/3-hit documents alike."""
-    sid = F.col("doc_id").cast("string")
-    return F.concat(
-        F.col("text"),
-        F.lit(" reach user"), sid, F.lit("@mail.example.com"),
-        F.when(
-            F.col("doc_id") % 2 == 0,
-            F.concat(
-                F.lit(" from 10."), (F.col("doc_id") % 200).cast("string"),
-                F.lit("."), ((F.col("doc_id") * 7) % 250).cast("string"),
-                F.lit(".9"),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(
-                F.lit(" call 555-01"),
-                F.lpad((F.col("doc_id") % 100).cast("string"), 2, "0"),
-            ),
-        ).otherwise(F.lit("")),
-    )
-
-
-def docs_pii_scrub(spark, sf_dir):
-    """PII detection + redaction (emails, IPv4s, phone numbers), the
-    privacy-scrub stage every published web-text pipeline runs before
-    training. Pure JVM builtins — regexp_count for detection,
-    three chained regexp_replace for redaction — one scan, zero
-    shuffle before the final sort; the oracle pins the redacted text
-    byte-for-byte via md5."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    aug = docs.withColumn("t", _pii_augmented(docs))
-    clean = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace("t", _PII_EMAIL_RE, "<EMAIL>"),
-            _PII_IP_RE, "<IP>"),
-        _PII_PHONE_RE, "<PHONE>")
-    return aug.select(
-        "doc_id",
-        "lang",
-        F.regexp_count("t", F.lit(_PII_EMAIL_RE)).cast("long").alias("n_emails"),
-        F.regexp_count("t", F.lit(_PII_IP_RE)).cast("long").alias("n_ips"),
-        F.regexp_count("t", F.lit(_PII_PHONE_RE)).cast("long").alias("n_phones"),
-        F.length(clean).cast("long").alias("clean_len"),
-        F.md5(clean.cast("binary")).alias("clean_md5"),
-    ).orderBy("doc_id")
-
-
-PII_SQL = f"""
-WITH aug AS (
-  SELECT doc_id, lang,
-         text
-         || ' reach user' || CAST(doc_id AS VARCHAR) || '@mail.example.com'
-         || CASE WHEN doc_id % 2 = 0
-                 THEN ' from 10.' || CAST(doc_id % 200 AS VARCHAR) || '.'
-                      || CAST((doc_id * 7) % 250 AS VARCHAR) || '.9'
-                 ELSE '' END
-         || CASE WHEN doc_id % 3 = 0
-                 THEN ' call 555-01' || lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0')
-                 ELSE '' END AS t
-  FROM documents
-),
-scrub AS (
-  SELECT doc_id, lang, t,
-         regexp_replace(
-           regexp_replace(
-             regexp_replace(t, '{_PII_EMAIL_RE}', '<EMAIL>', 'g'),
-             '{_PII_IP_RE}', '<IP>', 'g'),
-           '{_PII_PHONE_RE}', '<PHONE>', 'g') AS clean
-  FROM aug
-)
-SELECT doc_id, lang,
-       CAST(len(regexp_extract_all(t, '{_PII_EMAIL_RE}')) AS BIGINT) AS n_emails,
-       CAST(len(regexp_extract_all(t, '{_PII_IP_RE}')) AS BIGINT) AS n_ips,
-       CAST(len(regexp_extract_all(t, '{_PII_PHONE_RE}')) AS BIGINT) AS n_phones,
-       length(clean) AS clean_len,
-       md5(clean) AS clean_md5
-FROM scrub ORDER BY doc_id
-"""
-
-
-# Combining marks appended so NFC has real compositions to perform:
-# e+U+0301 -> é, u+U+0308 -> ü, o+U+0303 -> õ (all three compose, so
-# len_raw - len_nfc == 3 exactly when the normalizer works).
-_NFC_SUFFIX = " cafe\u0301 u\u0308ber no\u0303"  # DECOMPOSED (combining marks)
-
-
-def docs_nfc_norm(spark, sf_dir):
-    """Unicode NFC normalization — canonical-composition pass every
-    multilingual corpus needs before tokenization (decomposed and
-    precomposed spellings of the same word must hash/dedup together).
-    Spark has no NFC builtin, so this is a mapInPandas Arrow pass over
-    ``unicodedata.normalize`` (stdlib, same tables as DuckDB's utf8proc
-    for these sequences); zero shuffle before the final sort. The
-    oracle (DuckDB ``nfc_normalize``) pins the normalized bytes via
-    md5."""
-    import unicodedata
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def compute(batches):
-        import hashlib
-
-        for pdf in batches:
-            ids, lraw, lnfc, ncomp, md5s = [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if not isinstance(text, str):
-                    continue
-                raw = text + _NFC_SUFFIX
-                nfc = unicodedata.normalize("NFC", raw)
-                ids.append(doc_id)
-                lraw.append(len(raw))
-                lnfc.append(len(nfc))
-                ncomp.append(len(raw) - len(nfc))
-                md5s.append(hashlib.md5(nfc.encode("utf-8")).hexdigest())
-            yield pd.DataFrame(
-                {"doc_id": ids, "len_raw": lraw, "len_nfc": lnfc,
-                 "n_composed": ncomp, "nfc_md5": md5s}
-            )
-
-    return docs.mapInPandas(
-        compute,
-        schema="doc_id long, len_raw long, len_nfc long, "
-               "n_composed long, nfc_md5 string",
-    ).orderBy("doc_id")
-
-
-NFC_SQL = """
-WITH aug AS (
-  SELECT doc_id,
-         text || ' cafe' || chr(769) || ' u' || chr(776) || 'ber no'
-              || chr(771) AS raw
-  FROM documents
-  WHERE text IS NOT NULL  -- the Arrow pass emits no row for NULL text
-)
-SELECT doc_id,
-       length(raw) AS len_raw,
-       length(nfc_normalize(raw)) AS len_nfc,
-       length(raw) - length(nfc_normalize(raw)) AS n_composed,
-       md5(nfc_normalize(raw)) AS nfc_md5
-FROM aug ORDER BY doc_id
-"""
-
-
-def docs_sample_hash(spark, sf_dir):
-    """Deterministic hash-based stratified sampling: keep 10% of 'en'
-    and 40% of every other language — the rebalancing step a
-    multilingual training mix uses to up-weight low-resource
-    languages. The sampling key is content-derived (md5-prefix of the
-    text, a conv recipe both engines compute exactly), so
-    the decision is reproducible across engines, runs, AND cluster
-    sizes — no RNG, no per-partition state, embarrassingly parallel at
-    100 TB (a pure filter: pushes below any downstream shuffle)."""
-    docs = _t(spark, sf_dir, "documents", wide=False).select(
-        "doc_id", "lang", "text")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("text").cast("binary")), 1, 7), 16, 10)
-        .cast("long") % 100
-    )
-    rate = F.when(F.col("lang") == "en", F.lit(10)).otherwise(F.lit(40))
-    return (
-        docs.withColumn("bucket", bucket)
-        .where(F.col("bucket") < rate)
-        .select("doc_id", "lang", "bucket")
-        .orderBy("doc_id")
-    )
-
-
-SAMPLE_SQL = """
-SELECT doc_id, lang,
-       ('0x' || substr(md5(text), 1, 7))::BIGINT % 100 AS bucket
-FROM documents
-WHERE ('0x' || substr(md5(text), 1, 7))::BIGINT % 100
-      < CASE WHEN lang = 'en' THEN 10 ELSE 40 END
-ORDER BY doc_id
-"""
-
-_PACK_BUDGET = 256  # tokens per packed training sequence
-
-
-def docs_pack_sequences(spark, sf_dir):
-    """GPT-style sequence packing: documents are concatenated in
-    doc_id order into fixed-budget token sequences (budget 256) and
-    each doc reports which packed sequences it lands in. Packing is
-    PER SOURCE (the window partitions on ``source``), which is how a
-    100-TB pipeline shards it — each shard packs independently, so the
-    window never sees more than one shard's rows and no global sort or
-    single-partition window exists. One shuffle (the window partition),
-    then pure arithmetic."""
-    docs = _t(spark, sf_dir, "documents", wide=False).select(
-        "doc_id", "source", "text")
-    n_tokens = F.size(
-        F.filter(F.split("text", " "), lambda w: w != "")
-    ).cast("long")
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    toks = docs.select("doc_id", "source", n_tokens.alias("n_tokens"))
-    cum = toks.withColumn(
-        "start_tok", F.sum("n_tokens").over(w) - F.col("n_tokens")
-    )
-    return (
-        cum.where(F.col("n_tokens") > 0)
-        .select(
-            "doc_id",
-            "source",
-            "n_tokens",
-            F.col("start_tok").cast("long").alias("start_tok"),
-            F.floor(F.col("start_tok") / _PACK_BUDGET).alias("seq_first"),
-            F.floor(
-                (F.col("start_tok") + F.col("n_tokens") - 1) / _PACK_BUDGET
-            ).alias("seq_last"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-PACK_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, source,
-         CAST(len(list_filter(string_split(text, ' '), w -> w <> ''))
-              AS BIGINT) AS n_tokens
-  FROM documents
-),
-cum AS (
-  SELECT doc_id, source, n_tokens,
-         CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                                  ROWS UNBOUNDED PRECEDING) - n_tokens
-              AS BIGINT) AS start_tok
-  FROM toks
-)
-SELECT doc_id, source, n_tokens, start_tok,
-       start_tok // {_PACK_BUDGET} AS seq_first,
-       (start_tok + n_tokens - 1) // {_PACK_BUDGET} AS seq_last
-FROM cum WHERE n_tokens > 0 ORDER BY doc_id
-"""
-
-
-def docs_quality_classifier(spark, sf_dir):
-    """Model-based quality filter: a fixed-weight logistic regression
-    over cheap text features (log length, stopword ratio, mean word
-    length, non-alpha penalty) — the fastText/CCNet-style "quality
-    classifier" stage of a web-text pipeline, with the trained weights
-    pinned as constants so the op is deterministic and cross-engine
-    exact. Every feature is built from JVM builtins in one codegen'd
-    Project (no UDF, no shuffle before the output sort); the sigmoid
-    is plain IEEE double math both engines round to 6dp.
-
-    Round 7 (guide §1.2 per-task work): the two costliest features now
-    come from character arithmetic instead of a per-char regex and a
-    per-word interpreted fold — ``sum_wlen`` = total chars minus the
-    single-space separators (every non-space char belongs to exactly
-    one word, empty words contribute 0 either way), and ``n_alpha`` =
-    total chars minus the chars left after ``translate`` deletes
-    [a-z] (codepoint-exact, same contract as the regex)."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    words = F.filter(F.split("text", " "), lambda w: w != "")
-    stop = F.filter(
-        words, lambda w: w.isin("the", "a", "join", "group", "order")
-    )
-    n_tokens = F.size(words).cast("long")
-    n_stop = F.size(stop).cast("long")
-    sum_wlen = (
-        F.length("text") - F.size(F.split("text", " ")) + F.lit(1)
-    ).cast("long")
-    n_alpha = F.length("text") - F.length(
-        F.translate("text", "abcdefghijklmnopqrstuvwxyz", "")
-    )
-    feats = docs.select(
-        "doc_id", "lang",
-        n_tokens.alias("n_tokens"),
-        n_stop.alias("n_stop"),
-        sum_wlen.alias("sum_wlen"),
-        n_alpha.cast("long").alias("n_alpha"),
-        F.length("text").cast("long").alias("n_chars"),
-    ).where(F.col("n_tokens") > 0)
-    z = (
-        F.lit(-6.0)
-        + F.lit(1.1) * F.log(F.lit(1.0) + F.col("n_tokens"))
-        + F.lit(8.0) * (F.col("n_stop").cast("double") / F.col("n_tokens"))
-        + F.lit(0.35) * (F.col("sum_wlen").cast("double") / F.col("n_tokens"))
-        - F.lit(2.5)
-        * (F.lit(1.0) - F.col("n_alpha").cast("double") / F.col("n_chars"))
-    )
-    quality = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-    return feats.select(
-        "doc_id", "lang", "n_tokens",
-        F.round(quality, 6).alias("quality"),
-        (quality >= 0.5).cast("long").alias("keep_flag"),
-    ).orderBy("doc_id")
-
-
-CLS_SQL = """
-WITH feats AS (
-  SELECT doc_id, lang,
-    CAST(len(list_filter(string_split(text,' '), w -> w <> ''))
-         AS BIGINT) AS n_tokens,
-    CAST(len(list_filter(string_split(text,' '),
-         w -> w IN ('the','a','join','group','order')))
-         AS BIGINT) AS n_stop,
-    CAST(list_sum(list_transform(
-           list_filter(string_split(text,' '), w -> w <> ''),
-           w -> length(w))) AS BIGINT) AS sum_wlen,
-    length(regexp_replace(text, '[^a-z]', '', 'g')) AS n_alpha,
-    length(text) AS n_chars
-  FROM documents
-),
-scored AS (
-  SELECT doc_id, lang, n_tokens,
-    CAST(-6.0 AS DOUBLE)
-    + CAST(1.1 AS DOUBLE) * ln(CAST(1 + n_tokens AS DOUBLE))
-    + CAST(8.0 AS DOUBLE) * (CAST(n_stop AS DOUBLE) / n_tokens)
-    + CAST(0.35 AS DOUBLE) * (CAST(sum_wlen AS DOUBLE) / n_tokens)
-    - CAST(2.5 AS DOUBLE)
-      * (CAST(1.0 AS DOUBLE) - CAST(n_alpha AS DOUBLE) / n_chars) AS z
-  FROM feats WHERE n_tokens > 0
-)
-SELECT doc_id, lang, n_tokens,
-       round(CAST(1.0 AS DOUBLE) / (CAST(1.0 AS DOUBLE) + exp(-z)), 6)
-         AS quality,
-       CAST(CAST(1.0 AS DOUBLE) / (CAST(1.0 AS DOUBLE) + exp(-z))
-            >= CAST(0.5 AS DOUBLE) AS BIGINT) AS keep_flag
-FROM scored ORDER BY doc_id
-"""
-
-
-def corpus_vocab_coverage(spark, sf_dir):
-    """Vocabulary coverage curve: rank words by corpus frequency and
-    report each top-100 word's cumulative share of all tokens — the
-    diagnostic a tokenizer-budget decision reads (how many vocab
-    entries cover 90% of the stream). The heavy part (per-word counts)
-    is ONE map-side-partial groupBy over the token stream; the ranking
-    window then runs on the BOUNDED vocab table only (31 distinct
-    words here; ≤ a few million at 100 TB — the standard bounded-dim
-    single-partition window, same justification as
-    :func:`docs_unigram_surprisal`), never on the token stream."""
-    docs = _t(spark, sf_dir, "documents").select("text")
-    words = F.filter(F.split("text", " "), lambda w: w != "")
-    counts = (
-        docs.select(F.explode(words).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w_rank = Window.orderBy(F.desc("n"), F.asc("w"))
-    w_cum = w_rank.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_all = Window.partitionBy()
-    ranked = counts.select(
-        F.row_number().over(w_rank).alias("rank"),
-        F.col("w").alias("word"),
-        "n",
-        (
-            F.sum("n").over(w_cum).cast("double")
-            / F.sum("n").over(w_all)
-        ).alias("share"),
-    )
-    return (
-        ranked.where(F.col("rank") <= 100)
-        .select("rank", "word", "n", F.round("share", 6).alias("cum_share"))
-        .orderBy("rank")
-    )
-
-
-VOCAB_SQL = """
-WITH words AS (
-  SELECT unnest(list_filter(string_split(text,' '), w -> w <> '')) AS w
-  FROM documents
-),
-counts AS (SELECT w, count(*) AS n FROM words GROUP BY w),
-ranked AS (
-  SELECT w, n,
-         row_number() OVER (ORDER BY n DESC, w) AS rank,
-         sum(n) OVER (ORDER BY n DESC, w ROWS UNBOUNDED PRECEDING) AS cum,
-         sum(n) OVER () AS tot
-  FROM counts
-)
-SELECT rank, w AS word, CAST(n AS BIGINT) AS n,
-       round(CAST(cum AS DOUBLE) / tot, 6) AS cum_share
-FROM ranked WHERE rank <= 100 ORDER BY rank
-"""
-
-
-def corpus_mix_weights(spark, sf_dir):
-    """Data-mixing weights: per-source token tallies and the sampling
-    weight that flattens the mix toward a uniform per-source token
-    budget (weight = min(1, fair_share / actual)) — the knob a
-    training-mix spec turns to stop one crawl source from dominating.
-    One map-side-partial groupBy over the corpus; the share/weight
-    arithmetic runs on the bounded source dim (20 rows) via a
-    full-frame window, never touching the token stream again."""
-    docs = _t(spark, sf_dir, "documents", wide=False).select("source", "text")
-    n_tokens = F.size(
-        F.filter(F.split("text", " "), lambda w: w != "")
-    ).cast("long")
-    per_src = docs.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(n_tokens).alias("n_tokens"),
-    )
-    w_all = Window.partitionBy()
-    t = F.sum("n_tokens").over(w_all).cast("double")
-    k = F.count(F.lit(1)).over(w_all).cast("double")
-    return per_src.select(
-        "source",
-        "n_docs",
-        "n_tokens",
-        F.round(F.col("n_tokens").cast("double") / t, 6).alias("token_share"),
-        F.round(
-            F.least(F.lit(1.0), (t / k) / F.col("n_tokens")), 6
-        ).alias("sample_weight"),
-    ).orderBy("source")
-
-
-MIX_SQL = """
-WITH toks AS (
-  SELECT source,
-         CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(len(list_filter(string_split(text,' '), w -> w <> '')))
-              AS BIGINT) AS n_tokens
-  FROM documents GROUP BY source
-),
-tot AS (SELECT sum(n_tokens) AS t, count(*) AS k FROM toks)
-SELECT source, n_docs, n_tokens,
-       round(CAST(n_tokens AS DOUBLE) / tot.t, 6) AS token_share,
-       round(least(CAST(1.0 AS DOUBLE),
-             (CAST(tot.t AS DOUBLE) / tot.k) / n_tokens), 6)
-         AS sample_weight
-FROM toks, tot ORDER BY source
-"""
-
-
-def events_funnel(spark, sf_dir):
-    """Ordered conversion funnel with per-stage time windows
-    (signup → view within 4h → purchase within 4h of the view) — the
-    sequence-analytics query every event pipeline runs. Each stage is
-    one groupBy producing a per-user earliest qualifying timestamp,
-    joined forward — stage N's table shrinks monotonically so the
-    joins get cheaper down the funnel, and nothing is windowed over
-    the raw event stream."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    s = ev.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias(
-            "t_signup"
-        )
-    )
-    four_h = F.expr("INTERVAL 4 HOURS")
-    v = (
-        ev.where(F.col("event_type") == "view")
-        .join(s.where(F.col("t_signup").isNotNull()), "user_id")
-        .where(
-            (F.col("ts") > F.col("t_signup"))
-            & (F.col("ts") <= F.col("t_signup") + four_h)
-        )
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_view"))
-    )
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(v, "user_id")
-        .where(
-            (F.col("ts") > F.col("t_view"))
-            & (F.col("ts") <= F.col("t_view") + four_h)
-        )
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_purchase"))
-    )
-
-    def stage(df, name, idx, col):
-        return df.agg(
-            F.lit(name).alias("stage"),
-            F.lit(idx).alias("stage_idx"),
-            F.count(col).cast("long").alias("n_users"),
-        )
-
-    return (
-        stage(s, "signup", 1, "t_signup")
-        .unionAll(stage(v, "view", 2, "t_view"))
-        .unionAll(stage(p, "purchase", 3, "t_purchase"))
-        .orderBy("stage_idx")
-    )
-
-
-FUNNEL_SQL = """
-WITH s AS (
-  SELECT user_id,
-         min(CASE WHEN event_type = 'signup' THEN ts END) AS t_signup
-  FROM events GROUP BY user_id
-),
-v AS (
-  SELECT e.user_id, min(e.ts) AS t_view
-  FROM events e JOIN s ON e.user_id = s.user_id
-  WHERE e.event_type = 'view' AND s.t_signup IS NOT NULL
-        AND e.ts > s.t_signup
-        AND e.ts <= s.t_signup + INTERVAL 4 HOUR
-  GROUP BY e.user_id
-),
-p AS (
-  SELECT e.user_id, min(e.ts) AS t_purchase
-  FROM events e JOIN v ON e.user_id = v.user_id
-  WHERE e.event_type = 'purchase' AND e.ts > v.t_view
-        AND e.ts <= v.t_view + INTERVAL 4 HOUR
-  GROUP BY e.user_id
-)
-SELECT 'signup' AS stage, 1 AS stage_idx,
-       CAST(count(t_signup) AS BIGINT) AS n_users FROM s
-UNION ALL SELECT 'view', 2, CAST(count(*) AS BIGINT) FROM v
-UNION ALL SELECT 'purchase', 3, CAST(count(*) AS BIGINT) FROM p
-ORDER BY stage_idx
-"""
-
-
-def events_retention(spark, sf_dir):
-    """Cohort retention: users grouped by first-activity day, share
-    still active 1/7/14 days later — the other canonical event-stream
-    analytic. Two groupBys (first-activity, per-cohort size) and one
-    distinct over (user, day offset); cohort arithmetic happens on the
-    bounded cohort×offset grid, not the event stream."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts")
-    firsts = ev.groupBy("user_id").agg(
-        F.min("ts").cast("date").alias("cohort_day")
-    )
-    activity = (
-        ev.join(firsts, "user_id")
-        .select(
-            "user_id",
-            "cohort_day",
-            F.datediff(F.col("ts").cast("date"), F.col("cohort_day")).alias(
-                "day_n"
-            ),
-        )
-        .distinct()
-    )
-    cohorts = firsts.groupBy("cohort_day").agg(
-        F.count(F.lit(1)).cast("long").alias("n0")
-    )
-    return (
-        activity.where(F.col("day_n").isin(1, 7, 14))
-        .join(cohorts, "cohort_day")
-        .groupBy("cohort_day", "day_n")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_active"),
-            F.max("n0").alias("cohort_size"),
-            F.round(
-                F.count(F.lit(1)).cast("double") / F.max("n0"), 4
-            ).alias("retention"),
-        )
-        .select(
-            F.date_format("cohort_day", "yyyy-MM-dd").alias("cohort_day"),
-            F.col("day_n").cast("long").alias("day_n"),
-            "n_active",
-            "cohort_size",
-            "retention",
-        )
-        .orderBy("cohort_day", "day_n")
-    )
-
-
-RETENTION_SQL = """
-WITH firsts AS (
-  SELECT user_id, CAST(min(ts) AS DATE) AS cohort_day
-  FROM events GROUP BY user_id
-),
-activity AS (
-  SELECT DISTINCT e.user_id, f.cohort_day,
-         datediff('day', f.cohort_day, CAST(e.ts AS DATE)) AS day_n
-  FROM events e JOIN firsts f ON e.user_id = f.user_id
-),
-cohorts AS (SELECT cohort_day, count(*) AS n0 FROM firsts GROUP BY cohort_day)
-SELECT strftime(c.cohort_day, '%Y-%m-%d') AS cohort_day,
-       CAST(a.day_n AS BIGINT) AS day_n,
-       CAST(count(*) AS BIGINT) AS n_active,
-       CAST(max(c.n0) AS BIGINT) AS cohort_size,
-       round(CAST(count(*) AS DOUBLE) / max(c.n0), 4) AS retention
-FROM activity a JOIN cohorts c ON a.cohort_day = c.cohort_day
-WHERE a.day_n IN (1, 7, 14)
-GROUP BY c.cohort_day, a.day_n
-ORDER BY cohort_day, day_n
-"""
-
-
-def docs_length_quantiles(spark, sf_dir):
-    """Ordered statistics: exact per-language document-length quartiles
-    + p95 (Spark ``percentile`` ≡ DuckDB ``quantile_cont``, both linear
-    interpolation on sorted values) — the length-distribution profile a
-    corpus report leads with. Exact percentile is a per-group sort; at
-    100 TB swap in ``percentile_approx`` (t-digest, mergeable, one
-    pass) — the query shape is unchanged, which is why the exact form
-    is the oracle contract here."""
-    docs = _t(spark, sf_dir, "documents", wide=False).select("lang", "n_chars")
-    pc = lambda p: F.round(
-        F.expr(f"percentile(CAST(n_chars AS DOUBLE), {p})"), 4
-    )
-    return (
-        docs.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            pc(0.25).alias("p25"),
-            pc(0.5).alias("p50"),
-            pc(0.75).alias("p75"),
-            pc(0.95).alias("p95"),
-        )
-        .orderBy("lang")
-    )
-
-
-QUANTILES_SQL = """
-SELECT lang,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       round(quantile_cont(CAST(n_chars AS DOUBLE), 0.25), 4) AS p25,
-       round(quantile_cont(CAST(n_chars AS DOUBLE), 0.5), 4) AS p50,
-       round(quantile_cont(CAST(n_chars AS DOUBLE), 0.75), 4) AS p75,
-       round(quantile_cont(CAST(n_chars AS DOUBLE), 0.95), 4) AS p95
-FROM documents GROUP BY lang ORDER BY lang
-"""
-
-
-def corpus_bigram_lm(spark, sf_dir):
-    """Bigram language-model statistics: top-50 adjacent word pairs
-    with conditional probability P(w2|w1) — the trainable artifact of
-    a count-based LM and the context table a next-word quality signal
-    reads. Pair construction is a HOF transform over each doc's token
-    array (no self-join on position), counts are one map-side-partial
-    groupBy, and the w1 marginal reuses the already-aggregated pair
-    table. Guarded on size≥2 because ``sequence(1, 0)`` DESCENDS in
-    Spark rather than producing an empty array."""
-    docs = _t(spark, sf_dir, "documents").select("text")
-    pairs = (
-        docs.selectExpr(
-            "filter(split(text, ' '), w -> w != '') AS ws"
-        )
-        .where("size(ws) >= 2")
-        .selectExpr(
-            "explode(transform(sequence(1, size(ws) - 1),"
-            " i -> struct(ws[i-1] AS w1, ws[i] AS w2))) AS pr"
-        )
-        .select("pr.w1", "pr.w2")
-    )
-    counts = pairs.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    uni = counts.groupBy("w1").agg(F.sum("n").alias("n1"))
-    return (
-        counts.join(uni, "w1")
-        .select(
-            "w1", "w2", "n",
-            F.round(F.col("n").cast("double") / F.col("n1"), 6).alias(
-                "p_cond"
-            ),
-        )
-        .orderBy(F.desc("n"), "w1", "w2")
-        .limit(50)
-    )
-
-
-BIGRAM_SQL = """
-WITH toks AS (
-  SELECT list_filter(string_split(text,' '), w -> w <> '') AS ws
-  FROM documents
-),
-pairs AS (
-  SELECT unnest(list_zip(ws[1:len(ws)-1], ws[2:len(ws)])) AS pr FROM toks
-  WHERE len(ws) >= 2
-),
-counts AS (
-  SELECT pr[1] AS w1, pr[2] AS w2, count(*) AS n
-  FROM pairs GROUP BY 1, 2
-),
-uni AS (SELECT w1, sum(n) AS n1 FROM counts GROUP BY w1)
-SELECT c.w1, c.w2, CAST(c.n AS BIGINT) AS n,
-       round(CAST(c.n AS DOUBLE) / u.n1, 6) AS p_cond
-FROM counts c JOIN uni u USING (w1)
-ORDER BY n DESC, w1, w2 LIMIT 50
-"""
-
-
-def corpus_bpe_merges(spark, sf_dir):
-    """The core BPE tokenizer-induction step: rank adjacent symbol
-    pairs inside words by corpus frequency — rank 1 is the first merge
-    a BPE trainer would perform; the top-20 table is the merge
-    frontier. Character pairs come from the same HOF-transform shape
-    as the bigram op (chars of each ≥2-char word), one shuffle for the
-    pair counts, ranking on the bounded pair dim."""
-    docs = _t(spark, sf_dir, "documents").select("text")
-    pairs = (
-        docs.selectExpr("explode(filter(split(text, ' '), w -> w != '')) AS w")
-        .where(F.length("w") >= 2)
-        .selectExpr(
-            "explode(transform(sequence(1, length(w) - 1),"
-            " i -> concat(substring(w, i, 1), substring(w, i + 1, 1))))"
-            " AS pair"
-        )
-    )
-    counts = pairs.groupBy("pair").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    w = Window.orderBy(F.desc("n"), "pair")
-    return (
-        counts.select(F.row_number().over(w).alias("rank"), "pair", "n")
-        .where(F.col("rank") <= 20)
-        .orderBy("rank")
-    )
-
-
-BPE_MERGES_SQL = """
-WITH words AS (
-  SELECT unnest(list_filter(string_split(text,' '), w -> w <> '')) AS w
-  FROM documents
-),
-chars AS (
-  SELECT string_split(w, '') AS cs FROM words WHERE length(w) >= 2
-),
-pairs AS (
-  SELECT unnest(list_zip(cs[1:len(cs)-1], cs[2:len(cs)])) AS pr FROM chars
-),
-counts AS (
-  SELECT pr[1] || pr[2] AS pair, count(*) AS n
-  FROM pairs GROUP BY 1
-)
-SELECT row_number() OVER (ORDER BY n DESC, pair) AS rank,
-       pair, CAST(n AS BIGINT) AS n
-FROM counts ORDER BY rank LIMIT 20
-"""
-
-
-# --------------------------------------------------------------------------
-
 CATALOG: dict[str, QuerySpec] = {
-    "q1_pricing_summary": QuerySpec(q1_pricing_summary, Q1_SQL),
-    "q3_shipping_priority": QuerySpec(q3_shipping_priority, Q3_SQL),
-    "q4_order_priority": QuerySpec(q4_order_priority, Q4_SQL),
-    "q5_region_revenue": QuerySpec(q5_region_revenue, Q5_SQL),
-    "top3_customers_per_nation": QuerySpec(top3_customers_per_nation, TOP3_SQL),
-    "customers_without_orders": QuerySpec(customers_without_orders, ANTI_SQL),
-    "events_sessionized": QuerySpec(events_sessionized, SESSION_SQL),
-    "events_daily": QuerySpec(events_daily, DAILY_SQL),
-    "monthly_order_growth": QuerySpec(monthly_order_growth, MONTHLY_SQL),
-    "events_hourly_windows": QuerySpec(events_hourly_windows, HOURLY_SQL),
-    "part_brand_stats": QuerySpec(part_brand_stats, PART_SQL),
-    "docs_unigram_surprisal": QuerySpec(
-        docs_unigram_surprisal, SURPRISAL_SQL),
-    "docs_pii_scrub": QuerySpec(docs_pii_scrub, PII_SQL),
-    "docs_nfc_norm": QuerySpec(docs_nfc_norm, NFC_SQL),
-    "docs_sample_hash": QuerySpec(docs_sample_hash, SAMPLE_SQL),
-    "docs_pack_sequences": QuerySpec(docs_pack_sequences, PACK_SQL),
-    "docs_quality_classifier": QuerySpec(docs_quality_classifier, CLS_SQL),
-    "corpus_vocab_coverage": QuerySpec(corpus_vocab_coverage, VOCAB_SQL),
-    "corpus_mix_weights": QuerySpec(corpus_mix_weights, MIX_SQL),
-    "events_funnel": QuerySpec(events_funnel, FUNNEL_SQL),
-    "events_retention": QuerySpec(events_retention, RETENTION_SQL),
-    "docs_length_quantiles": QuerySpec(docs_length_quantiles, QUANTILES_SQL),
-    "corpus_bigram_lm": QuerySpec(corpus_bigram_lm, BIGRAM_SQL),
-    "corpus_bpe_merges": QuerySpec(corpus_bpe_merges, BPE_MERGES_SQL),
-    "docs_lang_quality": QuerySpec(docs_lang_quality, LANG_SQL),
     "media_metadata": QuerySpec(media_metadata, MEDIA_SQL),
 }

@@ -78,11 +78,37 @@ def test_udfs_match_python_and_corpus_text_byte_identical(spark):
         assert r["text2"].encode("utf-8") == extract_text_py(bytes(r["html"])).encode("utf-8")
 
 
+# Pages whose last anchor is same-host (root-relative, relative,
+# absolute). Every synthetic page's last extracted link is
+# javascript:void(0), which the host filter drops, so the synthetic
+# corpus alone would not show a lost last link.
+LAST_LINK_PAGES = [
+    (
+        "https://a.example/p/1",
+        b'<a href="https://b.example/x">off</a>'
+        b'<a href="javascript:void(0)">v</a><a href="/last">l</a>',
+    ),
+    (
+        "https://a.example/dir/page.html",
+        b'<a href="/first">f</a><a href="mailto:x@a.example">m</a>'
+        b'<a href="next.html">n</a>',
+    ),
+    (
+        "http://c.example/",
+        b'<a href="//d.example/">off</a>'
+        b'<a href="http://c.example/z?b=2&a=1">z</a>',
+    ),
+]
+
+
 def test_same_host_filter_jvm_side_matches_oracle(spark):
     """JVM parse_url host filter == oracle_links same-host filter."""
     from sparkcrawler.sources.synth import synth_pages_df
 
     _, pages = synth_pages_df(spark, 60, 4, with_sitemaps=False)
+    pages = pages.select("url", "html").unionByName(
+        spark.createDataFrame(LAST_LINK_PAGES, "url string, html binary")
+    )
     df = (
         pages.withColumn("links_all", extract_page_udf("url", "html").links)
         .withColumn("host", F.parse_url("url", F.lit("HOST")))

@@ -1,8 +1,12 @@
-"""Differential tests: every catalog query vs its DuckDB oracle at
-sf0.01 — row count, column names, and values must match (mimics the
-driver's CORRECTNESS check). The catalog is the driver's crawl-output
-catalog (``sparkcrawler.queries``) plus the test-only
-``sparkcrawler.analytics`` catalog."""
+"""Differential tests: every catalog query vs its DuckDB oracle —
+row count, column names, and values must match (mimics the driver's
+CORRECTNESS check). The catalog is the driver's crawl-output catalog
+(``sparkcrawler.queries``) plus the test-only ``sparkcrawler.analytics``
+catalog. Of their oracles, only ``robots_parse_dim``'s reads a testdata
+table (sf0.01 ``nation``). The other four crawl-output oracles read
+parquet the catalog writes itself: the demo crawl's output and the
+pure-Python out-degree histogram. ``media_metadata``'s oracle builds
+its rows from ``range(200)``."""
 
 from __future__ import annotations
 
@@ -16,10 +20,7 @@ from sparkcrawler import analytics, queries
 CATALOG = {**queries.CATALOG, **analytics.CATALOG}
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents",
-]
+TABLES = ["nation"]
 
 
 @pytest.fixture(scope="module")
