@@ -51,9 +51,9 @@ def main(argv=None) -> int:
         robots = robots_df(spark, layout)
     elif args.corpus:
         pages = spark.read.parquet(args.corpus)
-        from sparkcrawler.schemas import ROBOTS_SCHEMA
+        from sparkcrawler.schemas import ROBOTS_SCHEMA, local_frame
 
-        robots = spark.createDataFrame([], ROBOTS_SCHEMA)  # allow-all default
+        robots = local_frame(spark, [], ROBOTS_SCHEMA)  # allow-all default
     else:
         print("need --corpus or --synth", file=sys.stderr)
         return 2

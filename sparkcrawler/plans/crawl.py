@@ -15,8 +15,10 @@ dedup). Each runs as several Spark jobs, one per broadcast build plus
 the write itself; ``crawl()`` runs without AQE, so no query stage runs
 as a job of its own. ``plans.crawl.jobs_per_round`` in ``crawlbench``
 measures 8 on ``bulk_crawl`` and 9.3 on ``polite_crawl``, whose corpus
-carries a ``status_code`` column (15 and 21.3 with AQE on).
-Everything else the driver derives
+carries a ``status_code`` column (15 and 21.3 with AQE on). A round with
+a 429 history also broadcasts the backoff dimension in two plans; built
+from Arrow, each build is a one-task JVM job, where a list-built frame
+ran ``defaultParallelism`` Python tasks. Everything else the driver derives
 from the just-written parquet files (row counts, per-file lineage
 counters, run events): a Spark job costs seconds of
 scheduling in local mode and driver round-trips on a cluster, while a
@@ -185,13 +187,10 @@ def _seed_rows(seed_urls: list[str]) -> list[dict]:
 
 def seed_frontier(spark: SparkSession, seed_urls: list[str]) -> DataFrame:
     """Seeds as a frontier DataFrame (public helper; the crawl itself
-    builds round 0 driver-side)."""
-    rows = [
-        (r["url"], r["url_hash"], r["host"], r["depth"], r["priority"],
-         r["round"], r["attempt"])
-        for r in _seed_rows(seed_urls)
-    ]
-    return spark.createDataFrame(rows, schemas.FRONTIER_SCHEMA)
+    builds round 0 driver-side). Built from Arrow, so it plans as a
+    ``LocalRelation`` (see :func:`schemas.local_frame`)."""
+    table = _frontier0_table(_seed_rows(seed_urls)).drop_columns(["is_new"])
+    return spark.createDataFrame(table, schemas.FRONTIER_SCHEMA)
 
 
 def _frontier0_table(rows: list[dict]):
@@ -392,6 +391,13 @@ def crawl(
 ) -> CrawlResult:
     """Run (or resume) a crawl. All state lives under ``out_dir``.
 
+    ``robots`` is used as given and broadcast in both gate plans of
+    every round (the persisted politeness decision and the disallowed
+    branch of the crawl_log), so pass a cheap frame: a parquet read, an
+    Arrow-built frame (:func:`schemas.local_frame`) or a persisted one.
+    A frame built from a Python list, or an unpersisted parse of the
+    corpus, re-runs its Python tasks in both plans every round.
+
     ``extra_frontier`` lets the sitemap priming loop inject additional
     round-0 URLs (reference main.py:26-33 prime_queue). Priming sets are
     tiny by construction (one sitemap tree per seed host), so they merge
@@ -562,7 +568,10 @@ def _crawl(
         if backoff_k:
             from sparkcrawler.plans.round import BACKOFF_FACTOR
 
-            backoff_df = spark.createDataFrame(
+            # from Arrow: a list-built frame would run Python tasks in
+            # both plans that scan it, every round with a 429 history
+            backoff_df = schemas.local_frame(
+                spark,
                 [(h, float(BACKOFF_FACTOR ** (k - 1))) for h, k in
                  sorted(backoff_k.items())],
                 "host string, delay_mult double",
@@ -692,7 +701,7 @@ def _read_committed(
         DEFAULT_FS, out_dir, table, k + ahead
     )
     if not paths:
-        return spark.createDataFrame([], schema)
+        return schemas.local_frame(spark, [], schema)
     return spark.read.parquet(*paths)
 
 

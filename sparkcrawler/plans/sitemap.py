@@ -204,8 +204,8 @@ def prime_from_sitemap(
     if source is None:
         return None, None
 
-    frontier = spark.createDataFrame(
-        [(source, "root")], "url string, index_url string"
+    frontier = schemas.local_frame(
+        spark, [(source, "root")], "url string, index_url string"
     )
     detail_rows: list[tuple] = []
     frontier_rows: list[tuple] = []
@@ -240,17 +240,17 @@ def prime_from_sitemap(
                     frontier_rows.append((row["loc"], prio))
         if not children:
             break
-        frontier = spark.createDataFrame(
-            children, "url string, index_url string"
+        frontier = schemas.local_frame(
+            spark, children, "url string, index_url string"
         ).dropDuplicates(["url"])
         depth += 1
 
-    sitemaps_df = spark.createDataFrame(detail_rows, schemas.SITEMAPS_SCHEMA)
+    sitemaps_df = schemas.local_frame(spark, detail_rows, schemas.SITEMAPS_SCHEMA)
     if not frontier_rows:
         return None, sitemaps_df
 
     extra = (
-        spark.createDataFrame(frontier_rows, "url string, priority double")
+        schemas.local_frame(spark, frontier_rows, "url string, priority double")
         .dropDuplicates(["url"])
         .withColumn(
             "url", canonicalize_udf(F.lit(None).cast("string"), F.col("url"))

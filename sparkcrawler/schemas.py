@@ -133,3 +133,22 @@ RUNS_SCHEMA = StructType(
         StructField("event_time", TimestampType(), False),
     ]
 )
+
+
+def local_frame(spark, rows, schema):
+    """``rows`` (dicts or tuples) as a DataFrame of exactly ``schema``
+    (a ``StructType`` or a DDL string), built from a ``pyarrow.Table``.
+
+    It plans as a ``LocalRelation``: its scans run in the JVM. The same
+    rows passed to ``createDataFrame`` as a list plan as a ``LogicalRDD``
+    over a PythonRDD of ``defaultParallelism`` partitions, even when the
+    list is empty, so every scan of it starts that many Python tasks:
+    about 0.3 s a wave on 4 local cores, whatever the row count."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    rows = [r if isinstance(r, dict) else dict(zip(schema.names, r)) for r in rows]
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

@@ -383,6 +383,6 @@ def synth_pages_df(
 
 
 def robots_df(spark, layout: CorpusLayout):
-    from sparkcrawler.schemas import ROBOTS_SCHEMA
+    from sparkcrawler.schemas import ROBOTS_SCHEMA, local_frame
 
-    return spark.createDataFrame(robots_rows(layout), ROBOTS_SCHEMA)
+    return local_frame(spark, robots_rows(layout), ROBOTS_SCHEMA)

@@ -122,3 +122,35 @@ def test_backoff_state_survives_resume(spark, rl_corpus, full_run):
         assert _key(log2) == _key(log_full)
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_small_frames_plan_as_local_relations(spark, rl_corpus, monkeypatch):
+    """The 429-backoff dimension and the robots dimension reach every
+    round as LocalRelations, built from Arrow. A frame built from a
+    Python list is a LogicalRDD over a PythonRDD, whose every scan runs
+    Python tasks in both gate plans of the round."""
+    import sparkcrawler.plans.crawl as crawl_mod
+
+    _, _, _, pages, rob = rl_corpus
+    real_build_round = crawl_mod.build_round
+    dims = []
+
+    def spy(pages, robots, *args, **kwargs):
+        dims.append((robots, kwargs["backoff"]))
+        return real_build_round(pages, robots, *args, **kwargs)
+
+    monkeypatch.setattr(crawl_mod, "build_round", spy)
+    out = tempfile.mkdtemp(prefix="sc_backoff_local_")
+    try:
+        # the first 429 is seen in round 2, so round 3 carries the dim
+        crawl(spark, pages, rob, [page_url(RL_HOST, 0)], out,
+              config=CrawlConfig(max_pages=24, retries=2,
+                                 round_seconds=30.0, max_rounds=4))
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+    frames = [rob] + [b for _, b in dims if b is not None]
+    assert len(frames) > 1, "no round carried a backoff dimension"
+    assert all(robots is rob for robots, _ in dims)
+    for df in frames:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation") and "LogicalRDD" not in plan, plan

@@ -532,3 +532,45 @@ def test_crawl_runs_without_aqe_and_restores_it(spark, corpus, monkeypatch):
     finally:
         spark.conf.set(AQE, "true")
     assert aqe_in_round == ["false"] * 4
+
+
+# A chain of pages whose only same-host link is the page's LAST anchor,
+# behind off-host, javascript: and mailto: anchors. Every synthetic
+# page ends on javascript:void(0), so the synthetic corpus alone would
+# not show a crawl that loses a page's last link.
+LAST_LINK_CHAIN = [
+    ("https://a.example/p/0",
+     b'<a href="https://b.example/x">off</a>'
+     b'<a href="javascript:void(0)">v</a><a href="/p/1">next</a>'),
+    ("https://a.example/p/1",
+     b'<a href="mailto:x@a.example">m</a><a href="2">next</a>'),
+    ("https://a.example/p/2",
+     b'<a href="//d.example/">off</a>'
+     b'<a href="https://a.example/p/3">next</a>'),
+    ("https://a.example/p/3",
+     b'<a href="https://b.example/y">off</a><a href="/p/0">back</a>'),
+]
+
+
+def test_crawl_follows_each_page_last_link(spark):
+    from sparkcrawler.schemas import PAGES, ROBOTS_SCHEMA, local_frame
+
+    pages = local_frame(
+        spark, [{"url": u, "html": h} for u, h in LAST_LINK_CHAIN], PAGES
+    )
+    cfg = CrawlConfig(max_pages=10)
+    out = tempfile.mkdtemp(prefix="sc_lastlink_")
+    try:
+        crawl(spark, pages, local_frame(spark, [], ROBOTS_SCHEMA),
+              [LAST_LINK_CHAIN[0][0]], out, config=cfg)
+        log = read_crawl_log(spark, out).collect()
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+    ores = oracle.simulate(
+        dict(LAST_LINK_CHAIN), {}, [LAST_LINK_CHAIN[0][0]],
+        max_pages=cfg.max_pages, round_seconds=cfg.round_seconds,
+    )
+    assert {r["url"] for r in log} == {r["url"] for r in ores.log} == {
+        u for u, _ in LAST_LINK_CHAIN
+    }
+    assert _log_key(log) == _log_key(ores.log)

@@ -126,12 +126,14 @@ def test_crawl_with_parsed_robots_matches_oracle(spark):
 
     cfg = CrawlConfig(max_pages=40, round_seconds=6.0)
     out = tempfile.mkdtemp(prefix="sc_robotsparse_")
+    # parsed once: both gate plans broadcast the dim every round
+    robots = robots_from_corpus(pages).persist()
     try:
-        robots = robots_from_corpus(pages)
         crawl(spark, pages, robots, [page_url(0, 0)], out, config=cfg)
         log = read_crawl_log(spark, out).collect()
     finally:
         shutil.rmtree(out, ignore_errors=True)
+        robots.unpersist()
         pages.unpersist()
 
     ores = oracle.simulate(
@@ -148,8 +150,9 @@ def test_parsed_dim_equivalent_to_handbuilt_in_gate(spark):
     pages = pages.cache()
     cfg = CrawlConfig(max_pages=25)
     logs = []
+    parsed = robots_from_corpus(pages).persist()
     try:
-        for dim in (robots_df(spark, layout), robots_from_corpus(pages)):
+        for dim in (robots_df(spark, layout), parsed):
             out = tempfile.mkdtemp(prefix="sc_dimcmp_")
             try:
                 crawl(spark, pages, dim, [page_url(0, 0)], out, config=cfg)
@@ -157,6 +160,7 @@ def test_parsed_dim_equivalent_to_handbuilt_in_gate(spark):
             finally:
                 shutil.rmtree(out, ignore_errors=True)
     finally:
+        parsed.unpersist()
         pages.unpersist()
     assert logs[0] == logs[1]
 
